@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -38,7 +39,7 @@ object Bench {
           warm("k") === org.apache.spark.sql.functions.col("k2"))
         .select(graft.functions.vec.cosine(warm("e"), org.apache.spark.sql.functions.col("e2")))
         .count()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // stable alphabetical run order so timings are comparable across
     // rounds (map iteration order is arbitrary); two passes with the
     // per-query minimum reported — a single GC pause or transient
@@ -52,7 +53,7 @@ object Bench {
     def pass(): Map[String, (Double, Option[String])] = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val err = try { fn(spark, sfDir).count(); None } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           Some((e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage)).take(160))
       }
       val t = (System.nanoTime() - t0) / 1e9
@@ -72,7 +73,7 @@ object Bench {
     // asymmetry
     def loadSentinel(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      catch { case _: Throwable => "unavailable" }
+      catch { case NonFatal(_) => "unavailable" }
     // three passes, per-query MIN as the headline (comparable with
     // all previous rounds' min-of-two — the min can only sharpen)
     // and per-query MEDIAN alongside: the median of three is robust
@@ -87,15 +88,17 @@ object Bench {
     val passes = (1 to nPasses).flatMap { _ =>
       val s = loadSentinel()
       try Some((pass(), s)) catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           passFailure = Some(
             (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage)).take(160))
           None
       }
     }
+    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
+      .replaceAll("[\\n\\r\\t]", " ") + "\""
     if (passes.isEmpty) {
       println(s"""{"metric":"total","value":-1,"unit":"sec","queries":{},""" +
-        s""""sf":"$sfDir","cpus":$cpus,"fatal":${"\"" + passFailure.getOrElse("no pass completed") + "\""}}""")
+        s""""sf":"$sfDir","cpus":$cpus,"fatal":${jstr(passFailure.getOrElse("no pass completed"))}}""")
       spark.stop()
       return
     }
@@ -107,8 +110,6 @@ object Bench {
     }
     val results = ordered.map { case (name, _) =>
       (name, minOf(name), passes.flatMap(_._1(name)._2).headOption) }
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\n\\r\\t]", " ") + "\""
     val qs = results.map { case (k, v, _) => jstr(k) + ":" + v }
       .mkString("{", ",", "}")
     val medians = ordered.map { case (k, _) => jstr(k) + ":" + medianOf(k) }

@@ -391,10 +391,7 @@ object TextIndex {
              idCol: String = "doc_id", textCol: String = "text"): String = {
     val spark = docs.sparkSession
     graft.sources.WriterLease.exclusive(spark, home) {
-      val next = graft.sources.IndexAlias.nextGenerationPath(spark, home)
-      write(docs, next, idCol, textCol)
-      graft.sources.IndexAlias.set(spark, home, next)
-      next
+      graft.sources.LayoutRewrite.nextGeneration(spark, home)(write(docs, _, idCol, textCol))
     }
   }
 
@@ -493,8 +490,11 @@ object TextIndex {
   /** Apply pending tombstones physically (the segment-merge step):
     * postings drop deleted docs, the vocab and stats delta rows
     * collapse to their folded values (tokens whose df reaches 0 drop
-    * out), and the tombstone set clears. Safe write-aside + rename
-    * per table, like the vector index's compaction.
+    * out), and the tombstone set clears. Goes through
+    * [[graft.sources.LayoutRewrite]] like the vector index's
+    * compaction: the next generation on a rotating home; on a
+    * concrete path an in-place rewrite that, once the next writer
+    * recovers a crash, reads exactly as before or exactly as after.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, rawPath: String,
               idCol: String = "doc_id"): Unit =
@@ -502,66 +502,31 @@ object TextIndex {
     import org.apache.hadoop.fs.Path
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // rotating home -> zero-downtime: folded tables land as the next
-    // generation and the pointer swaps; a concrete path rewrites in
-    // place via aside+rename (see VectorIndex.compact)
-    val destRoot: Option[String] =
-      if (graft.sources.IndexAlias.installed(spark, rawPath))
-        Some(graft.sources.IndexAlias.nextGenerationPath(spark, rawPath))
-      else None
     val tomb = tombstones(spark, path, idCol)
-    def rewrite(sub: String, ddl: String, partCols: Seq[String],
-                rangeClusterCol: Option[String] = None)
-               (transform: DataFrame => DataFrame): Unit = {
-      val live = new Path(s"$path/$sub")
-      val dst = destRoot.fold(new Path(s"$path/.compact-$sub"))(d => new Path(s"$d/$sub"))
-      fs.delete(dst, true)
-      val out = transform(spark.read
+    def table(sub: String, ddl: String)(write: (DataFrame, String) => Unit) =
+      graft.sources.LayoutRewrite.Table(sub, out => write(spark.read
         .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .parquet(live.toString))
-      val w = rangeClusterCol match {
-        case Some(c) =>
-          // vocabulary-sized tables follow Heaps' law — a coalesce(1)
-          // funnel is a single-task write of a possibly-billions-row
-          // frame at 100 TB. Range-cluster by the lookup key instead:
-          // file count tracks bytes, and the per-query term lookup
-          // (pushed-down `token IN (...)`) skips files on footer
-          // min/max.
-          val nFiles = math.max(1L,
-            (fs.getContentSummary(live).getLength + (64L << 20) - 1) / (64L << 20)).toInt
-          out.repartitionByRange(nFiles, col(c)).sortWithinPartitions(col(c)).write
-        case None if partCols.isEmpty => out.coalesce(1).write
-        case None => out.write.partitionBy(partCols: _*)
-      }
-      w.parquet(dst.toString)
-      if (destRoot.isEmpty) {
-        fs.delete(live, true)
-        fs.rename(dst, live)
-      }
-    }
-    rewrite("postings", s"$idCol BIGINT, token STRING, tf BIGINT, dl BIGINT, tok_bucket BIGINT",
-      Seq("tok_bucket")) { p =>
-      tomb.fold(p)(t => p.join(broadcast(t), Seq(idCol), "left_anti"))
-    }
-    // table boundary = lease renewal point (see VectorIndex.compact)
-    graft.sources.WriterLease.renewHeld(spark, rawPath)
-    rewrite("vocab", "token STRING, df BIGINT", Nil, rangeClusterCol = Some("token")) { v =>
-      v.groupBy(col("token")).agg(sum(col("df")).as("df")).filter(col("df") > 0)
-    }
-    rewrite("stats", "n_docs BIGINT, sum_dl BIGINT", Nil) { s =>
-      s.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    }
-    destRoot match {
-      case Some(d) =>
-        graft.sources.IndexStats.markCompacted(fs, d)
-        graft.sources.IndexStats.refreshManifest(spark, d, LayoutTables)
-        graft.sources.WriterLease.renewHeld(spark, rawPath)
-        graft.sources.IndexAlias.set(spark, rawPath, d)
-      case None =>
-        fs.delete(new Path(s"$path/tombstones"), true)
-        graft.sources.IndexStats.markCompacted(fs, path)
-        graft.sources.IndexStats.refreshManifest(spark, path, LayoutTables)
-    }
+        .parquet(s"$path/$sub"), out))
+    graft.sources.LayoutRewrite.rewrite(spark, rawPath, Seq(
+      table("postings", s"$idCol BIGINT, token STRING, tf BIGINT, dl BIGINT, tok_bucket BIGINT") {
+        (p, out) => tomb.fold(p)(t => p.join(broadcast(t), Seq(idCol), "left_anti"))
+          .write.partitionBy("tok_bucket").parquet(out)
+      },
+      table("vocab", "token STRING, df BIGINT") { (v, out) =>
+        // Heaps' law: no coalesce(1) funnel for the vocabulary. Range-
+        // clustered by token, file count tracks bytes and the pushed-
+        // down `token IN (...)` lookup skips files on footer min/max
+        val nFiles = math.max(1L, (fs.getContentSummary(new Path(s"$path/vocab")).getLength +
+          (64L << 20) - 1) / (64L << 20)).toInt
+        v.groupBy(col("token")).agg(sum(col("df")).as("df")).filter(col("df") > 0)
+          .repartitionByRange(nFiles, col("token")).sortWithinPartitions(col("token"))
+          .write.parquet(out)
+      },
+      table("stats", "n_docs BIGINT, sum_dl BIGINT") { (st, out) =>
+        st.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+          .coalesce(1).write.parquet(out)
+      }), debt = Seq("tombstones"), manifest = LayoutTables)
+    ()
   }
 
   /** Index health — see [[graft.sources.IndexStats]]. Delta debt for
@@ -585,8 +550,7 @@ object TextIndex {
     val debt = Map(
       "tombstones" -> tombstones(spark, path, idCol).fold(0L)(_.count()),
       "stats" -> math.max(0L, statsRows - 1L))
-    graft.sources.IndexStats.build(spark, "text", rawPath,
-      Seq("postings", "vocab", "stats", "tombstones"), debt)
+    graft.sources.IndexStats.build(spark, "text", rawPath, LayoutTables, debt)
   }
 
   /** BM25 over the standing index: identical scores to the on-the-fly

@@ -59,7 +59,7 @@ final class TopKBuffer(val k: Int) {
   * the (query × corpus) cross product before limiting — the
   * 256-query calibration truth scan against a 5M-row corpus was a
   * per-task sort of tens of millions of rows, the documented OOM at
-  * default partitioning (AnnRecallProbe's 256-partition workaround).
+  * default partitioning (worked around then with 256 partitions).
   * As an aggregate the state per (task, query) is one bounded buffer,
   * partial-aggregated before the exchange: the shuffle carries at
   * most tasks × queries × k rows and nothing ever sorts the scan.

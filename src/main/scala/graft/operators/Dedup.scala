@@ -522,7 +522,7 @@ object Dedup {
     * the exchange is disk-fatal). In that regime this verb routes to
     * [[embeddingNearDupExact]] — the reference relation itself, whose
     * cost matches the output mass that the threshold's own density
-    * already implies — and prints the measured decision.
+    * already implies — and logs the measured decision.
     *
     * Contrast can HOLD while the Jensen-gap bucket tails still blow
     * the exchange (wide label blocks at high pRand: the recall floor
@@ -534,7 +534,7 @@ object Dedup {
     * [[ClusterRouteCandidateBudget]] the verb routes to
     * [[embeddingNearDupClusterBlocked]] — subset-of-exact like the
     * banding itself, constant per-row pair work — with the measured
-    * decision printed. `force = true` keeps the banding through BOTH
+    * decision logged. `force = true` keeps the banding through BOTH
     * gates (a caller that has pre-filtered the collection and accepts
     * the candidate mass), same escape-hatch discipline as the
     * quantized-verify byte guard; a forced grind still announces its
@@ -553,20 +553,20 @@ object Dedup {
     lazy val avg = avgLabelBlock(collection)
     adaptiveRoute(threshold, probs, avg, targetOccupancy, minRecall, force) match {
       case ("exact", _, _, _) =>
-        println(f"embeddingNearDupAdaptive: no LSH contrast at threshold " +
+        graft.Log.info(f"embeddingNearDupAdaptive: no LSH contrast at threshold " +
           f"$threshold%.2f (measured pRand $pRand%.3f >= per-plane collision " +
           f"at threshold ${1.0 - math.acos(threshold) / math.Pi}%.3f) — " +
           "routing to the exact blocked scorer (force=true overrides)")
         embeddingNearDupExact(collection, threshold)
       case ("cluster", r, b, perRow) =>
-        println(f"embeddingNearDupAdaptive: empirical candidate mass $perRow%.0f/row " +
+        graft.Log.info(f"embeddingNearDupAdaptive: empirical candidate mass $perRow%.0f/row " +
           f"at banding ($r, $b) exceeds the cluster-route budget " +
           f"$ClusterRouteCandidateBudget%.0f/row — routing to learned-cluster " +
           "blocking (force=true keeps the banding)")
         embeddingNearDupClusterBlocked(collection, threshold)
       case (_, r, b, perRow) =>
         if (perRow > ClusterRouteCandidateBudget)
-          println(f"embeddingNearDupAdaptive: FORCED past the cluster-route budget — " +
+          graft.Log.warn(f"embeddingNearDupAdaptive: FORCED past the cluster-route budget — " +
             f"empirical candidate mass $perRow%.0f/row at banding ($r, $b) vs " +
             f"$ClusterRouteCandidateBudget%.0f/row; the bucket-tail exchange will " +
             "grind on this cloud")
@@ -1147,10 +1147,7 @@ object Dedup {
   def rotateMinhashIndex(docs: DataFrame, home: String): String = {
     val spark = docs.sparkSession
     graft.sources.WriterLease.exclusive(spark, home) {
-      val next = graft.sources.IndexAlias.nextGenerationPath(spark, home)
-      writeMinhashIndex(docs, next)
-      graft.sources.IndexAlias.set(spark, home, next)
-      next
+      graft.sources.LayoutRewrite.nextGeneration(spark, home)(writeMinhashIndex(docs, _))
     }
   }
 
@@ -1679,54 +1676,24 @@ object Dedup {
     * away), merges and tombstones clear. A rotating home gets the
     * zero-downtime generation handoff ([[graft.sources.IndexAlias]] —
     * concurrent readers keep serving the old generation until the
-    * atomic repoint); a concrete path compacts in place via
-    * write-aside + rename, the same contract as
+    * atomic repoint); a concrete path is rewritten in place through
+    * [[graft.sources.LayoutRewrite]], the same contract as
     * [[compactMinhashIndex]] / [[VectorIndex.compact]].
     */
   def compactClusterIndex(spark: SparkSession, rawPath: String): Unit =
    graft.sources.WriterLease.exclusive(spark, rawPath) {
-    import org.apache.hadoop.fs.Path
+    import graft.sources.LayoutRewrite.Table
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val destRoot: Option[String] =
-      if (graft.sources.IndexAlias.installed(spark, rawPath))
-        Some(graft.sources.IndexAlias.nextGenerationPath(spark, rawPath))
-      else None
-    def dst(sub: String): Path =
-      destRoot.fold(new Path(s"$path/.compact-$sub"))(d => new Path(s"$d/$sub"))
-    def finish(sub: String): Unit = if (destRoot.isEmpty) {
-      fs.delete(new Path(s"$path/$sub"), true)
-      fs.rename(dst(sub), new Path(s"$path/$sub"))
-    }
-    Seq("postings", "meta", "clusters", "merges").foreach(s => fs.delete(dst(s), true))
-    liveClusterTable(spark, path, "postings", clusterPostingsSchema)
-      .write.partitionBy("gb").parquet(dst("postings").toString)
-    finish("postings")
-    // table boundary = lease renewal point (see VectorIndex.compact)
-    graft.sources.WriterLease.renewHeld(spark, rawPath)
-    liveClusterTable(spark, path, "meta", clusterMetaSchema)
-      .write.parquet(dst("meta").toString)
-    finish("meta")
-    graft.sources.WriterLease.renewHeld(spark, rawPath)
-    // the folded view is computed BEFORE the live tables move — it is
-    // checkpointed, so the in-place renames above cannot starve it
-    readClusterIndex(spark, path).withColumn("seq", lit(0L)).localCheckpoint()
-      .write.parquet(dst("clusters").toString)
-    finish("clusters")
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      clusterMergesSchema).write.parquet(dst("merges").toString)
-    finish("merges")
-    destRoot match {
-      case Some(d) =>
-        graft.sources.IndexStats.markCompacted(fs, d)
-        graft.sources.IndexStats.refreshManifest(spark, d, ClusterLayoutTables)
-        graft.sources.WriterLease.renewHeld(spark, rawPath)
-        graft.sources.IndexAlias.set(spark, rawPath, d)
-      case None =>
-        fs.delete(new Path(s"$path/tombstones"), true)
-        graft.sources.IndexStats.markCompacted(fs, path)
-        graft.sources.IndexStats.refreshManifest(spark, path, ClusterLayoutTables)
-    }
+    graft.sources.LayoutRewrite.rewrite(spark, rawPath, Seq(
+      Table("postings", liveClusterTable(spark, path, "postings", clusterPostingsSchema)
+        .write.partitionBy("gb").parquet(_)),
+      Table("meta", liveClusterTable(spark, path, "meta", clusterMetaSchema).write.parquet(_)),
+      Table("clusters", readClusterIndex(spark, path).withColumn("seq", lit(0L))
+        .write.parquet(_)),
+      Table("merges", spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        clusterMergesSchema).write.parquet(_))),
+      debt = Seq("tombstones"), manifest = ClusterLayoutTables)
+    ()
   }
 
   /** Zero-downtime rebuild of a ROTATING cluster index: one full
@@ -1737,10 +1704,7 @@ object Dedup {
   def rotateClusterIndex(docs: DataFrame, home: String): String = {
     val spark = docs.sparkSession
     graft.sources.WriterLease.exclusive(spark, home) {
-      val next = graft.sources.IndexAlias.nextGenerationPath(spark, home)
-      writeClusterIndex(docs, next)
-      graft.sources.IndexAlias.set(spark, home, next)
-      next
+      graft.sources.LayoutRewrite.nextGeneration(spark, home)(writeClusterIndex(docs, _))
     }
   }
 
@@ -1769,50 +1733,25 @@ object Dedup {
   }
 
   /** Apply pending tombstones physically: postings and shingle sets
-    * drop retracted docs via write-aside + atomic rename, then the
-    * tombstone set clears.
+    * drop retracted docs and the tombstone set clears — the next
+    * generation on a rotating home, an in-place
+    * [[graft.sources.LayoutRewrite]] on a concrete path (see
+    * [[VectorIndex.compact]] for the crash guarantee).
     */
   def compactMinhashIndex(spark: SparkSession, rawPath: String): Unit =
    graft.sources.WriterLease.exclusive(spark, rawPath) {
-    import org.apache.hadoop.fs.Path
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // rotating home -> zero-downtime generation handoff; concrete
-    // path -> in-place aside+rename (see VectorIndex.compact)
-    val destRoot: Option[String] =
-      if (graft.sources.IndexAlias.installed(spark, rawPath))
-        Some(graft.sources.IndexAlias.nextGenerationPath(spark, rawPath))
-      else None
     val tomb = indexTombstones(spark, path)
-    def rewrite(sub: String, schema: org.apache.spark.sql.types.StructType,
-                partCols: Seq[String]): Unit = {
-      val live = new Path(s"$path/$sub")
-      val dst = destRoot.fold(new Path(s"$path/.compact-$sub"))(d => new Path(s"$d/$sub"))
-      fs.delete(dst, true)
-      val base = spark.read.schema(schema).parquet(live.toString)
+    def table(sub: String, schema: org.apache.spark.sql.types.StructType,
+              partCols: Seq[String]) = graft.sources.LayoutRewrite.Table(sub, { dst =>
+      val base = spark.read.schema(schema).parquet(s"$path/$sub")
       val out = tomb.fold(base)(t => base.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      (if (partCols.isEmpty) out.write else out.write.partitionBy(partCols: _*))
-        .parquet(dst.toString)
-      if (destRoot.isEmpty) {
-        fs.delete(live, true)
-        fs.rename(dst, live)
-      }
-    }
-    rewrite("postings", postingsSchema, Seq("band_id"))
-    // table boundary = lease renewal point (see VectorIndex.compact)
-    graft.sources.WriterLease.renewHeld(spark, rawPath)
-    rewrite("shingles", shinglesSchema, Nil)
-    destRoot match {
-      case Some(d) =>
-        graft.sources.IndexStats.markCompacted(fs, d)
-        graft.sources.IndexStats.refreshManifest(spark, d, DedupLayoutTables)
-        graft.sources.WriterLease.renewHeld(spark, rawPath)
-        graft.sources.IndexAlias.set(spark, rawPath, d)
-      case None =>
-        fs.delete(new Path(s"$path/tombstones"), true)
-        graft.sources.IndexStats.markCompacted(fs, path)
-        graft.sources.IndexStats.refreshManifest(spark, path, DedupLayoutTables)
-    }
+      (if (partCols.isEmpty) out.write else out.write.partitionBy(partCols: _*)).parquet(dst)
+    })
+    graft.sources.LayoutRewrite.rewrite(spark, rawPath,
+      Seq(table("postings", postingsSchema, Seq("band_id")), table("shingles", shinglesSchema, Nil)),
+      debt = Seq("tombstones"), manifest = DedupLayoutTables)
+    ()
   }
 
   /** Index health — see [[graft.sources.IndexStats]]: postings and
@@ -1823,8 +1762,7 @@ object Dedup {
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
     val debt = Map(
       "tombstones" -> indexTombstones(spark, path).fold(0L)(_.count()))
-    graft.sources.IndexStats.build(spark, "dedup", rawPath,
-      Seq("postings", "shingles", "tombstones"), debt)
+    graft.sources.IndexStats.build(spark, "dedup", rawPath, DedupLayoutTables, debt)
   }
 
   /** Near-dup pairs of `batch` against the standing index PLUS within

@@ -28,9 +28,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 private[graft] object Fanout {
   /** Repair width — how many partitions an under-partitioned fan-out
     * input is spread to. NOT the core count: on the bench host class,
-    * task DISPATCH costs ~7 ms serialized on the driver (measured,
-    * DispatchProbe: an n-task no-op stage costs 0.17 s at n=4, 0.39 s
-    * at n=32, 0.61 s at n=64 — linear past the minimum), so for a
+    * task DISPATCH costs ~7 ms serialized on the driver (measured: an
+    * n-task no-op stage costs 0.17 s at n=4, 0.39 s at n=32, 0.61 s
+    * at n=64 — linear past the minimum), so for a
     * fan-out stage with W seconds of single-threaded work the optimum
     * is n* = sqrt(W / 0.007) ≈ 8 at the W ≈ 0.3-0.7 s these repairs
     * target (measured end-to-end: q_dedup_minhash's checkpoint
@@ -56,11 +56,16 @@ private[graft] object Fanout {
     * fan-out (pair grid, basket explode): a user-specified partition
     * count is exempt from AQE coalescing in BOTH directions, so a
     * constant here could SHRINK a properly wide exchange at cluster
-    * scale. max(defaultParallelism, shuffle.partitions) never does:
-    * without the pin the exchange would be exactly
-    * `spark.sql.shuffle.partitions` wide (AQE only coalesces DOWN
-    * from its initial count), and defaultParallelism covers sessions
-    * that size shuffles below the core count.
+    * scale. max(defaultParallelism, shuffle.partitions) does not in
+    * the default configuration: without the pin the exchange would
+    * start `spark.sql.shuffle.partitions` wide (AQE only coalesces
+    * DOWN from its initial count), and defaultParallelism covers
+    * sessions that size shuffles below the core count. Caveat: a
+    * session that sets
+    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum`
+    * starts unpinned AQE exchanges at THAT count instead, so when it
+    * exceeds both values this pin is narrower than the unpinned
+    * exchange would have begun.
     */
   def gridWidth(df: DataFrame): Int = math.max(
     df.sparkSession.sparkContext.defaultParallelism,

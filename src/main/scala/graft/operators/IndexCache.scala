@@ -83,8 +83,8 @@ private[graft] object IndexCache {
       import java.util.Comparator
       try {
         Files.walk(p).sorted(Comparator.reverseOrder())
-          .forEach(f => { try Files.deleteIfExists(f) catch { case _: Throwable => () } })
-      } catch { case _: Throwable => () }
+          .forEach(f => { try Files.deleteIfExists(f) catch { case scala.util.control.NonFatal(_) => () } })
+      } catch { case scala.util.control.NonFatal(_) => () }
     }))
     p.toString
   }

@@ -176,13 +176,14 @@ object VectorIndex {
       doCalibrate = calibrate)
   }
 
-  /** Build-stage wall clock on stdout — the decomposition the
-    * 100×-build watch item asked for (train / encode+write /
-    * calibration truth / nprobe / pool show up as separate lines in
-    * any build log or slope artifact).
+  /** Build-stage wall clock at INFO on the library logger — the
+    * decomposition the 100×-build watch item asked for (train /
+    * encode+write / calibration truth / nprobe / pool show up as
+    * separate lines in any build log). Never on stdout, which is the
+    * bench's JSON channel.
     */
   private def logStage(stage: String, t0: Long): Unit =
-    println(f"[vecindex-build] $stage ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    graft.Log.info(f"[vecindex-build] $stage ${(System.nanoTime() - t0) / 1e9}%.1f s")
 
   /** Write a corpus under an explicitly supplied geometry — the
     * offline-rebuild path (periodic retrain, compaction, re-shard)
@@ -234,7 +235,7 @@ object VectorIndex {
     // codes they describe exist — a crash during the minutes-long
     // calibration below must never leave residual-encoded codes that
     // a later session reads as raw (silent wrong reconstructions)
-    writeParamsAt(spark, p, paramsOf(meta))
+    writeParamsAt(spark, s"$p/meta", paramsOf(meta))
     // adaptive geometries calibrate their default probe, rerank-pool
     // (PQ and BQ) and LSH band-count budgets against the corpus just
     // written; small corpora keep the measured 16-list geometry (and
@@ -252,10 +253,10 @@ object VectorIndex {
       // 16 bands are byte-identical either way); params carrying
       // lsh_bands write after the table they describe
       val tLsh = System.nanoTime()
-      writeLshTable(corpus, servedMeta, p, "overwrite")
+      writeLshTable(corpus, servedMeta, s"$p/lsh", "overwrite")
       logStage("lsh-rewrite", tLsh)
     }
-    if (servedMeta != meta) writeParamsAt(spark, p, paramsOf(servedMeta))
+    if (servedMeta != meta) writeParamsAt(spark, s"$p/meta", paramsOf(servedMeta))
     // an in-place rebuild (retrain) must not leave any session serving
     // the OLD geometry: evict every cached Meta for this path, then
     // seed this session's entry with the geometry just written
@@ -283,7 +284,7 @@ object VectorIndex {
       m.lshBands.map(b => ("lsh_bands", b.toLong)).toSeq ++
       (if (m.lshBudgetBound) Seq(("lsh_budget_bound", 1L)) else Nil)
 
-  private def writeParamsAt(spark: SparkSession, p: String,
+  private def writeParamsAt(spark: SparkSession, metaDir: String,
                             params: Seq[(String, Long)],
                             atomic: Boolean = false): Unit = {
     import spark.implicits._
@@ -298,10 +299,10 @@ object VectorIndex {
         // `params.next` when `params` is missing, so even the
         // two-rename gap (and a crash inside it) reads the complete
         // NEW params, never nothing
-        val fs = new org.apache.hadoop.fs.Path(p)
+        val fs = new org.apache.hadoop.fs.Path(metaDir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val next = new org.apache.hadoop.fs.Path(s"$p/meta/params.next")
-        val live = new org.apache.hadoop.fs.Path(s"$p/meta/params")
+        val next = new org.apache.hadoop.fs.Path(s"$metaDir/params.next")
+        val live = new org.apache.hadoop.fs.Path(s"$metaDir/params")
         params.toDF("param", "value")
           .write.mode("overwrite").parquet(next.toString)
         fs.delete(live, true)
@@ -312,11 +313,11 @@ object VectorIndex {
         // any non-atomic rewrite must also clear the aside copy or a
         // LATER crash window could resurrect the stale calibration
         // flags it carries
-        val fs = new org.apache.hadoop.fs.Path(p)
+        val fs = new org.apache.hadoop.fs.Path(metaDir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/meta/params.next"), true)
+        fs.delete(new org.apache.hadoop.fs.Path(s"$metaDir/params.next"), true)
         params.toDF("param", "value")
-          .write.mode("overwrite").parquet(s"$p/meta/params")
+          .write.mode("overwrite").parquet(s"$metaDir/params")
       }
     } else {
       // on-disk flags must match the codes on disk: a rebuild from a
@@ -326,10 +327,10 @@ object VectorIndex {
       // and the aside copy must die with the live table it described
       // (readMeta's params.next fallback would otherwise resurrect
       // the deleted flags)
-      val fs = new org.apache.hadoop.fs.Path(p)
+      val fs = new org.apache.hadoop.fs.Path(metaDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$p/meta/params.next"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$p/meta/params"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$metaDir/params.next"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$metaDir/params"), true)
     }
   }
 
@@ -365,7 +366,7 @@ object VectorIndex {
         // atomic: this is the one writer that rewrites a LIVE
         // generation's params in place (builds land on fresh
         // generation paths) — see writeParamsAt
-        writeParamsAt(spark, p, paramsOf(refreshed), atomic = true)
+        writeParamsAt(spark, s"$p/meta", paramsOf(refreshed), atomic = true)
         metaCache.keySet.removeIf(_.endsWith("#" + p))
         metaCache.put(IndexCache.sessionKey(spark) + "#" + p, refreshed)
         mutated(spark, p)
@@ -642,10 +643,11 @@ object VectorIndex {
     * ([[Ann.lshBitsFor]], the build-time formula), re-measure the
     * band count at that width against a fresh held-out truth set
     * (calibration rung 4), rewrite `lsh/` WRITE-ASIDE from the stored
-    * floats (`lsh.next`, then a two-metadata-op swap — a crash never
-    * leaves a missing or partial table), and swap
-    * `lsh_bits`/`lsh_bands` via the atomic params machinery AFTER the
-    * table they describe. Cost: one truth scan + one id-only postings
+    * floats next to a copy of `meta/` carrying the new
+    * `lsh_bits`/`lsh_bands`, and swap both in with one
+    * [[graft.sources.LayoutRewrite]] commit (a crash never leaves a
+    * missing or partial table, nor postings under params that
+    * describe another banding). Cost: one truth scan + one id-only postings
     * write (measured 33 s + 14 s at the 5M corpus) vs the full
     * corpus re-encode of [[retrain]] (~570 s there). The centering
     * mean is KEPT — re-deriving `mu` would invalidate the stored BQ
@@ -670,20 +672,21 @@ object VectorIndex {
           val newMeta = meta.copy(lshBits = Some(newBits),
             lshBands = newBands.orElse(meta.lshBands), lshBudgetBound = bound)
           val tLsh = System.nanoTime()
-          val fs = new org.apache.hadoop.fs.Path(p)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val aside = new org.apache.hadoop.fs.Path(s"$p/lsh.next")
-          val livePath = new org.apache.hadoop.fs.Path(s"$p/lsh")
-          fs.delete(aside, true)
-          writeLshTable(prim, newMeta, p, "overwrite", table = "lsh.next")
+          val dir = new org.apache.hadoop.fs.Path(p)
+          val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          import graft.sources.LayoutRewrite.aside
+          writeLshTable(prim, newMeta, aside(dir, "lsh").toString, "overwrite")
+          // the postings and the params describing their banding swap
+          // in ONE commit: meta is kilobytes, copied aside with the new
+          // params
+          org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(dir, "meta"),
+            fs, aside(dir, "meta"), false, spark.sparkContext.hadoopConfiguration)
+          writeParamsAt(spark, aside(dir, "meta").toString, paramsOf(newMeta))
           graft.sources.WriterLease.renewHeld(spark, home)
-          fs.delete(livePath, true)
-          fs.rename(aside, livePath)
+          try graft.sources.LayoutRewrite.swapIn(fs, dir, Seq("lsh", "meta"), Nil)
+          finally { metaCache.keySet.removeIf(_.endsWith("#" + p)); mutated(spark, p) }
           logStage("reband-postings", tLsh)
-          writeParamsAt(spark, p, paramsOf(newMeta), atomic = true)
-          metaCache.keySet.removeIf(_.endsWith("#" + p))
           metaCache.put(IndexCache.sessionKey(spark) + "#" + p, newMeta)
-          mutated(spark, p)
           newMeta
         case _ => meta
       }
@@ -775,13 +778,7 @@ object VectorIndex {
         s"retrain needs a rotating index (see buildRotating): $home")
       val live = vectors(spark, cur, primaryOnly = true)
         .select(col("vec_id"), col("embedding"), col("label"))
-      val next = IndexAlias.nextGenerationPath(spark, home)
-      buildFrom(spark, live, next)
-      // the rebuild is the long phase; prove ownership survived it
-      // BEFORE the swap makes the new generation live
-      graft.sources.WriterLease.renewHeld(spark, home)
-      IndexAlias.set(spark, home, next)
-      next
+      graft.sources.LayoutRewrite.nextGeneration(spark, home)(buildFrom(spark, live, _))
     }
 
   /** Fold a new (vec_id, embedding, label) batch into the standing
@@ -845,7 +842,7 @@ object VectorIndex {
     // so the exchange has no skewed reducer.
     enc.repartition(col("cluster_id"), col("assign_rank"))
       .write.mode(mode).partitionBy("cluster_id", "assign_rank").parquet(s"$path/vectors")
-    if (writeLsh) writeLshTable(df, meta, path, mode)
+    if (writeLsh) writeLshTable(df, meta, s"$path/lsh", mode)
   }
 
   /** The signature-postings table, written under the meta's banding
@@ -855,11 +852,11 @@ object VectorIndex {
     * calibrated meta; appends write under the persisted meta in the
     * same pass as the vectors.
     */
-  private def writeLshTable(df: DataFrame, meta: Meta, path: String,
-                            mode: String, table: String = "lsh"): Unit =
+  private def writeLshTable(df: DataFrame, meta: Meta, table: String,
+                            mode: String): Unit =
     df.select(col("vec_id"), lshKeys(meta).as("bk"))
       .select(col("bk.bucket").as("bucket"), col("vec_id"), col("bk.band_id").as("band_id"))
-      .write.mode(mode).partitionBy("band_id").parquet(s"$path/$table")
+      .write.mode(mode).partitionBy("band_id").parquet(table)
 
   /** Exploded (band_id, bucket) signature keys for `embedding` /
     * `q_emb` under a layout's banding config. Adaptive layouts
@@ -929,12 +926,17 @@ object VectorIndex {
   private val LayoutTables = Seq("vectors", "lsh", "meta", "tombstones", "payload")
 
   private def mutated(spark: SparkSession, path: String): Unit = {
-    epochs.computeIfAbsent(path, _ => new java.util.concurrent.atomic.AtomicLong(0L))
-      .incrementAndGet()
-    IndexCache.dropMatching(s"vix#$path#")
+    evict(path)
     // write-time stats manifest: the verb holds the lease here, so
     // the poll-time stats read never pays a recursive listing
     graft.sources.IndexStats.refreshManifest(spark, path, LayoutTables)
+  }
+
+  /** Bump the path's epoch and drop its serving views. */
+  private def evict(path: String): Unit = {
+    epochs.computeIfAbsent(path, _ => new java.util.concurrent.atomic.AtomicLong(0L))
+      .incrementAndGet()
+    IndexCache.dropMatching(s"vix#$path#")
   }
 
   /** Session-materialized NARROW serving view — the per-family
@@ -1458,70 +1460,21 @@ object VectorIndex {
     rerankFromRest(spark, path, queries, cand, vec.cosine(_, _), metricAsc = false, k, cached)
   }
 
-  /** Per-family serving-cost decomposition for a query batch — the
-    * counts that EXPLAIN a serving wall before (or beside) paying it.
-    * Returns (family, candidate_pairs, rerank_pairs): candidate pairs
-    * = the (query, vector) pairs the family's FIRST stage scores
-    * (IVF/IVFPQ: Σ per query of probed-list sizes over every
-    * assignment copy — the spilled copies the pruned scan meets; flat
-    * PQ/SQ8/BQ: live corpus × queries; LSH: distinct bucket-join
-    * survivors), rerank pairs = the pairs the exact float rerank then
-    * touches (calibrated pool × queries for IVFPQ/BQ, every candidate
-    * for LSH, none for the families that present their first stage
-    * directly). A measured wall divided by these masses separates
-    * WORK (pairs moved) from AMBIENT (same pairs, slower host) — a
-    * wall table without them is unexplainable after the fact, which
-    * is exactly what happened to the round-13 sf100 re-probe's 3×
-    * uniform serving-wall shift. Cost: one narrow corpus scan
-    * (cluster ids only), one id-only postings join; no floats read.
-    */
-  def servingCost(spark: SparkSession, rawPath: String,
-                  queries: DataFrame): Seq[(String, Long, Long)] = {
-    val path = IndexAlias.resolve(spark, rawPath)
-    val meta = readMeta(spark, path)
-    val nQ = queries.count()
-    val live = vectors(spark, path, primaryOnly = true).count()
-    val probes = Ann.probeFrame(queries, meta.centroids, resolveNProbe(meta, -1))
-      .select(col("q_id"), col("cluster_id"))
-    val probedPairs = vectors(spark, path)
-      .groupBy(col("cluster_id")).agg(count(lit(1)).as("n"))
-      .join(broadcast(probes), "cluster_id")
-      .agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lshPairs =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/lsh"))) {
-        val queryB = queries
-          .select(col("q_id"), lshKeysOf(meta, col("q_emb")).as("bk"))
-          .select(col("q_id"), col("bk.band_id").as("band_id"),
-            col("bk.bucket").as("bucket"))
-        spark.read.schema(lshSchema).parquet(s"$path/lsh")
-          .join(broadcast(queryB), Seq("band_id", "bucket"))
-          .select(col("q_id"), col("vec_id")).distinct().count()
-      } else 0L
-    val pqPool = math.min(
-      meta.defaultPool.getOrElse(Quantization.PqRerankPool).toLong, live)
-    val bqPool = math.min(
-      meta.defaultBqPool.getOrElse(Quantization.BqPool).toLong, live)
-    Seq(
-      ("ivf", probedPairs, 0L),
-      ("ivfpq", probedPairs, pqPool * nQ),
-      ("pq_flat", live * nQ, 0L),
-      ("sq8", live * nQ, 0L),
-      ("bq", live * nQ, bqPool * nQ),
-      ("lsh", lshPairs, lshPairs))
-  }
-
   /** Compact the index's small-file tail (the Qdrant segment
     * optimizer role for the vector layout): continuous
     * [[append]]/[[graft.streaming.VectorIndexStream]] ingest leaves
     * per-batch files in every partition directory, and at 100 TB scan
     * task count and footer overhead are governed by file count, not
     * bytes. Rewrites `vectors/` and `lsh/` with `targetFileBytes`-
-    * sized files per partition via write-aside + atomic rename, so a
-    * failed compaction never corrupts the live index; `meta/` is
-    * untouched (compaction never re-encodes). Returns parquet file
-    * counts (before, after).
+    * sized files per partition, applying pending tombstones and
+    * payload deltas (the delta-merge step of Milvus/Qdrant segment
+    * maintenance) and clearing them; `meta/` is untouched (compaction
+    * never re-encodes). A rotating home gets the folded layout as its
+    * next generation; a concrete path is rewritten in place through
+    * [[graft.sources.LayoutRewrite]] — a crash at any point leaves a
+    * layout that, once the next writer's lease recovers it, reads
+    * exactly as before or exactly as after the compaction. Returns
+    * parquet file counts (before, after).
     */
   def compact(spark: SparkSession, rawPath: String,
               targetFileBytes: Long = 128L << 20): (Long, Long) =
@@ -1529,72 +1482,29 @@ object VectorIndex {
     import org.apache.hadoop.fs.Path
     val path = IndexAlias.resolve(spark, rawPath)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles(p: Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    // a ROTATING home compacts ZERO-DOWNTIME: the folded layout lands
-    // as the next generation (invisible until the pointer swap), so
-    // in-flight readers keep a complete old generation instead of
-    // racing a delete+rename of the tables under them — the same
-    // handoff retrain uses, at fold cost instead of re-encode cost.
-    // A concrete path keeps the in-place aside+rename (single-node
-    // maintenance contract).
-    val rotating = IndexAlias.installed(spark, rawPath)
-    val destRoot: Option[String] =
-      if (rotating) Some(IndexAlias.nextGenerationPath(spark, rawPath)) else None
-    // compaction also APPLIES pending tombstones and payload deltas
-    // (the delta-merge step of Milvus/Qdrant segment maintenance):
-    // rewritten files drop deleted rows in both the vector table and
-    // the LSH postings and carry the latest labels, then the delta
-    // sets are cleared
+    def countFiles(p: String): Long =
+      Seq("vectors", "lsh").map(t => graft.sources.LayoutRewrite.parquetFiles(fs, new Path(p, t))).sum
     val tomb = tombstones(spark, path)
-    def rewrite(sub: String, schema: StructType, partCols: Seq[String],
-                mergePayload: Boolean): Unit = {
-      val live = new Path(s"$path/$sub")
-      val bytes = fs.getContentSummary(live).getLength
+    def table(sub: String, schema: StructType, partCols: Seq[String],
+              mergePayload: Boolean) = graft.sources.LayoutRewrite.Table(sub, out => {
+      val live = s"$path/$sub"
+      val bytes = fs.getContentSummary(new Path(live)).getLength
       val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val out = destRoot.fold(new Path(s"$path/.compact-$sub"))(d => new Path(s"$d/$sub"))
-      fs.delete(out, true)
-      val base = spark.read.schema(schema).parquet(live.toString)
+      val base = spark.read.schema(schema).parquet(live)
       val alive = tomb.fold(base)(t => base.join(broadcast(t), Seq("vec_id"), "left_anti"))
       (if (mergePayload) withPayload(spark, path, alive) else alive)
         .repartition(nFiles, partCols.map(col): _*)
-        .write.partitionBy(partCols: _*).parquet(out.toString)
-      if (destRoot.isEmpty) {
-        fs.delete(live, true)
-        fs.rename(out, live)
-      }
-    }
-    val before = countFiles(new Path(s"$path/vectors")) + countFiles(new Path(s"$path/lsh"))
-    rewrite("vectors", vectorsSchema, Seq("cluster_id", "assign_rank"), mergePayload = true)
-    // table boundary = lease renewal point: a corpus-scale compact
-    // outlives any fixed TTL, and starting the next rewrite without
-    // still owning the index would race the usurper
-    graft.sources.WriterLease.renewHeld(spark, rawPath)
-    rewrite("lsh", lshSchema, Seq("band_id"), mergePayload = false)
-    val after = destRoot match {
-      case Some(d) =>
-        // the folded layout serves from the SAME geometry — copy
-        // meta, stamp, swap; debt dies by not being copied. The old
-        // generation stays for draining readers (pruneGenerations).
-        org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$path/meta"), fs,
-          new Path(s"$d/meta"), false, spark.sparkContext.hadoopConfiguration)
-        graft.sources.IndexStats.markCompacted(fs, d)
-        graft.sources.WriterLease.renewHeld(spark, rawPath)
-        IndexAlias.set(spark, rawPath, d)
-        mutated(spark, path); mutated(spark, d)
-        countFiles(new Path(s"$d/vectors")) + countFiles(new Path(s"$d/lsh"))
-      case None =>
-        fs.delete(new Path(s"$path/tombstones"), true)
-        fs.delete(new Path(s"$path/payload"), true)
-        graft.sources.IndexStats.markCompacted(fs, path)
-        mutated(spark, path)
-        countFiles(new Path(s"$path/vectors")) + countFiles(new Path(s"$path/lsh"))
-    }
-    (before, after)
+        .write.partitionBy(partCols: _*).parquet(out)
+    })
+    val before = countFiles(path)
+    val now = graft.sources.LayoutRewrite.rewrite(spark, rawPath,
+      Seq(table("vectors", vectorsSchema, Seq("cluster_id", "assign_rank"), mergePayload = true),
+        table("lsh", lshSchema, Seq("band_id"), mergePayload = false)),
+      debt = Seq("tombstones", "payload"), manifest = LayoutTables, copy = Seq("meta"))
+    // the rewrite already refreshed the new layout's stats manifest
+    // (a recursive listing — not worth paying twice)
+    Seq(path, now).distinct.foreach(evict)
+    (before, countFiles(now))
    }
 
   /** Index health — see [[graft.sources.IndexStats]]: files/bytes per
@@ -1610,8 +1520,7 @@ object VectorIndex {
     val debt = Map(
       "tombstones" -> tombstones(spark, live).fold(0L)(_.count()),
       "payload" -> payloadDeltas(spark, live).fold(0L)(_.count()))
-    graft.sources.IndexStats.build(spark, "vector", rawPath,
-      Seq("vectors", "lsh", "meta", "tombstones", "payload"), debt)
+    graft.sources.IndexStats.build(spark, "vector", rawPath, LayoutTables, debt)
   }
 
   /** Session-scoped at-rest index per corpus dir (built once at first

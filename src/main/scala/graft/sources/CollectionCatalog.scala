@@ -27,7 +27,7 @@ final case class CollectionCatalog(spark: SparkSession, root: String) {
 
   /** Writer-lease home for a collection's read-rewrite-swap verbs
     * ([[compact]], [[restore]]) — OUTSIDE the collection directory,
-    * because those verbs delete-and-rename the directory itself and
+    * because those verbs swap the directory itself and
     * must not destroy the lease they hold mid-verb. Same
     * cross-process fencing as the standing indexes ([[WriterLease]]).
     */
@@ -314,22 +314,35 @@ final case class CollectionCatalog(spark: SparkSession, root: String) {
       .map(s => s"$name/${s.getPath.getName}").toSeq.sorted
   }
 
-  /** Restore a collection to a snapshot (write-aside copy + swap, so
-    * a failed restore leaves the live collection intact).
+  /** Restore a collection to a snapshot: a write-aside copy swapped
+    * in through [[LayoutRewrite]], so a crash at any point leaves the
+    * collection — once the next compact / restore recovers it —
+    * exactly as before or exactly as the snapshot.
     */
   def restore(snapshotId: String): Unit = {
     val Array(name, n) = snapshotId.split("/")
     val src = new Path(root, s".snapshots/$name/$n")
     require(fs.exists(src), s"no such snapshot: $snapshotId")
-    WriterLease.exclusive(spark, lockHome(name)) {
-      val tmp = new Path(root, s".restore-$name")
-      fs.delete(tmp, true)
-      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, tmp, false,
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(dir(name), true)
-      fs.rename(tmp, dir(name))
-    }
+    rewrite(name)(out => org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, out, false,
+      spark.sparkContext.hadoopConfiguration))
+    ()
   }
+
+  /** Replace collection `name` with what `write` puts at the given
+    * aside path, under the collection's writer lease, and return what
+    * `write` returned. The collection directory is the table and the
+    * catalog root its layout: leftovers of an interrupted rewrite of
+    * THIS collection are recovered first (other collections have
+    * their own leases).
+    */
+  private def rewrite[A](name: String)(write: Path => A): A =
+    WriterLease.exclusive(spark, lockHome(name)) {
+      val rootPath = new Path(root)
+      LayoutRewrite.recover(fs, rootPath, _ == name)
+      val r = write(LayoutRewrite.aside(rootPath, name))
+      LayoutRewrite.swapIn(fs, rootPath, Seq(name), Nil)
+      r
+    }
 
   /** Compact a collection's small files (the Qdrant segment
     * optimizer / Delta OPTIMIZE role): continuous ingest —
@@ -337,34 +350,23 @@ final case class CollectionCatalog(spark: SparkSession, root: String) {
     * long tail of small parquet files, and at 100 TB the scan's task
     * count and footer overhead are governed by file count, not data
     * size. Rewrites the collection with `targetFileBytes`-sized
-    * output files (per partition directory when partitioned), via an
-    * atomic write-aside-and-swap so a failed compaction never
-    * corrupts the live collection. Returns (files before, after).
+    * output files (per partition directory when partitioned), written
+    * aside and swapped in like [[restore]]. Returns (files before,
+    * after).
     */
   def compact(name: String, targetFileBytes: Long = 128L << 20,
-              partitionBy: Seq[String] = Nil): (Long, Long) =
-   WriterLease.exclusive(spark, lockHome(name)) {
-    def countFiles(p: Path): Long =
-      fs.listFiles(p, true) match { case it =>
-        var n = 0L
-        while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-        n
-      }
-    val live = dir(name)
-    val before = countFiles(live)
-    val bytes = fs.getContentSummary(live).getLength
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    val tmp = new Path(root, s".compact-$name")
-    val df = load(name)
-    val w = (if (partitionBy.nonEmpty)
-        df.repartition(nFiles.toInt, partitionBy.map(col): _*)
-      else df.repartition(nFiles.toInt))
-      .write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.toString)
-    fs.delete(live, true)
-    fs.rename(tmp, live)
-    (before, countFiles(live))
+              partitionBy: Seq[String] = Nil): (Long, Long) = {
+    val before = rewrite(name) { out =>
+      val before = LayoutRewrite.parquetFiles(fs, dir(name))
+      val bytes = fs.getContentSummary(dir(name)).getLength
+      val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      val df = load(name)
+      val w = (if (partitionBy.nonEmpty) df.repartition(nFiles, partitionBy.map(col): _*)
+        else df.repartition(nFiles)).write.mode("overwrite")
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(out.toString)
+      before
+    }
+    (before, LayoutRewrite.parquetFiles(fs, dir(name)))
   }
 
   /** Reindex (ES `_reindex`): materialize an optionally filtered and

@@ -323,7 +323,10 @@ object IndexAlias {
     // a home enrolled in an AliasGroup repoints through the group
     // manifest (so grouped readers stay consistent); a standalone
     // home through its own pointer
-    AliasGroup.setOne(fs, ptrDir(home), t.getName, keepHistory = PtrHistoryKeep)
+    // a failure after the pointer landed must not leave this process
+    // resolving the old generation from cache: drop the entry first
+    try AliasGroup.setOne(fs, ptrDir(home), t.getName, keepHistory = PtrHistoryKeep)
+    finally invalidateResolve(home)
     resolveCache.synchronized {
       resolveCache.put(new Path(home).toString, new Path(home, t.getName).toString); ()
     }

@@ -255,7 +255,10 @@ object WriterLease {
     * checked once more — a takeover mid-mutation (holder paused past
     * its TTL) raises [[ConcurrentWriterException]] so the operator
     * learns the mutation may have interleaved with the new owner's,
-    * instead of both writers reporting success. Check-then-act verbs
+    * instead of both writers reporting success. The outermost
+    * acquisition first finishes or undoes any interrupted in-place
+    * rewrite of the layout ([[LayoutRewrite.recover]]), so `body`
+    * always starts on complete tables. Check-then-act verbs
     * with an internal commit point can tighten this by calling
     * [[check]]/[[renew]] themselves right before the commit write.
     */
@@ -271,6 +274,7 @@ object WriterLease {
       else {
         held.put(key, acquire(fs, home, ttlMs = ttlMs))
         try {
+          LayoutRewrite.recover(fs, new Path(IndexAlias.resolve(spark, pathOrHome)))
           val r = body
           // the held entry is re-read: a renewHeld inside the body
           // replaced the token, and the fencing check must be

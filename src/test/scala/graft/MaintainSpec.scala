@@ -271,6 +271,10 @@ class MaintainSpec extends SparkSpec {
       "reband must not rewrite a single vectors/ file")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$gen0/lsh.next")),
       "the write-aside must be swapped away, not left behind")
+    val leftovers = fs.listStatus(new org.apache.hadoop.fs.Path(gen0)).map(_.getPath.getName)
+      .filter(n => n.startsWith(".old-") || n.startsWith(".aside-") || n.startsWith(".commit-"))
+    assert(leftovers.isEmpty,
+      s"the swap must leave no displaced table, aside or commit marker: ${leftovers.mkString(",")}")
     // the persisted params match the postings just written: a fresh
     // session reads the re-derived banding off disk
     VectorIndex.invalidate(spark, gen0)
