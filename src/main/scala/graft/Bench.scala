@@ -1,28 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // The round-14 bench session floored AQE's
-      // coalescePartitions.minPartitionSize at 64k because the basket
-      // pair grid read an AQE-collapsed one-partition frame. That fix
-      // now lives in the OPERATORS (user-pinned non-downsizing
-      // exchanges: Fanout.gridWidth), where production inherits it —
-      // and the floor itself was measured TAXING the at-rest lexical
-      // path with task spam (q_bm25_indexed 0.78 -> 0.53 s and
-      // q_hybrid_at_rest 1.24 -> 1.02 s at the Spark default). The
-      // bench therefore runs Spark's default; the env knob remains
-      // for A/B probes only.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus
+    // The round-14 bench session floored AQE's
+    // coalescePartitions.minPartitionSize at 64k because the basket
+    // pair grid read an AQE-collapsed one-partition frame. That fix
+    // now lives in the OPERATORS (user-pinned non-downsizing
+    // exchanges: Fanout.gridWidth), where production inherits it —
+    // and the floor itself was measured TAXING the at-rest lexical
+    // path with task spam (q_bm25_indexed 0.78 -> 0.53 s and
+    // q_hybrid_at_rest 1.24 -> 1.02 s at the Spark default). The
+    // bench therefore runs Spark's default; the env knob remains
+    // for A/B probes only.
+    val spark = GraftSession(cpus, Seq(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m")))
     // warmup: session init, parquet reader, and the hot physical
     // operators (agg, window, explode, broadcast join, vector expr)
     // so the first timed queries aren't charged one-time JVM/JIT costs

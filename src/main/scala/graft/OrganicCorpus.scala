@@ -329,7 +329,6 @@ object OrganicCorpus {
     */
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF", "1.0").toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val vocabMode = sys.env.getOrElse("SPARK_GRAFT_VOCAB", "driver")
     val embedMode = sys.env.getOrElse("SPARK_GRAFT_EMBED", "uniform")
     val tables = sys.env.get("SPARK_GRAFT_TABLES")
@@ -340,12 +339,7 @@ object OrganicCorpus {
       (if (embedMode == "aniso") "aniso-" else "")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT",
       s"target/organic/${prefix}sf$sfName")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     generate(spark, sf, outDir, vocabMode = vocabMode, tables = tables,
       embedMode = embedMode)
     println(s"""{"built":"$outDir","sf":$sf,"vocab":"$vocabMode","embed":"$embedMode"}""")

@@ -294,7 +294,6 @@ object SlopeBench {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_SLOPE_SCALED_DIR points the scaled arm at a
     // PRE-BUILT corpus (e.g. graft.OrganicCorpus output) instead of
     // replicating baseDir — the organic-decade measurement: both
@@ -302,15 +301,9 @@ object SlopeBench {
     val scaledOverride = sys.env.get("SPARK_GRAFT_SLOPE_SCALED_DIR")
     val scaledDir = scaledOverride.getOrElse(
       s"target/slope/${new java.io.File(baseDir).getName}x$factor")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // drain dead shuffle files promptly (see the System.gc() note
-      // in time()) — the 30 min default outlives a whole slope run
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // drain dead shuffle files promptly (see the System.gc() note
+    // in time()) — the 30 min default outlives a whole slope run
+    val spark = GraftSession(conf = Seq("spark.cleaner.periodicGC.interval" -> "1min"))
 
     // subset knobs for the targeted high-factor runs (e.g. 100× on
     // the two operators whose 10× ratios crowd the linear bar):
@@ -491,14 +484,8 @@ object FullCorpus {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = s"target/fullsf/${new java.io.File(baseDir).getName}x$factor"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     SlopeBench.buildScaledAll(spark, baseDir, outDir, factor)
     println(s"""{"built":"$outDir","factor":$factor}""")
     spark.stop()

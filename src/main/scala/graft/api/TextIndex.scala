@@ -414,11 +414,10 @@ object TextIndex {
     post.groupBy(col(idCol)).agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .write.mode(mode).parquet(s"$path/stats")
-    graft.sources.IndexStats.refreshManifest(docs.sparkSession, path, LayoutTables)
   }
 
-  /** Layout tables of the at-rest text index — the write-time stats
-    * manifest unit (see [[graft.sources.IndexStats]]).
+  /** Layout tables of the at-rest text index, as [[stats]] reports
+    * them (see [[graft.sources.IndexStats]]).
     */
   private val LayoutTables = Seq("postings", "vocab", "stats", "tombstones")
 
@@ -472,7 +471,6 @@ object TextIndex {
           .write.mode("append").parquet(s"$path/stats")
         post.select(col(idCol)).distinct()
           .write.mode("append").parquet(s"$path/tombstones")
-        graft.sources.IndexStats.refreshManifest(docs.sparkSession, path, LayoutTables)
       }
     }
   }
@@ -525,7 +523,7 @@ object TextIndex {
       table("stats", "n_docs BIGINT, sum_dl BIGINT") { (st, out) =>
         st.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
           .coalesce(1).write.parquet(out)
-      }), debt = Seq("tombstones"), manifest = LayoutTables)
+      }), debt = Seq("tombstones"))
     ()
   }
 

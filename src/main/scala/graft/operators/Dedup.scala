@@ -692,12 +692,11 @@ object Dedup {
     * measurement jobs — a corpus count/countDistinct plus the 256-row
     * plane-prob sample — which is the right price when a dedup verb
     * is about to run, and the wrong one inside `q_index_stats`, an
-    * observability query operators poll continuously (the write-time
-    * stats-manifest lesson one layer up: report standing state, don't
-    * re-measure it per poll). [[embeddingNearDupAuto]] populates the
-    * same memo when it actually routes, so the stats surface reports
-    * the decision the last real invocation used, measured once per
-    * (session, corpus, knobs). A session that mutates the corpus
+    * observability query operators poll continuously (report standing
+    * state, don't re-measure it per poll). [[embeddingNearDupAuto]]
+    * populates the same memo when it actually routes, so the stats
+    * surface reports the decision the last real invocation used,
+    * measured once per (session, corpus, knobs). A session that mutates the corpus
     * under an unchanged plan re-measures after
     * [[invalidateRouteDecisions]] (the epoch lever the standing
     * indexes get from their pointer swaps).
@@ -1130,11 +1129,10 @@ object Dedup {
     bandPostings(triH).write.mode("overwrite")
       .partitionBy("band_id").parquet(s"$path/postings")
     triH.write.mode("overwrite").parquet(s"$path/shingles")
-    graft.sources.IndexStats.refreshManifest(docs.sparkSession, path, DedupLayoutTables)
   }
 
-  /** Layout tables of the at-rest dedup index — the write-time stats
-    * manifest unit (see [[graft.sources.IndexStats]]).
+  /** Layout tables of the at-rest dedup index, as [[indexStats]]
+    * reports them (see [[graft.sources.IndexStats]]).
     */
   private val DedupLayoutTables = Seq("postings", "shingles", "tombstones")
 
@@ -1162,7 +1160,6 @@ object Dedup {
       bandPostings(triH).write.mode("append")
         .partitionBy("band_id").parquet(s"$path/postings")
       triH.write.mode("append").parquet(s"$path/shingles")
-      graft.sources.IndexStats.refreshManifest(docs.sparkSession, path, DedupLayoutTables)
     }
 
   /** Retract documents from the at-rest dedup index — the takedown /
@@ -1190,7 +1187,6 @@ object Dedup {
       val path = graft.sources.IndexAlias.resolve(ids.sparkSession, rawPath)
       ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
         .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-      graft.sources.IndexStats.refreshManifest(ids.sparkSession, path, DedupLayoutTables)
     }
 
   // ---- at-rest incremental cluster index ------------------------
@@ -1289,7 +1285,6 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$path/clusters")
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         clusterMergesSchema).write.mode("overwrite").parquet(s"$path/merges")
-      graft.sources.IndexStats.refreshManifest(spark, path, ClusterLayoutTables)
     }
 
   private val sessionClusterIdx =
@@ -1561,7 +1556,6 @@ object Dedup {
 
       bPost.write.mode("append").partitionBy("gb").parquet(s"$path/postings")
       bMeta.write.mode("append").parquet(s"$path/meta")
-      graft.sources.IndexStats.refreshManifest(spark, path, ClusterLayoutTables)
     }
 
   /** Retract documents from the cluster index — the takedown path of
@@ -1667,7 +1661,6 @@ object Dedup {
           .localCheckpoint() // sever the self-overwrite read-write cycle
         purged.write.mode("overwrite").parquet(s"$path/merges")
       }
-      graft.sources.IndexStats.refreshManifest(spark, path, ClusterLayoutTables)
     }
 
   /** Apply the cluster index's pending lifecycle debt physically:
@@ -1692,7 +1685,7 @@ object Dedup {
         .write.parquet(_)),
       Table("merges", spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         clusterMergesSchema).write.parquet(_))),
-      debt = Seq("tombstones"), manifest = ClusterLayoutTables)
+      debt = Seq("tombstones"))
     ()
   }
 
@@ -1750,7 +1743,7 @@ object Dedup {
     })
     graft.sources.LayoutRewrite.rewrite(spark, rawPath,
       Seq(table("postings", postingsSchema, Seq("band_id")), table("shingles", shinglesSchema, Nil)),
-      debt = Seq("tombstones"), manifest = DedupLayoutTables)
+      debt = Seq("tombstones"))
     ()
   }
 

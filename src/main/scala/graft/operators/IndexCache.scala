@@ -103,6 +103,17 @@ private[graft] object IndexCache {
     */
   private val TargetSliceBytes: Long = 4L * 1024 * 1024
 
+  /** Dispatch width for a pinned frame of `parts` checkpoint
+    * partitions holding `storedBytes`: one slice per
+    * [[TargetSliceBytes]], between the repair `floor` and `parts`. A
+    * reading of zero stored bytes measures nothing (storage info
+    * lists only the blocks reported in), so it keeps `parts` rather
+    * than shrinking a big frame to the floor.
+    */
+  private[graft] def sliceWidth(parts: Int, floor: Int, storedBytes: Long): Int =
+    if (storedBytes <= 0) parts
+    else math.min(parts, math.max(floor, math.ceil(storedBytes.toDouble / TargetSliceBytes).toInt))
+
   def materialized(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
     cache.computeIfAbsent(sessionKey(spark) + "#" + key, { fullKey =>
       // pin every persistent RDD the build creates (the checkpointed
@@ -126,9 +137,7 @@ private[graft] object IndexCache {
         val parts = df.rdd.getNumPartitions
         val bytes = spark.sparkContext.getRDDStorageInfo
           .filter(i => newIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
-        val want = math.min(parts, math.max(
-          Fanout.repairWidth(df),
-          math.ceil(bytes.toDouble / TargetSliceBytes).toInt))
+        val want = sliceWidth(parts, Fanout.repairWidth(df), bytes)
         if (want < parts) df.coalesce(want) else df
       } finally pinLock.readLock().unlock()
     })

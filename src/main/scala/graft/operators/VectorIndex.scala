@@ -262,7 +262,7 @@ object VectorIndex {
     // seed this session's entry with the geometry just written
     metaCache.keySet.removeIf(_.endsWith("#" + p))
     metaCache.put(IndexCache.sessionKey(spark) + "#" + p, servedMeta)
-    mutated(spark, p)
+    evict(p)
     servedMeta
   }
 
@@ -285,53 +285,41 @@ object VectorIndex {
       (if (m.lshBudgetBound) Seq(("lsh_budget_bound", 1L)) else Nil)
 
   private def writeParamsAt(spark: SparkSession, metaDir: String,
-                            params: Seq[(String, Long)],
-                            atomic: Boolean = false): Unit = {
+                            params: Seq[(String, Long)]): Unit = {
     import spark.implicits._
-    if (params.nonEmpty) {
-      if (atomic) {
-        // the LIVE-generation rewrite path (recalibrate): a plain
-        // overwrite is delete-then-multi-task-write, and a crash (or
-        // a concurrent reader) inside that window finds NO params —
-        // readMeta would then serve residual/OPQ codes as raw,
-        // silently wrong forever. Write the full new table ASIDE,
-        // then swap with two metadata ops; readMeta falls back to
-        // `params.next` when `params` is missing, so even the
-        // two-rename gap (and a crash inside it) reads the complete
-        // NEW params, never nothing
-        val fs = new org.apache.hadoop.fs.Path(metaDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val next = new org.apache.hadoop.fs.Path(s"$metaDir/params.next")
-        val live = new org.apache.hadoop.fs.Path(s"$metaDir/params")
-        params.toDF("param", "value")
-          .write.mode("overwrite").parquet(next.toString)
-        fs.delete(live, true)
-        fs.rename(next, live)
-      } else {
-        // a crashed atomic swap can leave an orphaned `params.next`;
-        // since readMeta falls back to it when `params` is missing,
-        // any non-atomic rewrite must also clear the aside copy or a
-        // LATER crash window could resurrect the stale calibration
-        // flags it carries
-        val fs = new org.apache.hadoop.fs.Path(metaDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$metaDir/params.next"), true)
-        params.toDF("param", "value")
-          .write.mode("overwrite").parquet(s"$metaDir/params")
-      }
-    } else {
+    if (params.nonEmpty)
+      params.toDF("param", "value").write.mode("overwrite").parquet(s"$metaDir/params")
+    else {
       // on-disk flags must match the codes on disk: a rebuild from a
       // previously-calibrated/residual meta to a legacy one would
       // otherwise leave every OTHER session (metaCache evicted by the
-      // caller) re-reading stale flags and mis-serving raw codes —
-      // and the aside copy must die with the live table it described
-      // (readMeta's params.next fallback would otherwise resurrect
-      // the deleted flags)
+      // caller) re-reading stale flags and mis-serving raw codes
       val fs = new org.apache.hadoop.fs.Path(metaDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$metaDir/params.next"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$metaDir/params"), true)
     }
+  }
+
+  /** Commit `params` together with `tables` (already written at their
+    * [[graft.sources.LayoutRewrite.aside]]) in one
+    * [[graft.sources.LayoutRewrite.swapIn]]: the params ride a copy of
+    * `meta/` (kilobytes) written aside, so a crash or a concurrent
+    * reader never finds `meta/` without its params, nor tables under
+    * params that describe something else. Inside the caller's
+    * [[graft.sources.WriterLease.exclusive]] on `home`; every
+    * session's cached view of the layout `p` is dropped.
+    */
+  private def commitWithParams(spark: SparkSession, home: String, p: String,
+                               params: Seq[(String, Long)], tables: Seq[String]): Unit = {
+    import graft.sources.LayoutRewrite.aside
+    val dir = new org.apache.hadoop.fs.Path(p)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(dir, "meta"),
+      fs, aside(dir, "meta"), false, spark.sparkContext.hadoopConfiguration)
+    writeParamsAt(spark, aside(dir, "meta").toString, params)
+    graft.sources.WriterLease.renewHeld(spark, home)
+    try graft.sources.LayoutRewrite.swapIn(fs, dir, tables :+ "meta", Nil)
+    finally { metaCache.keySet.removeIf(_.endsWith("#" + p)); evict(p) }
   }
 
   /** Re-run serving calibration against the CURRENT corpus without
@@ -348,32 +336,31 @@ object VectorIndex {
     * today's calibration hits the pool cap — the genuinely
     * code-budget-limited case, which the caller reports instead of
     * retraining). Small fixed geometries (≤ [[Ann.NList]] lists)
-    * never calibrate at build and are returned unchanged here.
+    * never calibrate at build and are returned unchanged here. The
+    * refreshed params commit crash-safely (see [[commitWithParams]]).
     */
-  private[graft] def recalibrate(spark: SparkSession, home: String): Meta = {
-    val p = IndexAlias.resolve(spark, home)
-    val meta = readMeta(spark, home)
-    if (meta.centroids.length <= Ann.NList) meta
-    else {
-      // band count is pinned to the persisted postings: serving a
-      // re-measured count without rewriting the postings table would
-      // probe band ids the table doesn't hold — band-count changes
-      // ride the rebuild verbs (retrain/compact land a fresh
-      // generation), so rung 4 is skipped here, not measured-and-
-      // discarded
-      val refreshed = calibrate(spark, p, meta, measureLshBands = false)
-      if (refreshed != meta) {
-        // atomic: this is the one writer that rewrites a LIVE
-        // generation's params in place (builds land on fresh
-        // generation paths) — see writeParamsAt
-        writeParamsAt(spark, s"$p/meta", paramsOf(refreshed), atomic = true)
-        metaCache.keySet.removeIf(_.endsWith("#" + p))
-        metaCache.put(IndexCache.sessionKey(spark) + "#" + p, refreshed)
-        mutated(spark, p)
+  private[graft] def recalibrate(spark: SparkSession, home: String): Meta =
+    graft.sources.WriterLease.exclusive(spark, home) {
+      val p = IndexAlias.resolve(spark, home)
+      val meta = readMeta(spark, home)
+      if (meta.centroids.length <= Ann.NList) meta
+      else {
+        // band count is pinned to the persisted postings: serving a
+        // re-measured count without rewriting the postings table would
+        // probe band ids the table doesn't hold — band-count changes
+        // ride the rebuild verbs (retrain/compact land a fresh
+        // generation), so rung 4 is skipped here, not measured-and-
+        // discarded
+        val refreshed = calibrate(spark, p, meta, measureLshBands = false)
+        if (refreshed != meta) {
+          // a LIVE generation's params rewritten in place (builds land
+          // on fresh generation paths): one aside-meta commit
+          commitWithParams(spark, home, p, paramsOf(refreshed), Nil)
+          metaCache.put(IndexCache.sessionKey(spark) + "#" + p, refreshed)
+        }
+        refreshed
       }
-      refreshed
     }
-  }
 
   /** Build-time serving calibration, two rungs off ONE shared truth
     * set: (1) the minimal default nprobe whose probed lists cover
@@ -672,19 +659,11 @@ object VectorIndex {
           val newMeta = meta.copy(lshBits = Some(newBits),
             lshBands = newBands.orElse(meta.lshBands), lshBudgetBound = bound)
           val tLsh = System.nanoTime()
-          val dir = new org.apache.hadoop.fs.Path(p)
-          val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          import graft.sources.LayoutRewrite.aside
-          writeLshTable(prim, newMeta, aside(dir, "lsh").toString, "overwrite")
+          writeLshTable(prim, newMeta, graft.sources.LayoutRewrite.aside(
+            new org.apache.hadoop.fs.Path(p), "lsh").toString, "overwrite")
           // the postings and the params describing their banding swap
-          // in ONE commit: meta is kilobytes, copied aside with the new
-          // params
-          org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(dir, "meta"),
-            fs, aside(dir, "meta"), false, spark.sparkContext.hadoopConfiguration)
-          writeParamsAt(spark, aside(dir, "meta").toString, paramsOf(newMeta))
-          graft.sources.WriterLease.renewHeld(spark, home)
-          try graft.sources.LayoutRewrite.swapIn(fs, dir, Seq("lsh", "meta"), Nil)
-          finally { metaCache.keySet.removeIf(_.endsWith("#" + p)); mutated(spark, p) }
+          // in ONE commit
+          commitWithParams(spark, home, p, paramsOf(newMeta), Seq("lsh"))
           logStage("reband-postings", tLsh)
           metaCache.put(IndexCache.sessionKey(spark) + "#" + p, newMeta)
           newMeta
@@ -790,7 +769,7 @@ object VectorIndex {
     graft.sources.WriterLease.exclusive(spark, path) {
       val p = IndexAlias.resolve(spark, path)
       encodeAndWrite(batch, readMeta(spark, p), p, "append")
-      mutated(spark, p)
+      evict(p)
     }
 
   /** One corpus pass computing every encoded representation — all
@@ -917,20 +896,13 @@ object VectorIndex {
   private[graft] def invalidate(spark: SparkSession, rawPath: String): Unit = {
     val path = IndexAlias.resolve(spark, rawPath)
     metaCache.keySet.removeIf(_.endsWith("#" + path))
-    mutated(spark, path)
+    evict(path)
   }
 
-  /** Layout tables of the at-rest vector index — the manifest unit
-    * [[graft.sources.IndexStats.refreshManifest]] tracks.
+  /** Layout tables of the at-rest vector index, as [[stats]] reports
+    * them (see [[graft.sources.IndexStats]]).
     */
   private val LayoutTables = Seq("vectors", "lsh", "meta", "tombstones", "payload")
-
-  private def mutated(spark: SparkSession, path: String): Unit = {
-    evict(path)
-    // write-time stats manifest: the verb holds the lease here, so
-    // the poll-time stats read never pays a recursive listing
-    graft.sources.IndexStats.refreshManifest(spark, path, LayoutTables)
-  }
 
   /** Bump the path's epoch and drop its serving views. */
   private def evict(path: String): Unit = {
@@ -970,23 +942,13 @@ object VectorIndex {
           rows.sortBy(_.getInt(1)).map(_.getSeq[Float](2)).toSeq
         }
       // params is optional: absent on layouts written before
-      // build-time probe calibration / residual PQ existed. When the
-      // live table is missing but a complete `params.next` exists, a
-      // recalibration swap is mid-flight (or died mid-flight) — read
-      // the aside copy rather than a legacy-empty Map that would
-      // silently serve residual/OPQ codes as raw
+      // build-time probe calibration / residual PQ existed
       val paramsPath = new org.apache.hadoop.fs.Path(s"$path/meta/params")
-      val paramsNext = new org.apache.hadoop.fs.Path(s"$path/meta/params.next")
-      val fs = paramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val readablePath: Option[String] =
-        if (fs.exists(paramsPath)) Some(paramsPath.toString)
-        else if (fs.exists(paramsNext)) Some(paramsNext.toString)
-        else None
-      val params: Map[String, Long] = readablePath match {
-        case None => Map.empty
-        case Some(pp) => spark.read.schema(paramsSchema).parquet(pp)
+      val params: Map[String, Long] =
+        if (!paramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(paramsPath))
+          Map.empty
+        else spark.read.schema(paramsSchema).parquet(paramsPath.toString)
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
       val rotation: Option[Seq[Seq[Float]]] =
         if (!params.get("pq_opq").contains(1L)) None
         else Some(spark.read.schema(rotationSchema)
@@ -1082,7 +1044,7 @@ object VectorIndex {
         .groupBy(col("vec_id")).agg(max_by(col("label"), col("__ord")).as("label"))
         .withColumn("seq", lit(nextSeq))
         .write.mode("append").parquet(s"$live/payload")
-      mutated(spark, live)
+      evict(live)
     }
   }
 
@@ -1118,7 +1080,7 @@ object VectorIndex {
       val live = IndexAlias.resolve(spark, path)
       ids.toDF("vec_id").coalesce(1)
         .write.mode("append").parquet(s"$live/tombstones")
-      mutated(spark, live)
+      evict(live)
     }
 
   private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
@@ -1500,9 +1462,7 @@ object VectorIndex {
     val now = graft.sources.LayoutRewrite.rewrite(spark, rawPath,
       Seq(table("vectors", vectorsSchema, Seq("cluster_id", "assign_rank"), mergePayload = true),
         table("lsh", lshSchema, Seq("band_id"), mergePayload = false)),
-      debt = Seq("tombstones", "payload"), manifest = LayoutTables, copy = Seq("meta"))
-    // the rewrite already refreshed the new layout's stats manifest
-    // (a recursive listing — not worth paying twice)
+      debt = Seq("tombstones", "payload"), copy = Seq("meta"))
     Seq(path, now).distinct.foreach(evict)
     (before, countFiles(now))
    }

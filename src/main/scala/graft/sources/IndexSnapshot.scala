@@ -16,13 +16,17 @@ import org.apache.spark.sql.SparkSession
   *
   * Restore is generation-aware:
   *  - a ROTATING home ([[IndexAlias]]) restores by materializing the
-  *    snapshot as the NEXT GENERATION and atomically repointing —
-  *    zero-downtime, readers flow throughout, and session caches
-  *    (keyed by the concrete generation path) cache-miss onto the
-  *    restored state with no invalidation protocol;
-  *  - a concrete path restores write-aside into a dot-dir, then
-  *    swaps the layout's tables in, and explicitly invalidates the
-  *    vector index's session caches for that path.
+  *    snapshot as the NEXT GENERATION and atomically repointing
+  *    ([[LayoutRewrite.nextGeneration]]) — zero-downtime, readers
+  *    flow throughout, and session caches (keyed by the concrete
+  *    generation path) cache-miss onto the restored state with no
+  *    invalidation protocol;
+  *  - a concrete path copies the snapshot's tables aside and swaps
+  *    them in with one crash-safe [[LayoutRewrite.swapIn]] commit
+  *    that also drops the live tables the snapshot lacks (a crash
+  *    reads as before or as after the restore once the next writer
+  *    recovers the layout), then invalidates the vector index's
+  *    session caches for that path.
   *
   * Works for all four standing layouts (vector, text, MinHash-dedup,
   * duplicate-cluster) because each is a self-contained directory of
@@ -46,8 +50,8 @@ object IndexSnapshot {
       .filterNot(_.getName.startsWith(".")).toSeq
 
   private def copyInto(spark: SparkSession, fs: FileSystem,
-                       from: Path, to: Path): Unit = {
-    fs.mkdirs(to)
+                       from: Path, to: String): Unit = {
+    fs.mkdirs(new Path(to))
     tables(fs, from).foreach { t =>
       FileUtil.copy(fs, t, fs, new Path(to, t.getName), false,
         spark.sparkContext.hadoopConfiguration)
@@ -62,7 +66,7 @@ object IndexSnapshot {
     val live = new Path(IndexAlias.resolve(spark, pathOrHome))
     fs.mkdirs(snapRoot(pathOrHome))
     val n = fs.listStatus(snapRoot(pathOrHome)).count(_.isDirectory)
-    copyInto(spark, fs, live, new Path(snapRoot(pathOrHome), n.toString))
+    copyInto(spark, fs, live, new Path(snapRoot(pathOrHome), n.toString).toString)
     n.toString
   }
 
@@ -83,31 +87,20 @@ object IndexSnapshot {
     // against a second writer process (the `.lease` dir is a dot-dir,
     // so neither restore branch's table swap touches it)
     WriterLease.exclusive(spark, pathOrHome) {
-    if (IndexAlias.installed(spark, pathOrHome)) {
-      // rebuild-aside + swap: the restored state becomes the next
-      // generation; in-flight readers drain on the old one
-      val next = IndexAlias.nextGenerationPath(spark, pathOrHome)
-      copyInto(spark, fs, src, new Path(next))
-      // the restored generation needs its own write-time stats
-      // manifest (copyInto moves tables, not dot-state)
-      IndexStats.refreshManifest(spark, next,
-        tables(fs, new Path(next)).map(_.getName))
-      IndexAlias.set(spark, pathOrHome, next)
-    } else {
-      val tmp = new Path(pathOrHome, ".restore")
-      fs.delete(tmp, true)
-      copyInto(spark, fs, src, tmp)
-      tables(fs, new Path(pathOrHome)).foreach(t => fs.delete(t, true))
-      tables(fs, tmp).foreach(t =>
-        fs.rename(t, new Path(pathOrHome, t.getName)))
-      fs.delete(tmp, true)
-      // an in-place restore changes what reads at this path must see
-      graft.operators.VectorIndex.invalidate(spark, pathOrHome)
-      // re-derive the stats manifest from the restored tables (the
-      // snapshot is kind-agnostic: list what actually came back)
-      IndexStats.refreshManifest(spark, pathOrHome,
-        tables(fs, new Path(pathOrHome)).map(_.getName))
-    }
+      if (IndexAlias.installed(spark, pathOrHome))
+        LayoutRewrite.nextGeneration(spark, pathOrHome)(copyInto(spark, fs, src, _))
+      else {
+        // a restore is not a compaction: swapped in, never stamped
+        val dir = new Path(pathOrHome)
+        val restored = tables(fs, src).map(_.getName)
+        restored.foreach(t => FileUtil.copy(fs, new Path(src, t), fs,
+          LayoutRewrite.aside(dir, t), false, spark.sparkContext.hadoopConfiguration))
+        WriterLease.renewHeld(spark, pathOrHome)
+        try LayoutRewrite.swapIn(fs, dir, restored,
+          debt = tables(fs, dir).map(_.getName).filterNot(restored.contains))
+        // an in-place restore changes what reads at this path must see
+        finally graft.operators.VectorIndex.invalidate(spark, pathOrHome)
+      }
     }
   }
 }

@@ -24,23 +24,18 @@ import org.apache.spark.sql.types.StructType
   * tables, the pending row count for tombstone/delta tables;
   * `last_compaction_ms` is null until the first compaction.
   *
-  * Cost model: files/bytes come from a WRITE-TIME MANIFEST (one
-  * `.stats` versioned file per layout, refreshed by every mutation
-  * verb at the moment it already holds the writer lease), so the
-  * poll-time read is O(tables) — one small file — never a recursive
-  * listing of the layout. A recursive listing is linear in file
-  * count: at 100 TB file populations that is minutes of driver wall
-  * per poll of an observability verb operators poll continuously
-  * (the round-8 x10 bench measured the listing-based variant at
-  * 8.6×, the second-highest full-suite ratio). The write-time
-  * refresh lists only the layout the verb just rewrote — amortized
-  * into the mutation, hot in the filesystem cache, and fenced by the
-  * verb's lease. Layouts that predate the manifest (or tables
-  * missing from it) fall back to the recursive listing, and
-  * IndexStatsSpec proves manifest ≡ listing across the full
-  * append→delete→compact→rotate→snapshot/restore lifecycle. The
-  * bounded debt tables are counted by scan as before — delta-scan
-  * cost, never a corpus scan.
+  * Cost model: the poll lists the live layout, and writes pay
+  * nothing. Files/bytes per table come from one recursive listing of
+  * that table's directory ([[du]]) taken when stats is asked for, so
+  * no mutation verb has to keep a record fresh and none can leave it
+  * stale. The listing is linear in file count: a poll of a layout
+  * with many small files costs more, which is the same condition
+  * `compact` exists to fix. Stats is polled once per maintenance
+  * decision; a write-time record would put the same listing inside
+  * every append, delete and payload update instead (1.2 s per
+  * refresh of a 210-file layout on a 4-core host with the pure-Java
+  * local filesystem, most of a 20-id delete). The bounded debt
+  * tables are counted by scan — delta-scan cost, never a corpus scan.
   */
 object IndexStats {
 
@@ -102,48 +97,10 @@ object IndexStats {
     (files, bytes)
   }
 
-  private val ManifestDir = ".stats"
-
-  /** Refresh the layout's write-time (files, bytes) manifest — called
-    * by every mutation verb while it still holds the writer lease
-    * (the lease serializes writers, so plain versioned writes here
-    * cannot interleave). One [[du]] per table of the layout the verb
-    * just rewrote; the poll-time [[build]] then reads this single
-    * small file instead of recursively listing the layout.
-    */
-  private[graft] def refreshManifest(spark: SparkSession, livePath: String,
-                                     tables: Seq[String]): Unit = {
-    val fs = new Path(livePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val content = tables.map { t =>
-      val (f, b) = du(fs, new Path(livePath, t))
-      s"$t\t$f\t$b"
-    }.mkString("\n")
-    VersionedPointer.write(fs, new Path(livePath, ManifestDir), content)
-  }
-
-  private def readManifest(fs: FileSystem, livePath: String): Map[String, (Long, Long)] =
-    VersionedPointer.read(fs, new Path(livePath, ManifestDir)).map { s =>
-      s.split('\n').iterator.filter(_.nonEmpty).map { line =>
-        val p = line.split('\t')
-        p(0) -> (p(1).toLong, p(2).toLong)
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  /** Test hook: the recursive-listing truth the manifest must equal
-    * (IndexStatsSpec proves manifest ≡ listing across the lifecycle).
-    */
-  private[graft] def listedStats(spark: SparkSession, livePath: String,
-                                 tables: Seq[String]): Map[String, (Long, Long)] = {
-    val fs = new Path(livePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    tables.map(t => t -> du(fs, new Path(livePath, t))).toMap
-  }
-
   /** Assemble the stats frame for one index. `debtRows` maps a debt
     * table's name to its pending row count (callers count their own
     * bounded debt tables with their explicit schemas). Files/bytes
-    * come from the write-time manifest when present; a table the
-    * manifest does not cover (pre-manifest layout) falls back to the
-    * recursive listing.
+    * come from listing each table ([[du]]).
     */
   private[graft] def build(spark: SparkSession, kind: String, rawHome: String,
                            tables: Seq[String],
@@ -152,9 +109,8 @@ object IndexStats {
     val fs = new Path(live).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nGen = IndexAlias.generations(spark, rawHome).size
     val lastComp = lastCompaction(fs, live)
-    val manifest = readManifest(fs, live)
     val rows = tables.map { t =>
-      val (files, bytes) = manifest.getOrElse(t, du(fs, new Path(live, t)))
+      val (files, bytes) = du(fs, new Path(live, t))
       Row(kind, rawHome, live, nGen, t, files, bytes,
         debtRows.get(t).map(Long.box).orNull,
         lastComp.map(Long.box).orNull)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** The one way a standing layout's tables get replaced: the
   * compactions of the four standing indexes and of catalog
   * collections, the generation handoffs, the vector postings re-band
-  * and the catalog restore. A ROTATING home ([[IndexAlias.installed]])
+  * and params recalibration, the index snapshot restore and the
+  * catalog restore. A ROTATING home ([[IndexAlias.installed]])
   * gets the next generation and a pointer swap ([[nextGeneration]]).
   * A concrete path is rewritten in place, crash-safely: every new
   * table is written ASIDE (`.aside-<t>`) beside the untouched live
@@ -46,34 +47,28 @@ object LayoutRewrite {
     * [[WriterLease.exclusive]], renewing the lease at every table
     * boundary: the next generation (plus the `copy` tables) on a
     * rotating home, in place (dropping `debt`) on a concrete path.
-    * Stamps the compaction and the `manifest` stats on the new layout
-    * and returns its path.
+    * Stamps the compaction on the new layout and returns its path.
     */
   def rewrite(spark: SparkSession, rawPath: String, tables: Seq[Table],
-              debt: Seq[String], manifest: Seq[String],
-              copy: Seq[String] = Nil): String = {
+              debt: Seq[String], copy: Seq[String] = Nil): String = {
     val live = IndexAlias.resolve(spark, rawPath)
     val fs = new Path(live).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def writeAll(target: String => Path): Unit = tables.zipWithIndex.foreach { case (t, i) =>
       if (i > 0) WriterLease.renewHeld(spark, rawPath)
       t.write(target(t.name).toString)
     }
-    def stamp(layout: String): Unit = {
-      IndexStats.markCompacted(fs, layout)
-      IndexStats.refreshManifest(spark, layout, manifest)
-    }
     if (IndexAlias.installed(spark, rawPath))
       nextGeneration(spark, rawPath) { next =>
         writeAll(new Path(next, _))
         copy.foreach(t => FileUtil.copy(fs, new Path(live, t), fs, new Path(next, t),
           false, spark.sparkContext.hadoopConfiguration))
-        stamp(next)
+        IndexStats.markCompacted(fs, next)
       }
     else {
       writeAll(aside(new Path(live), _))
       WriterLease.renewHeld(spark, rawPath)
       swapIn(fs, new Path(live), tables.map(_.name), debt)
-      stamp(live)
+      IndexStats.markCompacted(fs, live)
       live
     }
   }

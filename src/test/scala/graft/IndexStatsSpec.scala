@@ -148,21 +148,43 @@ class IndexStatsSpec extends SparkSpec {
     assert(roll.count() == 8) // 3 dedup tables + 5 vector tables
   }
 
-  test("write-time stats manifest equals the recursive listing across the full lifecycle") {
+  /** (files, bytes) per table under `live`, walked with java.nio,
+    * independently of the library: a file counts unless a path
+    * component below its table directory is hidden (`.`/`_`).
+    */
+  private def walked(live: String, tables: Seq[String]): Map[String, (Long, Long)] = {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(new org.apache.hadoop.fs.Path(live).toUri.getPath)
+    tables.map { t =>
+      val dir = root.resolve(t)
+      val sizes =
+        if (!Files.exists(dir)) Nil
+        else {
+          val all = Files.walk(dir)
+          try all.iterator().asScala.filter(Files.isRegularFile(_)).filterNot { f =>
+            dir.relativize(f).iterator().asScala.map(_.toString)
+              .exists(n => n.startsWith(".") || n.startsWith("_"))
+          }.map(Files.size(_: Path)).toList
+          finally all.close()
+        }
+      t -> ((sizes.size.toLong, sizes.sum))
+    }.toMap
+  }
+
+  test("stats files/bytes equal an independent walk of the live layout across the full lifecycle") {
     import spark.implicits._
     import graft.sources.IndexSnapshot
     def check(tag: String, home: String, tables: Seq[String], st: DataFrame): Unit = {
-      val live = IndexAlias.resolve(spark, home)
-      val listed = IndexStats.listedStats(spark, live, tables)
+      val listed = walked(IndexAlias.resolve(spark, home), tables)
       val got = st.collect().map(r => r.getAs[String]("table") ->
         ((r.getAs[Long]("files"), r.getAs[Long]("bytes")))).toMap
       tables.foreach { t =>
-        assert(got(t) == listed(t),
-          s"$tag/$t: manifest ${got(t)} != recursive listing ${listed(t)}")
+        assert(got(t) == listed(t), s"$tag/$t: stats ${got(t)} != walked ${listed(t)}")
       }
     }
     // vector: build -> append -> delete -> setPayload -> compact ->
-    // retrain -> snapshot/restore, manifest ≡ listing at every step
+    // retrain -> snapshot/restore, stats ≡ walk at every step
     val vHome = IndexCache.tempDir("graft-manif-vec") + "/vix"
     val vT = Seq("vectors", "lsh", "meta", "tombstones", "payload")
     val corpus = Tables.embeddings(spark, sfDir)
@@ -208,18 +230,18 @@ class IndexStatsSpec extends SparkSpec {
     check("dedup/delete", dHome, dT, Dedup.indexStats(spark, dHome))
     Dedup.compactMinhashIndex(spark, dHome)
     check("dedup/compact", dHome, dT, Dedup.indexStats(spark, dHome))
-    // the poll path really reads the MANIFEST, not the filesystem: a
-    // rogue file dropped into the layout outside any verb is
-    // invisible to stats (a listing-based poll would count it) until
-    // the next mutation refreshes the manifest
+    // the poll lists the live layout: a rogue file dropped into it
+    // outside any verb is counted by the very next poll (no verb has
+    // to run for stats to see it), and gone once it is removed
     val live = IndexAlias.resolve(spark, dHome)
     val fs = new org.apache.hadoop.fs.Path(live)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = files(Dedup.indexStats(spark, dHome), "postings")
     val rogue = new org.apache.hadoop.fs.Path(s"$live/postings/rogue.parquet")
     val out = fs.create(rogue, true); out.write(Array[Byte](1, 2, 3)); out.close()
-    assert(files(Dedup.indexStats(spark, dHome), "postings") == before,
-      "stats polled the filesystem instead of the write-time manifest")
+    assert(files(Dedup.indexStats(spark, dHome), "postings") == before + 1,
+      "a file written outside any verb must be counted by the next poll")
+    check("dedup/rogue", dHome, dT, Dedup.indexStats(spark, dHome))
     fs.delete(rogue, false)
     check("dedup/after-rogue", dHome, dT, Dedup.indexStats(spark, dHome))
   }

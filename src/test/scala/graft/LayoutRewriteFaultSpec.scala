@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.api.TextIndex
 import graft.operators.{Dedup, IndexCache, VectorIndex}
-import graft.sources.{CollectionCatalog, IndexAlias, WriterLease}
+import graft.sources.{CollectionCatalog, IndexAlias, IndexSnapshot, WriterLease}
 
 /** The local filesystem under the `faulty` scheme, with injectable
   * crashes: renames and deletes of the direct children of a watched
@@ -172,6 +172,47 @@ class LayoutRewriteFaultSpec extends SparkSpec {
       (rows(VectorIndex.searchLsh(spark, p, queries, cached = false)), m.lshBits, m.lshBands)
     }
     sweep("vector reband", tpl, Seq(_), VectorIndex.reband(spark, _), lease, readBanding)
+  }
+
+  test("vector index: in-place restore and recalibrate read as before or after at every fault") {
+    import spark.implicits._
+    // restore: the snapshot predates an append, deletes and a payload
+    // update, so the swap replaces tables AND drops the debt tables
+    // the snapshot lacks
+    val tpl = faultyDir("graft-fault-restore") + "/idx"
+    VectorIndex.buildFrom(spark, vectors(300, 3), tpl, calibrate = false)
+    val snap = IndexSnapshot.create(spark, tpl)
+    VectorIndex.append(spark, vectors(30, 4, 1000L), tpl)
+    VectorIndex.delete(spark, tpl, Seq(1L, 2L, 1001L))
+    VectorIndex.setPayload(spark, tpl, Seq((5L, 9)).toDF("vec_id", "label"))
+    def read(p: String) = (rows(VectorIndex.searchIvf(spark, p, queries, cached = false)),
+      debt(VectorIndex.stats(spark, p)))
+    val restored = sweep("vector restore", tpl, Seq(_), IndexSnapshot.restore(spark, _, snap),
+      lease, read)
+    assert(restored.exists(!_._2) && restored.exists(_._2),
+      s"faults before and after the commit must both be exercised: $restored")
+
+    // recalibrate: an adaptive geometry (32 lists) whose persisted
+    // probe default is stale, so the refreshed params really swap in
+    val cal = faultyDir("graft-fault-recal") + "/idx"
+    val rnd = new scala.util.Random(5)
+    val centers = Seq.fill(32)(Array.fill(16)(rnd.nextGaussian().toFloat))
+    VectorIndex.buildFrom(spark, (0 until 32 * 40).map { i =>
+      (i.toLong, centers(i % 32).map(v => v + (rnd.nextGaussian() * 0.05).toFloat), i % 4)
+    }.toDF("vec_id", "embedding", "label"), cal, nlist = 32)
+    val stale = spark.read.parquet(s"$cal/meta/params").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap.updated("default_nprobe", 1L)
+    stale.toSeq.toDF("param", "value").write.mode("overwrite").parquet(s"$cal/meta/params")
+    def readParams(p: String) = {
+      VectorIndex.invalidate(spark, p)
+      val m = VectorIndex.readMeta(spark, p)
+      (rows(VectorIndex.searchIvf(spark, p, queries, cached = false)),
+        m.defaultNProbe, m.defaultPool, m.budgetBound)
+    }
+    val recal = sweep("vector recalibrate", cal, Seq(_),
+      p => { VectorIndex.recalibrate(spark, p); () }, lease, readParams)
+    assert(recal.exists(!_._2) && recal.exists(_._2),
+      s"faults before and after the commit must both be exercised: $recal")
   }
 
   test("text index: in-place compact reads as before or after at every fault") {

@@ -131,4 +131,14 @@ class RobustnessSpec extends SparkSpec {
     assert((after -- before).isEmpty,
       s"eviction left stale pins: ${(after -- before).mkString(",")}")
   }
+
+  test("a zero-byte storage reading keeps the checkpoint's partition count") {
+    import graft.operators.IndexCache.sliceWidth
+    // no bytes reported is no measurement: the width stays the build's
+    assert(sliceWidth(parts = 64, floor = 4, storedBytes = 0L) == 64)
+    // a real reading still sizes the width between the floor and parts
+    assert(sliceWidth(parts = 64, floor = 4, storedBytes = 1L) == 4)
+    assert(sliceWidth(parts = 64, floor = 4, storedBytes = 40L << 20) == 10)
+    assert(sliceWidth(parts = 64, floor = 4, storedBytes = 1L << 40) == 64)
+  }
 }

@@ -218,69 +218,26 @@ class VectorIndexSpec extends SparkSpec {
     assert(after.select("vec_id").distinct().collect().map(_.getLong(0)).toSeq == Seq(ids(1)))
   }
 
-  test("readMeta survives a mid-flight params swap: params.next is read when params is missing") {
-    // the recalibrate crash/race window: the live params table is
-    // swapped via write-aside + two renames; a reader (or a crash)
-    // landing between the renames must read the complete NEW params,
-    // never an empty legacy Map that serves residual codes as raw
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val params = new org.apache.hadoop.fs.Path(s"$path/meta/params")
-    val next = new org.apache.hadoop.fs.Path(s"$path/meta/params.next")
-    assert(fs.exists(params), "fixture layout must carry params")
-    val before = VectorIndex.readMeta(spark, path)
-    assert(before.pqResidual, "fixture must be a residual layout")
-    try {
-      assert(fs.rename(params, next))
-      VectorIndex.invalidate(spark, path)
-      val during = VectorIndex.readMeta(spark, path)
-      assert(during == before,
-        "mid-swap read must see the aside params, not a legacy-empty meta")
-    } finally {
-      if (!fs.exists(params) && fs.exists(next)) fs.rename(next, params)
-      VectorIndex.invalidate(spark, path)
-      assert(VectorIndex.readMeta(spark, path) == before)
-    }
-  }
-
-  test("params rewrites clear an orphaned params.next: a stale aside copy cannot outlive the table it described") {
-    // a crashed atomic swap can leave meta/params.next behind; since
-    // readMeta falls back to the aside copy when params is missing, a
-    // LATER rebuild that deletes or overwrites params must also kill
-    // the orphan — or a second crash window (or a legacy-empty
-    // rebuild) would resurrect the stale calibration flags it carries
-    import org.apache.hadoop.fs.{FileUtil, Path}
+  test("a rebuild to a flagless meta deletes the params it no longer describes") {
+    // on-disk flags must match the codes on disk: a legacy rebuild
+    // over a calibrated/residual layout that left its params behind
+    // would have every other session serve raw codes as encoded
+    import org.apache.hadoop.fs.Path
     val corpus = Tables.embeddings(spark, sfDir)
-    val p2 = graft.operators.IndexCache.tempDir("graft-vi-orphan") + "/idx"
+    val p2 = graft.operators.IndexCache.tempDir("graft-vi-legacy") + "/idx"
     val meta = VectorIndex.buildFrom(spark, corpus, p2, calibrate = false)
     val fs = new Path(p2).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val params = new Path(s"$p2/meta/params")
-    val next = new Path(s"$p2/meta/params.next")
     assert(fs.exists(params), "adaptive fixture must carry params")
-    def plantOrphan(): Unit = {
-      FileUtil.copy(fs, params, fs, next, false,
-        spark.sparkContext.hadoopConfiguration)
-      assert(fs.exists(next))
-    }
-    // non-atomic overwrite branch (a rebuild to a flagged meta)
-    plantOrphan()
-    VectorIndex.writeCorpus(spark, corpus, p2, meta)
-    assert(!fs.exists(next),
-      "the non-atomic params overwrite must delete the orphaned aside copy")
-    // legacy-empty branch (a rebuild to a flagless meta deletes params
-    // — the orphan would become the FALLBACK and resurrect the flags)
-    plantOrphan()
     VectorIndex.writeCorpus(spark, corpus, p2,
       meta.copy(defaultNProbe = None, defaultPool = None, pqResidual = false,
         rotation = None, budgetBound = false, bqMean = None, lshBits = None,
         defaultBqPool = None, bqBudgetBound = false, lshBands = None,
         lshBudgetBound = false))
     assert(!fs.exists(params), "legacy rebuild must leave no params")
-    assert(!fs.exists(next),
-      "the legacy-empty rewrite must delete the orphaned aside copy too")
     VectorIndex.invalidate(spark, p2)
     val legacy = VectorIndex.readMeta(spark, p2)
     assert(legacy.lshBits.isEmpty && !legacy.pqResidual,
-      "a resurrected aside copy would flag raw codes as encoded")
+      "stale params would flag raw codes as encoded")
   }
 }
