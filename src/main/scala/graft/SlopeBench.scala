@@ -83,11 +83,12 @@ object SlopeBench {
     }),
     // the banding chosen FROM the corpus (r from occupancy, b from
     // the recall target) — the configuration whose candidate mass
-    // stays linear across decades, measured instead of argued;
-    // FORCED onto the LSH path so the slope isolates the adaptive
-    // banding from the crossover switch
+    // stays linear across decades, measured instead of argued; the
+    // crossover at 0 keeps it on the LSH path so the slope isolates
+    // the adaptive banding from the crossover switch
     "q_dedup_embedding_adaptive" -> ((s, dir) =>
-      operators.Dedup.embeddingNearDupAdaptive(augEmb(s, dir), threshold = 0.9)),
+      operators.Dedup.embeddingNearDupAuto(augEmb(s, dir), threshold = 0.9,
+        lshCrossover = 0.0)),
     // the exact blocked scorer at the same threshold — the other arm
     // of the crossover, measured so LshCrossoverAvgBlock is a number
     // from an artifact rather than an argument

@@ -299,49 +299,6 @@ object Ann {
     VectorIndex.searchIvf(spark, VectorIndex.sessionIndexPath(spark, sfDir),
       VectorSearch.querySet(spark, sfDir))
 
-  /** At-rest IVF layout: write the corpus partitioned by cluster_id.
-    * A probe query filtering on cluster ids then prunes whole
-    * partitions at the file-listing level — the scan reads
-    * nprobe/nlist of the data before a single row is decoded. This is
-    * the layout the 100 TB deployment would maintain.
-    */
-  def writeIvfIndex(spark: SparkSession, sfDir: String, path: String): Seq[Seq[Float]] = {
-    val centroids = trainCentroids(spark, sfDir)
-    Tables.embeddings(spark, sfDir)
-      .select(col("*"), posexplode(
-        spillClusters(col("embedding"), centroids, SpillAssign))
-        .as(Seq("assign_rank", "cluster_id")))
-      .write.mode("overwrite").partitionBy("cluster_id", "assign_rank").parquet(path)
-    centroids
-  }
-
-  /** Incremental IVF maintenance — the continuous-ingest half of a
-    * vector index's lifecycle (Milvus/Qdrant ingest while serving):
-    * assign a new batch to the already-trained centroids and append
-    * it into the partitioned layout. New files land inside existing
-    * `cluster_id=` directories, so probe pruning, the search plan,
-    * and all previously written data are untouched — no retrain, no
-    * rewrite, one partitioned append of batch-sized data. (Retraining
-    * is a periodic offline rebuild; between rebuilds, assignment to
-    * fixed centroids is exactly what the native engines do.)
-    */
-  def appendToIvfIndex(batch: DataFrame, centroids: Seq[Seq[Float]], path: String): Unit =
-    batch
-      .select(col("*"), posexplode(
-        spillClusters(col("embedding"), centroids, SpillAssign))
-        .as(Seq("assign_rank", "cluster_id")))
-      .write.mode("append").partitionBy("cluster_id", "assign_rank").parquet(path)
-
-  /** kNN over a written IVF index: probe filter becomes a partition
-    * filter on the scan.
-    */
-  def searchIvfIndex(spark: SparkSession, path: String, centroids: Seq[Seq[Float]],
-                     queries: DataFrame): DataFrame = {
-    val probes = probeFrame(queries, centroids, -1)
-    dedupSpilledTopK(
-      spark.read.parquet(path).join(broadcast(probes), "cluster_id"))
-  }
-
   /** Score probed candidates, collapse spill copies, rank, keep top k
     * — as ONE bounded top-k aggregate.
     *
@@ -405,23 +362,17 @@ object Ann {
       VectorIndex.sessionIndexPath(spark, sfDir),
       VectorSearch.querySet(spark, sfDir), filter, bruteForceLimit)
 
-  /** 64 random hyperplanes (fixed seed) in 16 bands of 4 bits —
-    * banding trades precision for recall: a near neighbor only needs
-    * to agree on all 4 bits of ANY one band to become a candidate.
-    * Band count is the recall knob (measured on the standard corpus:
-    * 8 bands → 0.76, 16 → 0.96, 24 → 1.0); 16 meets the same ≥0.9
-    * bar as the IVF default. Bits-per-band is the precision knob —
-    * at production corpus sizes the band key widens to 16-32 bits so
-    * each bucket stays small, and candidate cost scales with bucket
-    * occupancy, not corpus size.
+  /** The at-rest LSH banding floor: 16 bands of 4 bits — banding
+    * trades precision for recall: a near neighbor only needs to agree
+    * on all bits of ANY one band to become a candidate. Band count is
+    * the recall knob (measured on the standard corpus: 8 bands → 0.76,
+    * 16 → 0.96, 24 → 1.0); 16 meets the same ≥0.9 bar as the IVF
+    * default. Bits-per-band is the precision knob, widened with the
+    * corpus by [[lshBitsFor]] so each bucket stays small and candidate
+    * cost scales with bucket occupancy, not corpus size.
     */
-  private val NPlanes = 64
   private[graft] val LshBands = 16
-  private val BitsPerBand = 4
-  private[operators] val Planes: Seq[Seq[Float]] = {
-    val rnd = new scala.util.Random(7)
-    Seq.fill(NPlanes)(Seq.fill(64)((rnd.nextDouble() * 2 - 1).toFloat))
-  }
+  private[operators] val BitsPerBand = 4
 
   /** Corpus-adaptive band WIDTH for the at-rest signature postings:
     * bits grow with log2(n / bucket target), so expected bucket
@@ -456,29 +407,14 @@ object Ann {
   }
 
   /** Deterministic seeded hyperplanes for an adaptive band config —
-    * `bands` bands × `bits` planes (the fixed [[Planes]] generator
-    * shape, same seed family). PREFIX-STABLE in the band count: the
-    * first 16·bits planes of a 64-band set equal the 16-band set, so
-    * band ids stay comparable across band-count recalibrations.
+    * `bands` bands × `bits` 64-d planes, seed 7. PREFIX-STABLE in the
+    * band count: the first 16·bits planes of a 64-band set equal the
+    * 16-band set, so band ids stay comparable across band-count
+    * recalibrations.
     */
   private[operators] def lshPlanesFor(bits: Int, bands: Int = LshBands): Seq[Seq[Float]] = {
     val rnd = new scala.util.Random(7)
     Seq.fill(bands * bits)(Seq.fill(64)((rnd.nextDouble() * 2 - 1).toFloat))
-  }
-
-  /** Band-bucket keys for an embedding: sign bit per hyperplane,
-    * 4 bits per band → array of 4 (band_id, bucket) pairs. Pure
-    * expression, no shuffle.
-    */
-  private[operators] def bandKeys(embCol: Column): Column = {
-    val bits: Seq[Column] = Planes.map(p =>
-      when(vec.dot(typedLit(p), embCol) >= 0, 1).otherwise(0))
-    array((0 until LshBands).map { b =>
-      val bucket = (0 until BitsPerBand)
-        .map(i => bits(b * BitsPerBand + i) * (1 << i))
-        .reduce(_ + _)
-      struct(lit(b).as("band_id"), bucket.as("bucket"))
-    }: _*)
   }
 
   /** Row 8 (rows-only): LSH kNN served from the AT-REST signature

@@ -274,44 +274,37 @@ object Dedup {
 
   /** Row 267 (rows-only): the SCALE PATH for embedding near-dup —
     * the candidate discipline [[qDedupMinhash]] applies to text,
-    * applied to vectors: each embedding lands in 16 random-hyperplane
-    * band buckets (the same signature family the at-rest LSH index
-    * serves), candidates are id pairs sharing a
+    * applied to vectors: [[embeddingNearDupAuto]] with the crossover
+    * at 0, so the collection bands at ANY size. Each embedding lands
+    * in random-hyperplane band buckets (the signature family the
+    * at-rest LSH index serves), candidates are id pairs sharing a
     * (label, band, bucket), deduplicated, then verified by the exact
-    * rounded cosine ≥ 0.35 (see [[embeddingNearDupPairs]] for the
-    * (bits, tables) scale knobs). Work is Σ bucket-occupancy², not
+    * rounded cosine ≥ 0.35. Work is Σ bucket-occupancy², not
     * Σ label-block²: the round-8 full-suite 10× bench measured the
     * label-blocked exact scorer ([[qDedupEmbedding]]) at 13.3× — its
     * pair mass is quadratic in corpus at fixed label count, which IS
     * its asymptote (same precedent as q_dedup_ngram's exact pair
-    * grid); this variant is the one a 100 TB corpus runs. Candidate
-    * buckets shuffle ids + band keys only (16 small rows per vector,
-    * never 16 embedding copies); embeddings are joined back for the
-    * verify on the deduplicated pair set alone. Every reported pair
-    * is a TRUE pair of the exact relation (verification is the same
-    * rounded cosine on the same label blocks); banding only bounds
-    * recall — measured in DedupSpec against the exact scorer.
+    * grid); this variant is the one a 100 TB corpus runs. Every
+    * reported pair is a TRUE pair of the exact relation
+    * (verification is the same rounded cosine on the same label
+    * blocks); banding only bounds recall — measured in DedupSpec
+    * against the exact scorer.
     *
     * The banding comes from [[chooseBanding]] on the collection's
     * own measured size — round 8 shipped this entry with hard-coded
-    * (4, 16), the exact fixed-bucket-space saturation cliff the
-    * chooser was built to remove (2^4 buckets per label per table
-    * means occupancy, hence in-bucket pair mass, grows with the
-    * corpus; the round-8 x10 artifact already had the fixed entry
-    * above the adaptive one, 8.23× vs 6.49×). On the sf0.01/sf0.1
-    * test corpus the chooser lands on (4, 16) — the widths agree
-    * BELOW the decade where they diverge, so the oracle behavior is
-    * unchanged while the decade after is now linear-at-fixed-
-    * occupancy by construction. Since round 13 the verb also carries
-    * the no-contrast guard: on a concentrated cloud whose noise floor
-    * sits at/above the threshold (the heaps-aniso regime, where the
-    * banding ground 781–1067 s per pass) it routes to the exact
-    * blocked scorer instead of banding toward all-pairs — on the
-    * driver's direction-uniform corpus (pRand ≈ 0.5 < 0.61 at
-    * threshold 0.35) the guard passes and the LSH plan is unchanged.
+    * (4, 16), the fixed-bucket-space saturation cliff the chooser
+    * removes; on the sf0.01/sf0.1 test corpus the chooser lands on
+    * (4, 16) itself. The route decision's other gates still hold at
+    * crossover 0 ([[embeddingRouteDecision]]): a threshold at/below a
+    * concentrated cloud's noise floor routes to the exact scorer (the
+    * heaps-aniso regime, where banding ground 781–1067 s per pass),
+    * and a banding over the candidate budget routes to learned-cluster
+    * blocking. The driver's direction-uniform corpus (pRand ≈ 0.5 <
+    * 0.61 at threshold 0.35) passes both, so the LSH plan runs here.
     */
   def qDedupEmbeddingLsh(spark: SparkSession, sfDir: String): DataFrame =
-    embeddingNearDupAdaptive(augmentedEmbeddings(spark, sfDir), threshold = 0.35)
+    embeddingNearDupAuto(augmentedEmbeddings(spark, sfDir), threshold = 0.35,
+      lshCrossover = 0.0)
       .orderBy(col("vec_a"), col("vec_b"))
 
   /** Row 269: the PRODUCTION entry — [[embeddingNearDupAuto]] over
@@ -327,44 +320,26 @@ object Dedup {
     embeddingNearDupAuto(augmentedEmbeddings(spark, sfDir), threshold = 0.35)
       .orderBy(col("vec_a"), col("vec_b"))
 
-  /** General LSH-bucketed embedding near-dup over a
-    * (vec_id, embedding, label) collection — candidates from
-    * `tables` band tables of `bitsPerBand`-bit random-hyperplane
-    * keys (`bitsPerBand × tables` seeded planes of the collection's
-    * own dimension), exact rounded-cosine verify at `threshold`.
-    *
-    * (r, b) = (bitsPerBand, tables) is the occupancy/recall knob
-    * pair, and choosing it is the WHOLE scale story: per-band
-    * collision at similarity s is p^r with p = 1 − acos(s)/π, recall
-    * = 1 − (1 − p^r)^b; buckets per label per table number 2^r, so
-    * expected occupancy is n_label / 2^r and in-bucket pair work is
-    * Σ occupancy². r therefore follows CORPUS SIZE (keep occupancy
-    * bounded: r ≈ log2(n_label / target)), b follows the THRESHOLD
-    * (hold recall at the target s). The registered test-corpus entry
-    * runs (4, 16) at threshold 0.35 — the synthetic collection's
-    * low intra-label near band, where only narrow bands collide
-    * often enough. A production pipeline dedups embeddings at HIGH
-    * thresholds (0.85–0.95 cosine, near-identical content), where
-    * wide bands hold recall cheaply: at s = 0.9, (8, 16) gives
-    * ≈ 0.996 recall with 256 buckets per label per table (the
-    * DedupSpec high-threshold case measures it). Precision w.r.t.
-    * the exact relation is 1 at ANY setting — verification is the
-    * same rounded cosine on the same label blocks.
+  /** [[chooseBanding]]'s two targets: expected rows per bucket, and
+    * the recall floor at the threshold.
     */
+  private val TargetOccupancy = 64.0
+  private val MinRecall = 0.9
+
   /** Banding chosen FROM the corpus and the threshold — the closed
     * form of the (r, b) discipline [[embeddingNearDupPairs]]
     * documents, so a pipeline never ships hand-tuned constants that
     * saturate at the next decade of growth:
-    *  - `r = clamp(ceil(ln(avgLabelCount / targetOccupancy) /
+    *  - `r = clamp(ceil(ln(avgLabelCount / TargetOccupancy) /
     *    ln(1/pRand)), 4, 62)` — expected bucket occupancy stays
-    *    ≈ `targetOccupancy` whatever the corpus size, which bounds
+    *    ≈ `TargetOccupancy` whatever the corpus size, which bounds
     *    in-bucket pair work (Σ occ² ≈ n · occ, LINEAR in corpus at
     *    fixed occupancy — the property fixed-width bands lose the
     *    moment data grows). `pRand` is the measured per-plane
     *    collision probability of a RANDOM pair; at the uniform-
     *    direction 0.5 default this reduces to the familiar
     *    `log2(n/occ)`;
-    *  - `b = clamp(ceil(ln(1−minRecall) / ln(1−p^r)), 4, 48)` with
+    *  - `b = clamp(ceil(ln(1−MinRecall) / ln(1−p^r)), 4, 256)` with
     *    `p = 1 − acos(threshold)/π` — the fewest tables that hold
     *    the recall target at the chosen width.
     * The two driver-side counts (rows, labels) are metadata-cheap;
@@ -387,8 +362,6 @@ object Dedup {
     * decade, vs n² ≈ 10000× for the exact scorer.
     */
   def chooseBanding(avgLabelCount: Double, threshold: Double,
-                    targetOccupancy: Double = 64.0,
-                    minRecall: Double = 0.9,
                     pRand: Double = 0.5): (Int, Int) = {
     require(threshold > 0.0 && threshold < 1.0, s"threshold out of (0,1): $threshold")
     require(pRand > 0.0 && pRand < 1.0, s"pRand out of (0,1): $pRand")
@@ -402,9 +375,9 @@ object Dedup {
     // grows toward all-pairs (measured: one bucket held 80% of a
     // 555k-row corpus, 45× wall at 10× data). Sizing r against the
     // MEASURED pRand restores bounded expected occupancy:
-    // n_label · pRand^r ≈ targetOccupancy.
+    // n_label · pRand^r ≈ TargetOccupancy.
     val r = math.max(4, math.min(62,
-      math.ceil(math.log(math.max(1.0, avgLabelCount / targetOccupancy)) /
+      math.ceil(math.log(math.max(1.0, avgLabelCount / TargetOccupancy)) /
         math.log(1.0 / pRand)).toInt))
     val p = 1.0 - math.acos(threshold) / math.Pi
     val pBand = math.pow(p, r)
@@ -417,9 +390,9 @@ object Dedup {
     // geometry never comes near the cap (b ≤ ~16 at production
     // thresholds), so the raise costs nothing where it isn't needed.
     val b =
-      if (pBand >= minRecall) 4
+      if (pBand >= MinRecall) 4
       else math.max(4, math.min(256,
-        math.ceil(math.log(1.0 - minRecall) / math.log(1.0 - pBand)).toInt))
+        math.ceil(math.log(1.0 - MinRecall) / math.log(1.0 - pBand)).toInt))
     (r, b)
   }
 
@@ -508,94 +481,6 @@ object Dedup {
     if (probs.isEmpty) 0.0
     else avgBlock * probs.map(math.pow(_, r)).sum / probs.length
 
-  /** [[embeddingNearDupPairs]] with [[chooseBanding]] applied to the
-    * collection's own measured size — the LSH path WHEN LSH can work
-    * on this collection. The same plane-prob sample that sizes the
-    * banding also answers [[lshHasContrast]]: if the threshold sits
-    * at or below the cloud's own noise floor (pRand ≥ the per-plane
-    * collision probability at the threshold), no (r, b) bounds
-    * occupancy without destroying recall — every band filters
-    * threshold pairs FASTER than noise, so the candidate exchange
-    * grows toward n·b full-row pairs (measured: 781–1067 s per pass,
-    * ~85% of the whole 201-query suite wall, on the 55.5k-row
-    * mean-dominated heaps-aniso corpus at threshold 0.35; at 100 TB
-    * the exchange is disk-fatal). In that regime this verb routes to
-    * [[embeddingNearDupExact]] — the reference relation itself, whose
-    * cost matches the output mass that the threshold's own density
-    * already implies — and logs the measured decision.
-    *
-    * Contrast can HOLD while the Jensen-gap bucket tails still blow
-    * the exchange (wide label blocks at high pRand: the recall floor
-    * caps b, E[p^r] ≫ (E[p])^r inflates every bucket — measured 38
-    * min / 31 GB of shuffle at a 500k corpus where learned-cluster
-    * blocking ran the identical input in 23.3 s,
-    * `bench/slope_combined_sf10_r13.json`). That regime is gated the
-    * same way: when the banding's empirical candidate mass exceeds
-    * [[ClusterRouteCandidateBudget]] the verb routes to
-    * [[embeddingNearDupClusterBlocked]] — subset-of-exact like the
-    * banding itself, constant per-row pair work — with the measured
-    * decision logged. `force = true` keeps the banding through BOTH
-    * gates (a caller that has pre-filtered the collection and accepts
-    * the candidate mass), same escape-hatch discipline as the
-    * quantized-verify byte guard; a forced grind still announces its
-    * measured inputs before the first shuffle writes.
-    *
-    * [[adaptiveRoute]] is the decision split out on the measured
-    * inputs so specs can pin the route without running the plan
-    * (the [[chooseEmbeddingRoute]] discipline one verb up).
-    */
-  def embeddingNearDupAdaptive(collection: DataFrame, threshold: Double,
-                               targetOccupancy: Double = 64.0,
-                               minRecall: Double = 0.9,
-                               force: Boolean = false): DataFrame = {
-    val probs = samplePlaneProbs(collection)
-    val pRand = measuredPRandOf(probs)
-    lazy val avg = avgLabelBlock(collection)
-    adaptiveRoute(threshold, probs, avg, targetOccupancy, minRecall, force) match {
-      case ("exact", _, _, _) =>
-        graft.Log.info(f"embeddingNearDupAdaptive: no LSH contrast at threshold " +
-          f"$threshold%.2f (measured pRand $pRand%.3f >= per-plane collision " +
-          f"at threshold ${1.0 - math.acos(threshold) / math.Pi}%.3f) — " +
-          "routing to the exact blocked scorer (force=true overrides)")
-        embeddingNearDupExact(collection, threshold)
-      case ("cluster", r, b, perRow) =>
-        graft.Log.info(f"embeddingNearDupAdaptive: empirical candidate mass $perRow%.0f/row " +
-          f"at banding ($r, $b) exceeds the cluster-route budget " +
-          f"$ClusterRouteCandidateBudget%.0f/row — routing to learned-cluster " +
-          "blocking (force=true keeps the banding)")
-        embeddingNearDupClusterBlocked(collection, threshold)
-      case (_, r, b, perRow) =>
-        if (perRow > ClusterRouteCandidateBudget)
-          graft.Log.warn(f"embeddingNearDupAdaptive: FORCED past the cluster-route budget — " +
-            f"empirical candidate mass $perRow%.0f/row at banding ($r, $b) vs " +
-            f"$ClusterRouteCandidateBudget%.0f/row; the bucket-tail exchange will " +
-            "grind on this cloud")
-        embeddingNearDupPairs(collection, threshold, r, b)
-    }
-  }
-
-  /** The adaptive verb's route on its measured inputs: "exact" in the
-    * no-contrast regime, "cluster" when the chosen banding's
-    * empirical per-row candidate mass exceeds
-    * [[ClusterRouteCandidateBudget]] (the Jensen-gap regime — contrast
-    * holds but the bucket tails blow the exchange), "lsh" otherwise.
-    * `force = true` disables both gates and keeps the banding. Returns
-    * (route, r, b, perRowCandidates); `avgBlock` is by-name so the
-    * no-contrast branch never pays the corpus count.
-    */
-  private[graft] def adaptiveRoute(threshold: Double, probs: Array[Double],
-      avgBlock: => Double, targetOccupancy: Double = 64.0,
-      minRecall: Double = 0.9, force: Boolean = false): (String, Int, Int, Double) = {
-    val pRand = measuredPRandOf(probs)
-    if (!force && !lshHasContrast(threshold, pRand)) ("exact", 0, 0, 0.0)
-    else {
-      val (r, b) = chooseBanding(avgBlock, threshold, targetOccupancy, minRecall,
-        pRand = pRand)
-      val perRow = LshCandidateCostFactor * b * empiricalOccupancy(probs, r, avgBlock)
-      if (!force && perRow > ClusterRouteCandidateBudget) ("cluster", r, b, perRow)
-      else ("lsh", r, b, perRow)
-    }
-  }
 
   private def avgLabelBlock(collection: DataFrame): Double = {
     val m = collection.agg(count(lit(1)).as("n"),
@@ -623,13 +508,6 @@ object Dedup {
     */
   val LshCrossoverAvgBlock: Double = 1000.0
 
-  /** The production embedding-near-dup verb: measures the collection
-    * (one metadata-cheap count/countDistinct pass), runs the exact
-    * blocked scorer below [[LshCrossoverAvgBlock]] and
-    * [[embeddingNearDupAdaptive]] above it — the verb a maintenance
-    * loop calls as corpora grow through decades, with the crossover
-    * AND the banding both chosen from the corpus itself.
-    */
   /** Per-row candidate budget of the CLUSTER-BLOCKED scorer: each
     * row sits in `SpillAssign` learned blocks of ~`SpillAssign ×
     * ListTarget` rows (primary + spilled copies), so its pair work is
@@ -656,23 +534,6 @@ object Dedup {
     */
   private[graft] val LshCandidateCostFactor = 4.0
 
-  /** The route [[embeddingNearDupAuto]] takes for a collection —
-    * split out so specs (and operators) can interrogate the decision
-    * without running the plan. "exact" below the measured crossover
-    * or in the no-contrast regime; otherwise "lsh" while the
-    * EMPIRICAL candidate mass at the chosen banding stays under the
-    * cluster route's constant budget; "cluster" past it (the
-    * SemDeDup-shaped learned-cluster blocking — the only plan whose
-    * per-row pair work does not grow with block width).
-    */
-  private[graft] def chooseEmbeddingRoute(collection: DataFrame, threshold: Double,
-      targetOccupancy: Double = 64.0, minRecall: Double = 0.9,
-      lshCrossover: Double = LshCrossoverAvgBlock): (String, Int, Int) = {
-    val d = embeddingRouteDecisionCached(collection.sparkSession, collection,
-      threshold, targetOccupancy, minRecall, lshCrossover)
-    (d.route, d.r, d.b)
-  }
-
   /** The router's full decision record — the route AND the measured
     * inputs that produced it (average label block, measured random-
     * pair collision probability, the banding's empirical per-row
@@ -687,77 +548,33 @@ object Dedup {
       avgBlock: Double, pRand: Double, perRowCandidates: Double,
       budget: Double, reason: String)
 
-  /** Session-scoped memo of [[embeddingRouteDecision]], keyed by
-    * (session, collection plan, router knobs). The decision costs
-    * measurement jobs — a corpus count/countDistinct plus the 256-row
-    * plane-prob sample — which is the right price when a dedup verb
-    * is about to run, and the wrong one inside `q_index_stats`, an
-    * observability query operators poll continuously (report standing
-    * state, don't re-measure it per poll). [[embeddingNearDupAuto]]
-    * populates the same memo when it actually routes, so the stats
-    * surface reports the decision the last real invocation used,
-    * measured once per (session, corpus, knobs). A session that mutates the corpus
-    * under an unchanged plan re-measures after
-    * [[invalidateRouteDecisions]] (the epoch lever the standing
-    * indexes get from their pointer swaps).
+  /** The one embedding near-dup route decision, measured on every
+    * call: a count/countDistinct job for the average label block,
+    * then (past the crossover) the 256-row plane-prob sample. The
+    * gates, in order:
+    *  - "exact" when the average label block is at or below
+    *    `lshCrossover`: the LSH path's fixed tax never amortizes (an
+    *    empty collection lands here at any crossover);
+    *  - "exact" when the threshold has no LSH contrast on the sample
+    *    ([[lshHasContrast]]): at or below a concentrated cloud's
+    *    noise floor every band filters threshold pairs FASTER than
+    *    noise, so no (r, b) bounds occupancy and the candidate
+    *    exchange grows toward n·b full-row pairs (measured: 781–1067 s
+    *    per pass, ~85% of the whole 201-query suite wall, on the
+    *    55.5k-row heaps-aniso corpus at threshold 0.35), while the
+    *    exact scorer's cost matches the output mass the threshold's
+    *    own density implies;
+    *  - "cluster" when the [[chooseBanding]] banding's EMPIRICAL
+    *    per-row candidate mass exceeds [[ClusterRouteCandidateBudget]]:
+    *    contrast holds but E[p^r] ≫ (E[p])^r inflates every bucket
+    *    (measured 38 min / 31 GB of shuffle at a 500k corpus where
+    *    learned-cluster blocking ran the identical input in 23.3 s,
+    *    `bench/slope_combined_sf10_r13.json`);
+    *  - "lsh" otherwise, at the chosen (r, b).
+    * A caller that wants banding at any size passes
+    * `lshCrossover = 0.0`; the contrast and budget gates still hold.
     */
-  /** Bounded LRU (the [[graft.sources.IndexAlias]] resolve-cache
-    * pattern): decisions are a few hundred bytes, and access-ordered
-    * eviction means a long-lived session cycling >1024 distinct
-    * (plan, knobs) keys — a catalog sweep over many corpora — evicts
-    * only the coldest decisions instead of wholesale-clearing and
-    * re-measuring the hot ones. Every access goes through the map's
-    * own monitor: access-order reads MUTATE the link chain, so even
-    * `get` is a write here — but the measured decision itself is
-    * computed OUTSIDE the lock (it runs Spark jobs; holding the
-    * monitor across them would serialize unrelated sessions'
-    * measurements), with a benign lost-race re-measure resolved by
-    * first-writer-wins.
-    */
-  private val RouteDecisionCacheMax = 1024
-
-  private val routeDecisionCache =
-    new java.util.LinkedHashMap[String, RouteDecision](64, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, RouteDecision]): Boolean =
-        size() > RouteDecisionCacheMax
-    }
-
-  private[graft] def invalidateRouteDecisions(): Unit =
-    routeDecisionCache.synchronized(routeDecisionCache.clear())
-
-  private[graft] def embeddingRouteDecisionCached(spark: SparkSession,
-      collection: DataFrame, threshold: Double,
-      targetOccupancy: Double = 64.0, minRecall: Double = 0.9,
-      lshCrossover: Double = LshCrossoverAvgBlock): RouteDecision = {
-    // file-backed corpora fold their FILE LISTING into the key: a
-    // parquet dir that grows under an unchanged plan (the standing
-    // ingest shape) must re-measure, or the memo would pin the route
-    // and banding sized for the old corpus forever. `inputFiles`
-    // reads the plan's already-materialized FileIndex — no job. Non-
-    // file frames (localCheckpoint fixtures) list empty and key on
-    // the plan alone; they are immutable by construction.
-    val filesSig = {
-      val fs = collection.inputFiles
-      if (fs.isEmpty) "mem" else s"${fs.length}:${util.hashing.MurmurHash3.arrayHash(fs)}"
-    }
-    val key = IndexCache.sessionKey(spark) + "#" +
-      collection.queryExecution.analyzed.semanticHash() + "#" + filesSig + "#" +
-      s"$threshold/$targetOccupancy/$minRecall/$lshCrossover"
-    val hit = routeDecisionCache.synchronized(routeDecisionCache.get(key))
-    if (hit != null) hit
-    else {
-      val fresh = embeddingRouteDecision(collection, threshold, targetOccupancy,
-        minRecall, lshCrossover)
-      routeDecisionCache.synchronized {
-        val prev = routeDecisionCache.putIfAbsent(key, fresh)
-        if (prev != null) prev else fresh
-      }
-    }
-  }
-
   private[graft] def embeddingRouteDecision(collection: DataFrame, threshold: Double,
-      targetOccupancy: Double = 64.0, minRecall: Double = 0.9,
       lshCrossover: Double = LshCrossoverAvgBlock): RouteDecision = {
     val avg = avgLabelBlock(collection)
     if (avg <= lshCrossover)
@@ -771,8 +588,7 @@ object Dedup {
           f"no LSH contrast at threshold $threshold%.2f (pRand $pRand%.3f): " +
             "output relation is dense, exact cost matches output mass")
       else {
-        val (r, b) = chooseBanding(avg, threshold, targetOccupancy, minRecall,
-          pRand = pRand)
+        val (r, b) = chooseBanding(avg, threshold, pRand = pRand)
         val perRow = LshCandidateCostFactor * b * empiricalOccupancy(probs, r, avg)
         if (perRow <= ClusterRouteCandidateBudget)
           RouteDecision("lsh", r, b, avg, pRand, perRow, ClusterRouteCandidateBudget,
@@ -786,12 +602,14 @@ object Dedup {
   }
 
   /** [[embeddingRouteDecision]] as an operator-consumable (param,
-    * value) frame for the stats surface.
+    * value) frame for the stats surface, measured when polled (the
+    * rule the layout stats follow): a poll reports the corpus as it
+    * is, at the price of the decision's measurement jobs.
     */
   private[graft] def routeParams(spark: SparkSession, collection: DataFrame,
                                  threshold: Double): DataFrame = {
     import spark.implicits._
-    val d = embeddingRouteDecisionCached(spark, collection, threshold)
+    val d = embeddingRouteDecision(collection, threshold)
     Seq(
       "route" -> d.route,
       "route_reason" -> d.reason,
@@ -804,20 +622,26 @@ object Dedup {
       .toDF("param", "value")
   }
 
+  /** The production embedding-near-dup verb: [[embeddingRouteDecision]]
+    * on the collection as it is, then the plan it names — the exact
+    * blocked scorer below [[LshCrossoverAvgBlock]] or without LSH
+    * contrast, [[embeddingNearDupPairs]] at the chosen banding, or
+    * [[embeddingNearDupClusterBlocked]] past the candidate budget.
+    * This is the verb a maintenance loop calls as corpora grow
+    * through decades, with the crossover AND the banding both chosen
+    * from the corpus itself. The decision (route and reason) is
+    * logged once per call.
+    */
   def embeddingNearDupAuto(collection: DataFrame, threshold: Double,
-                           targetOccupancy: Double = 64.0,
-                           minRecall: Double = 0.9,
-                           lshCrossover: Double = LshCrossoverAvgBlock): DataFrame =
-    chooseEmbeddingRoute(collection, threshold, targetOccupancy, minRecall,
-        lshCrossover) match {
-      // exact: below the measured crossover the LSH fixed tax never
-      // amortizes; in the no-contrast regime (threshold at/below the
-      // cloud's noise floor) the output relation is itself dense and
-      // the exact scorer's cost matches the output mass
-      case ("exact", _, _) => embeddingNearDupExact(collection, threshold)
-      case ("lsh", r, b)   => embeddingNearDupPairs(collection, threshold, r, b)
-      case (_, _, _)       => embeddingNearDupClusterBlocked(collection, threshold)
+                           lshCrossover: Double = LshCrossoverAvgBlock): DataFrame = {
+    val d = embeddingRouteDecision(collection, threshold, lshCrossover)
+    graft.Log.info(s"embeddingNearDupAuto: route ${d.route} at threshold $threshold: ${d.reason}")
+    d.route match {
+      case "exact" => embeddingNearDupExact(collection, threshold)
+      case "lsh"   => embeddingNearDupPairs(collection, threshold, d.r, d.b)
+      case _       => embeddingNearDupClusterBlocked(collection, threshold)
     }
+  }
 
   /** Near-dup candidates from LEARNED-CLUSTER blocking (the SemDeDup
     * recipe as a candidate generator): spherical k-means at the
@@ -863,6 +687,30 @@ object Dedup {
     */
   val QuantizedVerifyTables = 24
 
+  /** General LSH-bucketed embedding near-dup over a
+    * (vec_id, embedding, label) collection — candidates from
+    * `tables` band tables of `bitsPerBand`-bit random-hyperplane
+    * keys (`bitsPerBand × tables` seeded planes of the collection's
+    * own dimension), exact rounded-cosine verify at `threshold`.
+    *
+    * (r, b) = (bitsPerBand, tables) is the occupancy/recall knob
+    * pair, and choosing it is the WHOLE scale story: per-band
+    * collision at similarity s is p^r with p = 1 − acos(s)/π, recall
+    * = 1 − (1 − p^r)^b; buckets per label per table number 2^r, so
+    * expected occupancy is n_label / 2^r and in-bucket pair work is
+    * Σ occupancy². r therefore follows CORPUS SIZE (keep occupancy
+    * bounded: r ≈ log2(n_label / target)), b follows the THRESHOLD
+    * (hold recall at the target s). The registered test-corpus entry
+    * runs (4, 16) at threshold 0.35 — the synthetic collection's
+    * low intra-label near band, where only narrow bands collide
+    * often enough. A production pipeline dedups embeddings at HIGH
+    * thresholds (0.85–0.95 cosine, near-identical content), where
+    * wide bands hold recall cheaply: at s = 0.9, (8, 16) gives
+    * ≈ 0.996 recall with 256 buckets per label per table (the
+    * DedupSpec high-threshold case measures it). Precision w.r.t.
+    * the exact relation is 1 at ANY setting — verification is the
+    * same rounded cosine on the same label blocks.
+    */
   def embeddingNearDupPairs(collection: DataFrame, threshold: Double,
                             bitsPerBand: Int, tables: Int,
                             seed: Long = 7L): DataFrame =
@@ -906,7 +754,7 @@ object Dedup {
     // per-plane form breached Janino's method limit there and fell
     // back to interpreted eval, minutes per scan at a 100× corpus).
     // Bit-identical to the composed vec_dot ≥ 0 form.
-    val bandKeys = graft.functions.matrixops.lshBandBuckets(
+    val bandBuckets = graft.functions.matrixops.lshBandBuckets(
       col("embedding"), planes, bitsPerBand)
     if (!quantizedVerify) {
       // signatures materialize ONCE (r·b dot products per row is the
@@ -925,7 +773,7 @@ object Dedup {
       // inheriting the repair width costs them nothing
       val signatures = Fanout.rebalance(collection, col("vec_id"))
         .select(col("vec_id"), col("label"),
-          col("embedding"), bandKeys.as("bks")).localCheckpoint()
+          col("embedding"), bandBuckets.as("bks")).localCheckpoint()
       val keyed = signatures.select(col("vec_id"), col("label"), col("embedding"),
         posexplode(col("bks")).as(Seq("band_id", "bucket")))
       val a = keyed.select(col("label"), col("band_id"), col("bucket"),
@@ -945,7 +793,7 @@ object Dedup {
       val clampedCos = (c: org.apache.spark.sql.Column) =>
         least(lit(1.0), greatest(lit(-1.0), c))
       val sigs = q.select(col("vec_id"), col("label"), col("sq8"),
-          col("sq8_min"), col("sq8_scale"), bandKeys.as("bks"),
+          col("sq8_min"), col("sq8_scale"), bandBuckets.as("bks"),
           acos(clampedCos(vec.cosine(col("embedding"),
             Quantization.dequantized()))).as("delta"))
         .localCheckpoint()
@@ -1121,7 +969,7 @@ object Dedup {
     *     Jaccard verification.
     * Signatures use fixed seeded permutations ([[Perms]]), so index
     * rows written in different jobs/batches are mutually comparable —
-    * the same contract that makes [[Ann.appendToIvfIndex]] sound.
+    * the same contract that makes [[VectorIndex.append]] sound.
     */
   def writeMinhashIndex(docs: DataFrame, rawPath: String): Unit = {
     val path = graft.sources.IndexAlias.resolve(docs.sparkSession, rawPath)
@@ -2165,8 +2013,9 @@ object Dedup {
     * Σ_c n_c² (n_c ≈ n/k, and k grows with the corpus in a real
     * deployment); the in-cluster scorer IS [[embeddingNearDupAuto]] —
     * the cluster id is a label to that machinery, so above the
-    * measured crossover the pair pool comes from the adaptive-LSH
-    * path, not the exact grid (the round-8 lesson: the registered
+    * measured crossover the pair pool comes from the plan its route
+    * decision names (banded LSH or learned-cluster blocking), not the
+    * exact grid (the round-8 lesson: the registered
     * path must BE the doctrine, not cite it). Output = the removed
     * members with their kept representative.
     */

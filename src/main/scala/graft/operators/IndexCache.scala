@@ -6,9 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The reference's backends (Milvus IVF/PQ, Qdrant quantized storage,
   * LSH tables) build their index representation ONCE at ingest and
-  * serve every query from it; only [[Ann.writeIvfIndex]] models the
-  * true at-rest layout, but inside one session the same lifecycle
-  * applies: the encoded corpus (cluster ids, PQ codes, sign words,
+  * serve every query from it; [[VectorIndex]] is that layout at
+  * rest, and inside one session the same lifecycle applies: the
+  * encoded corpus (cluster ids, PQ codes, sign words,
   * int8 vectors) is a build artifact, not part of the query. Caching
   * the localCheckpoint also keeps the enormous literal expression
   * trees (per-centroid dot products expanded for codegen) out of

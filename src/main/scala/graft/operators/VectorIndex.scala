@@ -39,7 +39,7 @@ import graft.sources.IndexAlias
   * reads as an empty frame, and nothing pays schema inference at
   * scale. Appends are batch-sized files landing inside the existing
   * partition dirs — the standing corpus is never read or rewritten,
-  * the same contract as [[Ann.appendToIvfIndex]] and the text index.
+  * the same contract as the text index.
   */
 object VectorIndex {
 
@@ -845,27 +845,28 @@ object VectorIndex {
     * vector shares the mean's sign pattern — the measured disk-
     * filling candidate explosion at the 5M-row aniso corpus), and the
     * log₂(n)-width keys keep expected bucket occupancy constant.
-    * Legacy layouts keep the fixed 16×4 [[Ann.bandKeys]] bit-for-bit.
+    * Legacy layouts (no `lsh_bits`) hash the floor banding —
+    * [[Ann.LshBands]] × [[Ann.BitsPerBand]] — uncentered, through the
+    * same native band-bucket expression.
     */
-  private def lshKeysOf(meta: Meta, embCol: Column): Column =
-    meta.lshBits match {
+  private def lshKeysOf(meta: Meta, embCol: Column): Column = {
+    // band count from the calibrated meta (rung 4); the seeded plane
+    // generator is PREFIX-STABLE — bands 0..15 of a 64-band layout
+    // hash identically to the 16-band layout's bands — so a reader on
+    // a stale 16-band meta probes a correct subset of a wider table,
+    // degrading recall, never correctness
+    val (bits, bands, keyed) = meta.lshBits match {
       case Some(bits) =>
-        // band count from the calibrated meta (rung 4); the seeded
-        // plane generator is PREFIX-STABLE — bands 0..15 of a 64-band
-        // layout hash identically to the 16-band layout's bands — so
-        // a reader on a stale 16-band meta probes a correct subset of
-        // a wider table, degrading recall, never correctness
-        val bands = meta.lshBands.getOrElse(Ann.LshBands)
-        val centered = meta.bqMean.fold(embCol)(mu =>
-          zip_with(embCol, typedLit(mu), (v, m) => v - m))
-        explode(zip_with(
-          graft.functions.matrixops.lshBandBuckets(centered,
-            Ann.lshPlanesFor(bits, bands), bits),
-          sequence(lit(0), lit(bands - 1)),
-          (bucket, band) => struct(band.cast("int").as("band_id"),
-            bucket.cast("int").as("bucket"))))
-      case None => explode(Ann.bandKeys(embCol))
+        (bits, meta.lshBands.getOrElse(Ann.LshBands), meta.bqMean.fold(embCol)(mu =>
+          zip_with(embCol, typedLit(mu), (v, m) => v - m)))
+      case None => (Ann.BitsPerBand, Ann.LshBands, embCol)
     }
+    explode(zip_with(
+      graft.functions.matrixops.lshBandBuckets(keyed, Ann.lshPlanesFor(bits, bands), bits),
+      sequence(lit(0), lit(bands - 1)),
+      (bucket, band) => struct(band.cast("int").as("band_id"),
+        bucket.cast("int").as("bucket"))))
+  }
 
   private def lshKeys(meta: Meta): Column = lshKeysOf(meta, col("embedding"))
 

@@ -586,12 +586,12 @@ class DedupSpec extends SparkSpec {
       .localCheckpoint()
     val pC = Dedup.measuredPRand(concDf)
     assert(pC > 0.8, s"concentrated pRand $pC not > 0.8")
-    // the adaptive path on the concentrated collection: subset of
-    // exact, every planted copy (cosine 1.0) recalled
+    // the banded path (crossover 0) on the concentrated collection:
+    // subset of exact, every planted copy (cosine 1.0) recalled
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
     val exact = pairs(Dedup.embeddingNearDupExact(concDf, 0.9999))
-    val lsh = pairs(Dedup.embeddingNearDupAdaptive(concDf, 0.9999))
+    val lsh = pairs(Dedup.embeddingNearDupAuto(concDf, 0.9999, lshCrossover = 0.0))
     assert(lsh.subsetOf(exact))
     conc.map(_._1).filter(_ % 10 == 0).foreach { i =>
       assert(lsh.contains((i, i + 1000L)), s"planted copy $i missed")
@@ -614,7 +614,12 @@ class DedupSpec extends SparkSpec {
       .withColumn("score", round(graft.functions.vec.cosine(col("emb_a"), col("emb_b")), 6))
       .filter(col("score") >= 0.9)
       .select(col("vec_a"), col("vec_b")))
-    val adaptive = pairSet(Dedup.embeddingNearDupAdaptive(aug, threshold = 0.9))
+    // the crossover at zero routes the call through the LSH path: a
+    // strict-subset-capable plan whose banding came from chooseBanding
+    val d = Dedup.embeddingRouteDecision(aug, 0.9, lshCrossover = 0.0)
+    assert(d.route == "lsh", d.toString)
+    val adaptive = pairSet(Dedup.embeddingNearDupAuto(aug, threshold = 0.9,
+      lshCrossover = 0.0))
     assert(adaptive.subsetOf(exact), s"false pairs: ${(adaptive -- exact).take(5)}")
     val copies = exact.filter { case (x, y) => y == x + 1000000000L }
     assert(copies.nonEmpty && copies.subsetOf(adaptive))
@@ -622,14 +627,9 @@ class DedupSpec extends SparkSpec {
     // the production verb below the crossover (avg label block ~52
     // here, crossover 1000) IS the exact scorer: identical relation,
     // recall exactly 1 — and the plan contains no LSH signature stage
+    assert(Dedup.embeddingRouteDecision(aug, 0.9).route == "exact")
     val auto = Dedup.embeddingNearDupAuto(aug, threshold = 0.9)
     assert(pairSet(auto) == exact)
-    // forcing the crossover to zero routes the same call through the
-    // LSH path: a strict-subset-capable plan whose banding came from
-    // chooseBanding (sanity: still recalls every constructed copy)
-    val forced = pairSet(Dedup.embeddingNearDupAuto(aug, threshold = 0.9,
-      lshCrossover = 0.0))
-    assert(forced.subsetOf(exact) && copies.subsetOf(forced))
   }
 
   test("cluster-blocked scorer: subset of exact, copies always recalled, recall holds on a concentrated cloud") {
@@ -711,8 +711,10 @@ class DedupSpec extends SparkSpec {
       val r2 = new java.util.Random(id * 104729L + 11)
       Array.fill(dim)(r2.nextGaussian().toFloat)
     }
-    val (routeCone, _, _) = Dedup.chooseEmbeddingRoute(coneDf, 0.98)
-    val (routeUni, _, _) = Dedup.chooseEmbeddingRoute(uniDf, 0.9)
+    // both blocks sit above the default crossover too, so the route
+    // is the same at either crossover
+    val routeCone = Dedup.embeddingRouteDecision(coneDf, 0.98, lshCrossover = 0.0).route
+    val routeUni = Dedup.embeddingRouteDecision(uniDf, 0.9, lshCrossover = 0.0).route
     assert(routeCone == "cluster", s"cone cloud routed $routeCone")
     assert(routeUni == "lsh", s"uniform cloud routed $routeUni")
   }
@@ -897,15 +899,14 @@ class DedupSpec extends SparkSpec {
     def pairs(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"), r.getAs[Double]("score"))).toSet
     val exact = pairs(Dedup.embeddingNearDupExact(df, 0.35))
-    // the guard routes to the exact scorer: the IDENTICAL relation
-    // (scores included), not a banded subset — the exact plan's cost
-    // matches the output mass the threshold's own density implies
-    val guarded = pairs(Dedup.embeddingNearDupAdaptive(df, 0.35))
-    assert(guarded == exact, "no-contrast adaptive must BE the exact relation")
-    // the documented escape hatch still bands (a caller that accepts
-    // the candidate mass): subset-of-exact because verify is exact
-    val forced = pairs(Dedup.embeddingNearDupAdaptive(df, 0.35, force = true))
-    assert(forced.subsetOf(exact))
+    // the guard routes to the exact scorer even with the crossover at
+    // zero: the IDENTICAL relation (scores included), not a banded
+    // subset — the exact plan's cost matches the output mass the
+    // threshold's own density implies
+    val d = Dedup.embeddingRouteDecision(df, 0.35, lshCrossover = 0.0)
+    assert(d.route == "exact", d.toString)
+    val guarded = pairs(Dedup.embeddingNearDupAuto(df, 0.35, lshCrossover = 0.0))
+    assert(guarded == exact, "no-contrast banding request must BE the exact relation")
   }
 
   test("forced-LSH verb gates the Jensen-gap regime: contrast holds, candidate mass over budget routes to cluster blocking") {
@@ -932,83 +933,19 @@ class DedupSpec extends SparkSpec {
     val t = 0.99995
     assert(Dedup.lshHasContrast(t, pRand),
       s"fixture must HOLD contrast (pRand $pRand) — it pins the SECOND gate")
-    val avg = df.count().toDouble // one label
-    val (route, r, b, perRow) = Dedup.adaptiveRoute(t, probs, avg)
-    assert(route == "cluster",
-      f"budget gate must fire: route $route, $perRow%.0f/row at ($r, $b) vs " +
-        f"${Dedup.ClusterRouteCandidateBudget}%.0f")
-    assert(perRow > Dedup.ClusterRouteCandidateBudget)
-    // the documented escape hatch keeps the banding through BOTH gates
-    val (fRoute, _, _, _) = Dedup.adaptiveRoute(t, probs, avg, force = true)
-    assert(fRoute == "lsh")
+    val d = Dedup.embeddingRouteDecision(df, t, lshCrossover = 0.0)
+    assert(d.route == "cluster",
+      f"budget gate must fire: route ${d.route}, ${d.perRowCandidates}%.0f/row at " +
+        f"(${d.r}, ${d.b}) vs ${Dedup.ClusterRouteCandidateBudget}%.0f")
+    assert(d.perRowCandidates > Dedup.ClusterRouteCandidateBudget)
     // end to end: the gated verb returns the cluster-blocked relation.
     // At this threshold that is EXACTLY the planted copy pairs: exact
     // copies share identical spilled assignments (always recalled),
     // verification is exact cosine (nothing below threshold survives),
     // and the noise floor (~0.998) sits far below 0.99995.
-    val got = Dedup.embeddingNearDupAdaptive(df, t).collect()
+    val got = Dedup.embeddingNearDupAuto(df, t, lshCrossover = 0.0).collect()
       .map(r0 => (r0.getAs[Long]("vec_a"), r0.getAs[Long]("vec_b"))).toSet
     val want = copies.map(c => (c._1 - 1000000L, c._1)).toSet
     assert(got == want, s"gated route must recall all ${want.size} copy pairs exactly")
-  }
-
-  test("embedding route decision is measured once per (session, corpus, knobs): a re-read runs no jobs") {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val d1 = Dedup.embeddingRouteDecisionCached(spark, e, threshold = 0.35)
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val d2 = Dedup.embeddingRouteDecisionCached(spark, e, threshold = 0.35)
-      assert(d2 == d1, "memoized decision must be the measured one")
-      // listener events post asynchronously; give a would-be job time
-      // to surface before asserting none started
-      Thread.sleep(800)
-      assert(jobs == 0,
-        s"cached route decision must run no corpus-sized job (saw $jobs)")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // the driver corpus sits below the crossover: the memoized
-    // decision is the exact route the auto verb actually takes
-    assert(d1.route == "exact", d1.toString)
-    Dedup.invalidateRouteDecisions()
-  }
-
-  test("route memo is an LRU: cycling past the cache bound evicts cold decisions, not the hot one") {
-    import spark.implicits._
-    // a catalog sweep over >1024 distinct (plan, knobs) keys used to
-    // wholesale-clear the memo — the hot corpus re-measured after
-    // every sweep. Access-ordered eviction keeps a decision that is
-    // USED; only the coldest fall off. Distinct knob values make
-    // distinct keys on one tiny frame (each miss costs one bounded
-    // agg job), and the hot key is touched between batches the way a
-    // live session touches its standing corpus.
-    val hot = (0L until 8L).map(i => (i, Array.fill(4)(0.1f), i % 2))
-      .toDF("vec_id", "embedding", "label").localCheckpoint()
-    val hot1 = Dedup.embeddingRouteDecisionCached(spark, hot, threshold = 0.35)
-    val colds = 1100
-    (0 until colds).foreach { i =>
-      Dedup.embeddingRouteDecisionCached(spark, hot, threshold = 0.35,
-        lshCrossover = 1e6 + i)
-      if (i % 100 == 99)
-        Dedup.embeddingRouteDecisionCached(spark, hot, threshold = 0.35)
-    }
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val hot2 = Dedup.embeddingRouteDecisionCached(spark, hot, threshold = 0.35)
-      assert(hot2 == hot1, "the retained decision must be the measured one")
-      Thread.sleep(800)
-      assert(jobs == 0,
-        s"hot decision must survive $colds cold keys without re-measuring (saw $jobs jobs)")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    Dedup.invalidateRouteDecisions()
   }
 }

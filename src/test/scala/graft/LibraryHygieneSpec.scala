@@ -11,8 +11,8 @@ class LibraryHygieneSpec extends SparkSpec {
   test("building a vector index and routing adaptive dedup print nothing on stdout") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)
-    // a mean-dominated cone with no LSH contrast at 0.35: the
-    // adaptive verb reports its route choice (to the exact scorer)
+    // a mean-dominated cone with no LSH contrast at 0.35: the dedup
+    // verb logs its route decision (to the exact scorer) on every call
     val cone = (0L until 120L).map { i =>
       (i, Array.tabulate(26)(_ => (10.0 + rnd.nextGaussian()).toFloat.max(0f)), i % 3)
     }.toDF("vec_id", "embedding", "label").localCheckpoint()
@@ -20,7 +20,7 @@ class LibraryHygieneSpec extends SparkSpec {
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
       VectorIndex.buildFrom(spark, Tables.embeddings(spark, sfDir), home, calibrate = false)
-      Dedup.embeddingNearDupAdaptive(cone, 0.35).count()
+      Dedup.embeddingNearDupAuto(cone, 0.35, lshCrossover = 0.0).count()
     }
     val printed = out.toString("UTF-8")
     assert(printed.isEmpty, s"library code printed on stdout:\n$printed")

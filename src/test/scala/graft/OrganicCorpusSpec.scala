@@ -260,7 +260,7 @@ class OrganicCorpusSpec extends SparkSpec {
     def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
     val exact = pairSet(Dedup.embeddingNearDupExact(aug, 0.95))
-    val adaptive = pairSet(Dedup.embeddingNearDupAdaptive(aug, 0.95))
+    val adaptive = pairSet(Dedup.embeddingNearDupAuto(aug, 0.95, lshCrossover = 0.0))
     assert(adaptive.subsetOf(exact), s"false pairs: ${(adaptive -- exact).take(3)}")
     val copyPairs = exact.filter { case (a, b) => b - a == 1000000L }
     assert(copyPairs.nonEmpty && copyPairs.forall(adaptive.contains),

@@ -578,4 +578,22 @@ class RelationalSpec extends SparkSpec {
       assert(r.getAs[Double]("logsumexp") >= lse - 5e-7)
     }
   }
+
+  test("day-series windows carry a partition key: no unpartitioned WindowExec") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    // the five |days|-row series queries; an empty partitionSpec is
+    // the "No Partition Defined for Window operation" path
+    val plans = Seq(
+      "q_moving_agg" -> Relational.qMovingAgg(spark, sfDir),
+      "q_cumulative_cardinality" -> Relational.qCumulativeCardinality(spark, sfDir),
+      "q_serial_diff" -> Relational.qSerialDiff(spark, sfDir),
+      "q_change_point" -> Relational.qChangePoint(spark, sfDir),
+      "q_var_width_histogram" -> Relational.qVarWidthHistogram(spark, sfDir))
+    plans.foreach { case (name, df) =>
+      val windows = df.queryExecution.sparkPlan.collect { case w: WindowExec => w }
+      assert(windows.nonEmpty, s"$name: no window in the plan")
+      windows.foreach(w =>
+        assert(w.partitionSpec.nonEmpty, s"$name: unpartitioned window\n$w"))
+    }
+  }
 }
