@@ -290,10 +290,12 @@ object Ann {
 
   /** Row 7 (rows-only): IVF kNN served from the AT-REST index
     * ([[VectorIndex]], built once per session at ingest): probe the
-    * NProbe nearest clusters per query, partition-prune the index
-    * scan to them, exact-score survivors, top-k. Identical results to
-    * the in-memory probe path (same centroids, same scoring) — the
-    * difference is that the scan reads nprobe/nlist of the FILES.
+    * NProbe nearest clusters per query, restrict the index to them,
+    * exact-score survivors, top-k. Identical results to
+    * the in-memory probe path (same centroids, same scoring): the
+    * probes filter the session view built from every file once per
+    * (session, epoch); listing-level pruning to nprobe/nlist of the
+    * FILES applies to `cached = false` reads.
     */
   def qIvfKnn(spark: SparkSession, sfDir: String): DataFrame =
     VectorIndex.searchIvf(spark, VectorIndex.sessionIndexPath(spark, sfDir),
@@ -337,30 +339,6 @@ object Ann {
         (col("__pos") + 1).cast("long").as("rn"), col("__e.score").as("score"))
       .orderBy(col("q_id"), col("rn"))
   }
-
-  /** Filtered ANN with a Qdrant-style query PLANNER: estimate the
-    * filter's cardinality first, then pick the strategy —
-    *
-    *  - a SELECTIVE filter (≤ `bruteForceLimit` matching rows) skips
-    *    the index entirely and exact-scores the filtered subset:
-    *    cheaper than probing AND exact (recall 1.0);
-    *  - a BROAD filter keeps the IVF probe path and applies the
-    *    filter to the probed candidates, so the scan still reads
-    *    only nprobe/nlist of the corpus.
-    *
-    * This is the strategy switch the native engines converge on
-    * (Qdrant's filtered-search planner, Milvus' bitset pre-filter):
-    * an ANN index pays off only while the filter keeps most of the
-    * corpus. The cardinality estimate is one count over the
-    * filtered assignment — at rest this is a partition-statistics
-    * lookup, not a data scan. Returns the chosen plan's name with
-    * the result so callers (and the spec) can assert the switch.
-    */
-  def filteredIvfKnn(spark: SparkSession, sfDir: String,
-                     filter: Column, bruteForceLimit: Long): (String, DataFrame) =
-    VectorIndex.searchIvfFiltered(spark,
-      VectorIndex.sessionIndexPath(spark, sfDir),
-      VectorSearch.querySet(spark, sfDir), filter, bruteForceLimit)
 
   /** The at-rest LSH banding floor: 16 bands of 4 bits — banding
     * trades precision for recall: a near neighbor only needs to agree

@@ -227,17 +227,11 @@ object Collection {
     * (keyword-partitioned by lang, range-clustered by n_chars) —
     * built once at ingest like the text/vector indexes.
     */
-  private val payloadIndexPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def payloadIndexPath(spark: SparkSession, sfDir: String): String =
-    payloadIndexPaths.computeIfAbsent(
-      IndexCache.sessionKey(spark) + "#" + sfDir, { _ =>
-        val p = IndexCache.tempDir("graft-payloadindex") + "/docs"
-        graft.api.PayloadIndex.write(Tables.documents(spark, sfDir), p,
-          graft.api.PayloadIndex.Layout(keyword = Seq("lang"), numeric = Seq("n_chars")))
-        p
-      })
+    IndexCache.sessionLayout(spark, "payloadindex", sfDir) { p =>
+      graft.api.PayloadIndex.write(Tables.documents(spark, sfDir), p,
+        graft.api.PayloadIndex.Layout(keyword = Seq("lang"), numeric = Seq("n_chars")))
+    }
 
   /** Payload-index scan (Qdrant `create_payload_index` + filtered
     * read): the same wire-filter semantics as [[qFilterDsl]], but

@@ -503,7 +503,7 @@ object Dedup {
     * 1000 is the pinned switch. Either arm is within ~2× of optimal
     * across the whole measured bracket, so the constant's job is to
     * avoid the ORDER-OF-MAGNITUDE losses outside it. The same shape
-    * as [[graft.operators.Ann.filteredIvfKnn]]'s selectivity switch:
+    * as [[graft.operators.VectorIndex.searchIvfFiltered]]'s selectivity switch:
     * pick the plan from the measured statistic, not a hand pin.
     */
   val LshCrossoverAvgBlock: Double = 1000.0
@@ -1135,9 +1135,6 @@ object Dedup {
         clusterMergesSchema).write.mode("overwrite").parquet(s"$path/merges")
     }
 
-  private val sessionClusterIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Session at-rest cluster index for a corpus dir, built ONCE per
     * (session, corpus) from the materialized [[dupClusters]] frame —
     * the standing structure the registered `q_index_stats` entry
@@ -1146,12 +1143,8 @@ object Dedup {
     * the one the session already computed.
     */
   def sessionClusterIndexPath(spark: SparkSession, sfDir: String): String =
-    sessionClusterIdx.computeIfAbsent(IndexCache.sessionKey(spark) + "#" + sfDir, { _ =>
-      val home = IndexCache.tempDir("graft-session-cidx") + "/cidx"
-      writeClusterIndexFrom(augmentedDocs(spark, sfDir),
-        dupClusters(spark, sfDir), home)
-      home
-    })
+    IndexCache.sessionLayout(spark, "cidx", sfDir)(
+      writeClusterIndexFrom(augmentedDocs(spark, sfDir), dupClusters(spark, sfDir), _))
 
   /** Next seq value for a superseding write: one column-pruned max
     * over the stored rows' seq column (parquet footer stats make this

@@ -37,12 +37,10 @@ private[graft] object Fanout {
     * consumers at 32-way cost +2 s of pure dispatch; 8-way is within
     * noise of its best). On a real cluster dispatch amortizes across
     * executors AND the guard below is false for any properly split
-    * corpus, so this constant never reaches a production plan; it is
-    * env-tunable for hosts with different dispatch costs.
+    * corpus, so this constant never reaches a production plan.
     */
-  private[graft] def repairWidth(df: DataFrame): Int = math.min(
-    sys.env.getOrElse("SPARK_GRAFT_FANOUT_TASKS", "8").toInt,
-    df.sparkSession.sparkContext.defaultParallelism)
+  private[graft] def repairWidth(df: DataFrame): Int =
+    math.min(8, df.sparkSession.sparkContext.defaultParallelism)
 
   def rebalance(df: DataFrame, key: Column): DataFrame = {
     val par = repairWidth(df)

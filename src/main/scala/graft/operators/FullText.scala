@@ -60,16 +60,8 @@ object FullText {
     * the ingest-time artifact, like [[IndexCache]] for the encoded
     * vector corpora).
     */
-  private val textIndexPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def textIndexPath(spark: SparkSession, sfDir: String): String =
-    textIndexPaths.computeIfAbsent(
-      IndexCache.sessionKey(spark) + "#" + sfDir, { _ =>
-        val p = IndexCache.tempDir("graft-textindex")
-        index(spark, sfDir).writeIndex(p)
-        p
-      })
+    IndexCache.sessionLayout(spark, "textindex", sfDir)(index(spark, sfDir).writeIndex(_))
 
   /** BM25 served from the at-rest inverted index
     * ([[graft.api.TextIndex.bm25AtRest]]): same query, same scores as

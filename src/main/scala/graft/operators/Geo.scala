@@ -245,19 +245,13 @@ object Geo {
     * [[graft.api.PayloadIndex]] geo layout, so geo predicates skip
     * files on footer min/max instead of scanning the corpus.
     */
-  private val geoIndexPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def geoIndexPath(spark: SparkSession, sfDir: String): String =
-    geoIndexPaths.computeIfAbsent(
-      IndexCache.sessionKey(spark) + "#" + sfDir, { _ =>
-        val p = IndexCache.tempDir("graft-geoindex") + "/points"
-        graft.api.PayloadIndex.write(
-          userGeo(spark, sfDir).select(col("user_id"),
-            col("lat").as("loc_lat"), col("lon").as("loc_lon")),
-          p, graft.api.PayloadIndex.Layout(geo = Some("loc")), numFiles = 32)
-        p
-      })
+    IndexCache.sessionLayout(spark, "geoindex", sfDir) { p =>
+      graft.api.PayloadIndex.write(
+        userGeo(spark, sfDir).select(col("user_id"),
+          col("lat").as("loc_lat"), col("lon").as("loc_lon")),
+        p, graft.api.PayloadIndex.Layout(geo = Some("loc")), numFiles = 32)
+    }
 
   /** [[qGeoPolygon]] served from the AT-REST geo payload layout —
     * same polygon, same answers (hash-checked against the same

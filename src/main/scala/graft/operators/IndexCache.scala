@@ -89,6 +89,33 @@ private[graft] object IndexCache {
     p.toString
   }
 
+  /** One memo cell per (session, kind, corpus). The build runs in the
+    * cell's lazy val, outside the map's bin lock: a minutes-long build
+    * must not block other keys hashed to the same bin, and a build
+    * that asks for another kind's layout must not update the map
+    * recursively.
+    */
+  private final class SessionLayout(build: () => String) {
+    lazy val path: String = build()
+  }
+  private val sessionLayouts =
+    new java.util.concurrent.ConcurrentHashMap[String, SessionLayout]()
+
+  /** Session-scoped at-rest layout of one `kind` per corpus dir — the
+    * ingest-time artifact a registered query serves from: `write`
+    * builds it into a fresh session temp dir at first use, and every
+    * later call in the session gets the same path. A build that
+    * throws is retried by the next call.
+    */
+  private[graft] def sessionLayout(spark: SparkSession, kind: String, sfDir: String)(
+      write: String => Unit): String =
+    sessionLayouts.computeIfAbsent(s"${sessionKey(spark)}#$kind#$sfDir", _ =>
+      new SessionLayout(() => {
+        val p = tempDir(s"graft-$kind") + "/" + kind
+        write(p)
+        p
+      })).path
+
   /** Target bytes per dispatch slice of a pinned standing frame —
     * the small-files rule (guide §6) applied to CACHED blocks: a
     * checkpoint inherits its build's partitioning, and an at-rest

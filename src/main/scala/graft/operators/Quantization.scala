@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.vec
 
@@ -80,16 +79,6 @@ object Quantization {
     */
   val PqPoolCap = 4096
 
-  /** Trained codebooks per corpus dir — deterministic, so cached:
-    * like IVF centroids, PQ codebooks are built once at ingest and
-    * reused by every query, never retrained per search.
-    */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Seq[Float]]]]()
-
-  def trainPqCodebooks(spark: SparkSession, sfDir: String): Seq[Seq[Seq[Float]]] =
-    codebookCache.computeIfAbsent(sfDir, _ => trainPqCodebooksUncached(spark, sfDir))
-
   private val opqCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Seq[Seq[Float]], Seq[Seq[Seq[Float]]])]()
 
@@ -100,40 +89,10 @@ object Quantization {
     opqCache.computeIfAbsent(sfDir, _ =>
       trainPqOpqFrom(Tables.embeddings(spark, sfDir), Ann.trainCentroids(spark, sfDir)))
 
-  /** Driver-side per-subspace Lloyd k-means on the deterministic
-    * fixed-SIZE sample (every 3rd vector by id, capped at
-    * [[Ann.TrainSampleCap]] rows — orderBy+limit compiles to a
+  /** The raw capped training sample (every 3rd vector by id up to
+    * [[Ann.TrainSampleCap]] — orderBy+limit compiles to a
     * per-partition top-k, so both scan and driver memory are bounded
     * at any corpus scale).
-    */
-  private def trainPqCodebooksUncached(spark: SparkSession, sfDir: String): Seq[Seq[Seq[Float]]] =
-    trainPqCodebooksFrom(Tables.embeddings(spark, sfDir),
-      Ann.trainCentroids(spark, sfDir))
-
-  /** RESIDUAL codebooks (the FAISS IVF_PQ training shape): each
-    * sample vector is assigned to its nearest IVF centroid — the same
-    * ranking [[graft.functions.NearestClusters]] serves, normalized
-    * query side — and the subspace k-means trains on the RESIDUAL
-    * v − c. Raw-vector codebooks spend the 4-bit-per-subspace budget
-    * encoding where in the cloud a vector sits — which the cluster id
-    * already says — and on a concentrated cloud the distinctions that
-    * decide top-k live entirely below that scale: measured recall@10
-    * on the aniso-sf100 corpus was 0.427 (IVFPQ) / 0.400 (flat PQ)
-    * with raw codes. Residuals re-center every list at the origin, so
-    * the codebooks resolve the within-list scale where neighbors
-    * actually differ.
-    */
-  private[graft] def trainPqCodebooksFrom(corpus: DataFrame,
-      cents: Seq[Seq[Float]]): Seq[Seq[Seq[Float]]] =
-    kMeansPerSubspace(residualSample(corpus, cents))
-
-  /** The capped residual training sample: every 3rd vector by id up
-    * to [[Ann.TrainSampleCap]], each assigned to its nearest centroid
-    * (same ranking [[graft.functions.NearestClusters]] serves) and
-    * replaced by v − c.
-    */
-  /** The raw capped training sample (every 3rd vector by id up to
-    * [[Ann.TrainSampleCap]]).
     */
   private def collectSample(corpus: DataFrame): Array[Array[Double]] =
     corpus
@@ -142,15 +101,18 @@ object Quantization {
       .select(col("embedding")).collect()
       .map(r => Ann.numericArray(r.getSeq[Any](0)))
 
-  /** RAW-vector codebooks — the pre-residual layouts' training shape,
-    * kept so the legacy-baseline comparisons (AdaptiveIvfSpec) encode
-    * raw vectors with RAW-trained codebooks: a raw layout served with
-    * residual-trained codebooks would overstate the residual
-    * technique's gap through a train/encode mismatch.
+  /** The capped residual training sample (the FAISS IVF_PQ training
+    * shape): every 3rd vector by id up to [[Ann.TrainSampleCap]], each
+    * assigned to its nearest centroid (same ranking
+    * [[graft.functions.NearestClusters]] serves) and replaced by
+    * v − c. Raw-vector codebooks spend the code budget encoding where
+    * in the cloud a vector sits — which the cluster id already says —
+    * and on a concentrated cloud the distinctions that decide top-k
+    * live below that scale (measured recall@10 on the aniso-sf100
+    * corpus: 0.427 IVFPQ / 0.400 flat PQ with raw codes). Residuals
+    * re-center every list at the origin, so the codebooks resolve the
+    * within-list scale where neighbors actually differ.
     */
-  private[graft] def trainPqCodebooksRawFrom(corpus: DataFrame): Seq[Seq[Seq[Float]]] =
-    kMeansPerSubspace(collectSample(corpus))
-
   private def residualSample(corpus: DataFrame,
       cents: Seq[Seq[Float]]): Array[Array[Double]] = {
     val raw = collectSample(corpus)
@@ -179,8 +141,8 @@ object Quantization {
   }
 
   /** Per-subspace deterministic Lloyd k-means over a driver-side
-    * sample — the shared trainer of the raw, residual, and
-    * OPQ-rotated codebook paths. The assign step runs on a FIXED
+    * sample — the shared trainer of the residual and OPQ-rotated
+    * codebook paths. The assign step runs on a FIXED
     * 32-way chunking of the sample with per-chunk partial sums merged
     * in chunk order, so the 256-centroid training (sample · k* · dim
     * · iters ≈ 2×10¹⁰ flops at the cap) uses the driver's cores while
@@ -444,17 +406,11 @@ object Quantization {
                                   absolute: Boolean): org.apache.spark.sql.Column =
     graft.functions.matrixops.pqAdcTable(embCol, codebooks, SubDim, absolute)
 
-  /** Encode: per-subspace nearest-centroid codes, M tinyints per row.
-    * Pure expression, no shuffle: argmin over the ranking-only ADC
-    * table (first-min index, matching the trained assignment).
-    */
-  def pqEncode(df: DataFrame, codebooks: Seq[Seq[Seq[Float]]],
-               embCol: String = "embedding"): DataFrame =
-    pqEncodeCol(df, codebooks, col(embCol))
-
-  /** [[pqEncode]] over an arbitrary vector expression — the residual
-    * encode path ([[VectorIndex]] passes v − c of the row's assigned
-    * cluster).
+  /** Encode: per-subspace nearest-centroid codes, M tinyints per row,
+    * of an arbitrary vector expression ([[VectorIndex]] passes the
+    * rotated residual R·(v − c) of the row's assigned cluster). Pure
+    * expression, no shuffle: argmin over the ranking-only ADC table
+    * (first-min index, matching the trained assignment).
     */
   private[operators] def pqEncodeCol(df: DataFrame,
       codebooks: Seq[Seq[Seq[Float]]],
@@ -476,9 +432,8 @@ object Quantization {
     pmod(codesCol(j).cast("int"), lit(256))
 
   /** Decode M codes back to the quantized vector (concatenated
-    * codebook entries) — the flat-PQ serving path for RESIDUAL
-    * layouts reconstructs v̂ = decode(codes) + c once inside the
-    * served view. HOF + element_at over a single nested literal:
+    * codebook entries) — the flat-PQ serving path reconstructs
+    * v̂ = Rᵀ·decode(codes) + c once inside the served view. HOF + element_at over a single nested literal:
     * M lookups per row, materialized once per session.
     */
   private[operators] def pqReconstruct(codesCol: org.apache.spark.sql.Column,

@@ -1007,63 +1007,4 @@ object Relational {
           .as("logsumexp"))
       .orderBy(col("event_type"))
   }
-
-  /** ES `bucket_sort` pipeline aggregation: a terms aggregation whose
-    * BUCKETS (not documents) are sorted by a computed metric, then
-    * paginated with from/size — "skip the top 3 nations by mean
-    * balance, give me the next 10". After the groupBy the frame is
-    * |buckets| rows, so the sort+offset+limit run on an already-tiny
-    * frame; the corpus-sized work is one combinable aggregate. The
-    * deterministic tie-break (nation key) keeps pagination stable
-    * across runs, which ES itself only guarantees with an explicit
-    * tie-break sort key.
-    */
-  def qBucketSort(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.customer(spark, sfDir)
-      .groupBy(col("c_nationkey"))
-      .agg(count(lit(1)).as("n_customers"),
-        round(avg(col("c_acctbal")), 6).as("avg_bal"))
-      .orderBy(col("avg_bal").desc, col("c_nationkey"))
-      .offset(3)
-      .limit(10)
-
-  /** ES `bucket_correlation` pipeline aggregation: Pearson
-    * correlation between two per-bucket series of a date histogram —
-    * here the daily event count against the day's total event value
-    * (ES correlates bucket counts against a caller-provided metric
-    * vector; both series here derive from the same histogram pass).
-    * Two stages, both combinable: the daily rollup shuffles |days|
-    * rows, and corr() over the |days|-row frame is itself a
-    * combinable aggregate — the corpus is scanned exactly once.
-    */
-  def qBucketCorrelation(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir)
-      .select(to_date(col("ts")).as("day"), col("value"))
-      .groupBy(col("day"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("m"))
-      .agg(count(lit(1)).as("n_buckets"),
-        round(corr(col("n"), col("m")), 6).as("corr_coef"))
-
-  /** ES `date_histogram` with `min_doc_count: 0` + `extended_bounds`:
-    * the histogram of a RARE event (signups above a value threshold)
-    * reported over the full day range of the corpus, empty days
-    * included as explicit zero rows — the behavior dashboards rely on
-    * to keep time axes dense. The bounds are a 1-row aggregate
-    * broadcast into a `sequence()` explode (|days| rows from one
-    * row — never a driver collect), left-joined by the sparse daily
-    * rollup. Both inputs to the join are |days|-sized; the corpus
-    * contributes one filtered combinable scan.
-    */
-  def qDateHistogramFilled(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-    val days = ev.agg(min(to_date(col("ts"))).as("lo"), max(to_date(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-    val rare = ev.filter(col("event_type") === "signup" && col("value") > 200)
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sv"))
-    days.join(rare, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("n_events"),
-        coalesce(col("sv"), lit(0.0)).as("sum_value"))
-      .orderBy(col("day"))
-  }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.functions.vec
@@ -26,9 +25,11 @@ import graft.sources.IndexAlias
   *    codes + per-vector affine params, BQ sign word, payload. All
   *    representations are COLUMNS of one partitioned table: parquet
   *    column pruning gives each search family its narrow scan (codes
-  *    only — 32× fewer bytes than floats) and partition pruning gives
-  *    IVF probes their nprobe/nlist file skip, with no per-family
-  *    copies of the corpus.
+  *    only — 32× fewer bytes than floats), with no per-family copies
+  *    of the corpus. By default each family serves from a session
+  *    view built from EVERY file once per (session, epoch) and
+  *    probes filter that view; listing-level partition pruning (the
+  *    nprobe/nlist file skip) applies to `cached = false` reads.
   *  - `lsh/` — banded random-hyperplane signature postings
   *    (band_id-partitioned, like the MinHash dedup index at
   *    [[Dedup.writeMinhashIndex]]). At test band width (4 bits) the
@@ -44,28 +45,25 @@ import graft.sources.IndexAlias
 object VectorIndex {
 
   /** Driver-side index geometry: kilobytes, trained once at build
-    * from a fixed-size sample ([[Ann.TrainSampleCap]]).
-    * `defaultNProbe` is the build-time CALIBRATED probe budget
-    * ([[calibrate]]) — None on small (≤ [[Ann.NList]]-list)
-    * geometries and on layouts written before calibration existed,
-    * where the closed-form [[Ann.nprobeFor]] stays the default.
-    * `pqResidual` marks layouts whose pq_codes encode PER-LIST
-    * residuals v − c (the FAISS IVF_PQ shape,
-    * [[Quantization.trainPqCodebooksFrom]]) — false on layouts
-    * written before residual encoding, which keep the raw-code
-    * serving path. `rotation` is the learned OPQ pre-rotation
-    * ([[Quantization.trainPqOpqFrom]]): codes encode R·(v − c), the
-    * query side rotates symmetrically, and reconstruction applies
-    * Rᵀ — None on pre-OPQ layouts, which serve unrotated.
+    * from a fixed-size sample ([[Ann.TrainSampleCap]]). Every layout
+    * has ONE format — residual IVFADC under an OPQ pre-rotation:
+    * `pq_codes` encode R·(v − c) of each copy's own list
+    * ([[Quantization.trainPqOpqFrom]]; `rotation` is R, the query
+    * side rotates symmetrically and reconstruction applies Rᵀ), BQ
+    * words and LSH keys hash the mean-centered v − `bqMean`, and LSH
+    * bands are `lshBits` wide ([[Ann.lshBitsFor]]). [[readMeta]]
+    * refuses any other layout. `defaultNProbe` is the build-time
+    * CALIBRATED probe budget ([[calibrate]]) — None on small
+    * (≤ [[Ann.NList]]-list) geometries, where the closed-form
+    * [[Ann.nprobeFor]] stays the default.
     */
   final case class Meta(centroids: Seq[Seq[Float]], codebooks: Seq[Seq[Seq[Float]]],
+                        rotation: Seq[Seq[Float]],
+                        bqMean: Seq[Float],
+                        lshBits: Int,
                         defaultNProbe: Option[Int] = None,
-                        pqResidual: Boolean = false,
-                        rotation: Option[Seq[Seq[Float]]] = None,
                         defaultPool: Option[Int] = None,
                         budgetBound: Boolean = false,
-                        bqMean: Option[Seq[Float]] = None,
-                        lshBits: Option[Int] = None,
                         defaultBqPool: Option[Int] = None,
                         bqBudgetBound: Boolean = false,
                         lshBands: Option[Int] = None,
@@ -96,9 +94,7 @@ object VectorIndex {
     val emb = Tables.embeddings(spark, sfDir)
     val mu = Quantization.trainBqMean(emb)
     writeCorpus(spark, emb, path,
-      Meta(cents, cbs, pqResidual = true, rotation = Some(rot),
-        bqMean = Some(mu),
-        lshBits = Some(Ann.lshBitsFor(emb.count(), centeredPRand(emb, mu)))))
+      Meta(cents, cbs, rot, mu, Ann.lshBitsFor(emb.count(), centeredPRand(emb, mu))))
   }
 
   /** Measured per-plane random-pair collision probability of the
@@ -110,7 +106,13 @@ object VectorIndex {
     */
   private def centeredPRand(corpus: DataFrame, mu: Seq[Float]): Double =
     Dedup.measuredPRand(corpus.select(col("vec_id"),
-      zip_with(col("embedding"), typedLit(mu), (v, m) => v - m).as("embedding")))
+      centered(col("embedding"), mu).as("embedding")))
+
+  /** v − μ: the frame BQ words and LSH keys hash, on both the stored
+    * and the query side.
+    */
+  private def centered(v: Column, mu: Seq[Float]): Column =
+    zip_with(v, typedLit(mu), (x, m) => x - m)
 
   /** Route-relevant banding drift of a standing layout: appends
     * encode under the FROZEN banding, so a corpus whose measured
@@ -128,30 +130,25 @@ object VectorIndex {
     * [[graft.api.ScaleOps.maintain]] REPORTS this rung with the
     * measured inputs rather than acting — banding review is a
     * cost/recall tradeoff an operator owns. One bounded sample pass
-    * plus one live count; only layouts with the adaptive banding
-    * (`lsh_bits` + `bq_centered`) measure anything.
+    * plus one live count.
     */
   private[graft] def bandingDrift(spark: SparkSession, home: String,
                                   slackBits: Int, liveCount: Long = -1L): Option[String] = {
     val meta = readMeta(spark, home)
-    (meta.lshBits, meta.bqMean) match {
-      case (Some(bits), Some(mu)) =>
-        val prim = vectors(spark, IndexAlias.resolve(spark, home), primaryOnly = true)
-          .select(col("vec_id"), col("embedding"))
-        // the maintain cycle already counted the live corpus for the
-        // geometry-drift rung — reuse it rather than a second
-        // corpus-sized count job per poll
-        val live = if (liveCount >= 0) liveCount else prim.count()
-        val pNow = centeredPRand(prim, mu)
-        val want = Ann.lshBitsFor(live, pNow)
-        if (want >= bits + slackBits)
-          Some(f"banding drift: persisted lsh_bits $bits, measured centered " +
-            f"pRand $pNow%.3f at $live live vectors wants $want bits — " +
-            "banding review recommended (reband rewrites the postings at " +
-            "id-only cost; retrain if the geometry drifted too)")
-        else None
-      case _ => None
-    }
+    val prim = vectors(spark, IndexAlias.resolve(spark, home), primaryOnly = true)
+      .select(col("vec_id"), col("embedding"))
+    // the maintain cycle already counted the live corpus for the
+    // geometry-drift rung — reuse it rather than a second
+    // corpus-sized count job per poll
+    val live = if (liveCount >= 0) liveCount else prim.count()
+    val pNow = centeredPRand(prim, meta.bqMean)
+    val want = Ann.lshBitsFor(live, pNow)
+    if (want >= meta.lshBits + slackBits)
+      Some(f"banding drift: persisted lsh_bits ${meta.lshBits}, measured centered " +
+        f"pRand $pNow%.3f at $live live vectors wants $want bits — " +
+        "banding review recommended (reband rewrites the postings at " +
+        "id-only cost; retrain if the geometry drifted too)")
+    else None
   }
 
   /** Build the index from ANY normalized (vec_id BIGINT, embedding
@@ -170,9 +167,7 @@ object VectorIndex {
     val mu = Quantization.trainBqMean(corpus)
     logStage("train", t0)
     writeCorpus(spark, corpus, path,
-      Meta(cents, cbs, pqResidual = true, rotation = Some(rot),
-        bqMean = Some(mu),
-        lshBits = Some(Ann.lshBitsFor(corpus.count(), centeredPRand(corpus, mu)))),
+      Meta(cents, cbs, rot, mu, Ann.lshBitsFor(corpus.count(), centeredPRand(corpus, mu))),
       doCalibrate = calibrate)
   }
 
@@ -200,25 +195,10 @@ object VectorIndex {
       yield (j, k, c))
       .toDF("subspace", "code", "centroid")
       .write.mode("overwrite").parquet(s"$p/meta/codebooks")
-    // the rotation table tracks the codes just written exactly like
-    // params below: written when the layout is OPQ, DELETED when it
-    // is not — an in-place rebuild to a legacy meta must not leave a
-    // stale rotation (or params) file flagging raw codes as rotated
-    val rotPath = new org.apache.hadoop.fs.Path(s"$p/meta/rotation")
-    val fs = rotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    meta.rotation match {
-      case Some(r) =>
-        r.zipWithIndex.map { case (row, i) => (i, row) }.toDF("row", "vals")
-          .write.mode("overwrite").parquet(rotPath.toString)
-      case None => fs.delete(rotPath, true)
-    }
-    val bqMeanPath = new org.apache.hadoop.fs.Path(s"$p/meta/bqmean")
-    meta.bqMean match {
-      case Some(mu) =>
-        Seq((0, mu)).toDF("row", "vals")
-          .write.mode("overwrite").parquet(bqMeanPath.toString)
-      case None => fs.delete(bqMeanPath, true)
-    }
+    meta.rotation.zipWithIndex.map { case (row, i) => (i, row) }.toDF("row", "vals")
+      .write.mode("overwrite").parquet(s"$p/meta/rotation")
+    Seq((0, meta.bqMean)).toDF("row", "vals")
+      .write.mode("overwrite").parquet(s"$p/meta/bqmean")
     val tEnc = System.nanoTime()
     // the signature postings are written HERE under the pre-
     // calibration meta (16-band default) so a crash during the
@@ -231,10 +211,9 @@ object VectorIndex {
     // sufficient) pays nothing
     encodeAndWrite(corpus, meta, p, "overwrite")
     logStage("encode+write", tEnc)
-    // the ENCODE flags (pq_residual / pq_opq) persist the moment the
-    // codes they describe exist — a crash during the minutes-long
-    // calibration below must never leave residual-encoded codes that
-    // a later session reads as raw (silent wrong reconstructions)
+    // the format flags persist the moment the codes they describe
+    // exist — a crash during the minutes-long calibration below must
+    // never leave a layout that [[readMeta]] cannot open
     writeParamsAt(spark, s"$p/meta", paramsOf(meta))
     // adaptive geometries calibrate their default probe, rerank-pool
     // (PQ and BQ) and LSH band-count budgets against the corpus just
@@ -266,19 +245,18 @@ object VectorIndex {
     servedMeta
   }
 
-  /** The `meta/params` rows a [[Meta]] persists — encode flags and
-    * calibrated serving knobs. Shared by [[writeCorpus]] (build) and
-    * [[recalibrate]] (maintenance), so the two writers can never
-    * disagree on the on-disk flag vocabulary.
+  /** The `meta/params` rows a [[Meta]] persists — the format flags
+    * [[readMeta]] requires and the calibrated serving knobs. Shared
+    * by [[writeCorpus]] (build) and [[recalibrate]] (maintenance), so
+    * the two writers can never disagree on the on-disk flag
+    * vocabulary.
     */
   private[graft] def paramsOf(m: Meta): Seq[(String, Long)] =
     m.defaultNProbe.map(np => ("default_nprobe", np.toLong)).toSeq ++
       m.defaultPool.map(pl => ("default_pool", pl.toLong)).toSeq ++
-      (if (m.pqResidual) Seq(("pq_residual", 1L)) else Nil) ++
-      (if (m.rotation.isDefined) Seq(("pq_opq", 1L)) else Nil) ++
+      Seq(("pq_residual", 1L), ("pq_opq", 1L)) ++
       (if (m.budgetBound) Seq(("pq_budget_bound", 1L)) else Nil) ++
-      (if (m.bqMean.isDefined) Seq(("bq_centered", 1L)) else Nil) ++
-      m.lshBits.map(b => ("lsh_bits", b.toLong)).toSeq ++
+      Seq(("bq_centered", 1L), ("lsh_bits", m.lshBits.toLong)) ++
       m.defaultBqPool.map(bp => ("default_bq_pool", bp.toLong)).toSeq ++
       (if (m.bqBudgetBound) Seq(("bq_budget_bound", 1L)) else Nil) ++
       m.lshBands.map(b => ("lsh_bands", b.toLong)).toSeq ++
@@ -287,17 +265,7 @@ object VectorIndex {
   private def writeParamsAt(spark: SparkSession, metaDir: String,
                             params: Seq[(String, Long)]): Unit = {
     import spark.implicits._
-    if (params.nonEmpty)
-      params.toDF("param", "value").write.mode("overwrite").parquet(s"$metaDir/params")
-    else {
-      // on-disk flags must match the codes on disk: a rebuild from a
-      // previously-calibrated/residual meta to a legacy one would
-      // otherwise leave every OTHER session (metaCache evicted by the
-      // caller) re-reading stale flags and mis-serving raw codes
-      val fs = new org.apache.hadoop.fs.Path(metaDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$metaDir/params"), true)
-    }
+    params.toDF("param", "value").write.mode("overwrite").parquet(s"$metaDir/params")
   }
 
   /** Commit `params` together with `tables` (already written at their
@@ -470,8 +438,7 @@ object VectorIndex {
     // flag fires only when the rank quantile itself exceeds the cap.
     val tBq = System.nanoTime()
     val qw = queries.select(col("q_id"),
-      Quantization.bqWord(meta.bqMean.fold(col("q_emb"))(mu =>
-        zip_with(col("q_emb"), typedLit(mu), (v, m) => v - m))).as("qw"))
+      Quantization.bqWord(centered(col("q_emb"), meta.bqMean)).as("qw"))
     val hams = vectors(spark, p, primaryOnly = true)
       .select(col("vec_id"), col("bq_word"))
       .crossJoin(broadcast(qw))
@@ -521,15 +488,12 @@ object VectorIndex {
     // rewrite postings forever. One bounded job: the truth pairs
     // (queries × K rows) broadcast against one corpus projection.
     val tBands = System.nanoTime()
-    val (lshBands, lshBound) = meta.lshBits match {
-      case Some(_) if !measureLshBands =>
-        // the in-place knob refresh (recalibrate) pins the band count
-        // to the persisted postings — measuring an answer only to
-        // discard it would cost a corpus-projection join per cycle
-        (meta.lshBands, meta.lshBudgetBound)
-      case Some(r) => measuredLshBands(spark, p, meta, r, queries, truth)
-      case None => (None, false)
-    }
+    // the in-place knob refresh (recalibrate) pins the band count to
+    // the persisted postings — measuring an answer only to discard it
+    // would cost a corpus-projection join per cycle
+    val (lshBands, lshBound) =
+      if (measureLshBands) measuredLshBands(spark, p, meta, meta.lshBits, queries, truth)
+      else (meta.lshBands, meta.lshBudgetBound)
     logStage("calibrate-lsh-bands", tBands)
     meta.copy(defaultNProbe = Some(np), defaultPool = Some(pool), budgetBound = bound,
       defaultBqPool = Some(bqPool), bqBudgetBound = bqBound,
@@ -595,14 +559,11 @@ object VectorIndex {
     */
   private def measuredLshBands(spark: SparkSession, p: String, meta: Meta,
       r: Int, queries: DataFrame, truth: DataFrame): (Option[Int], Boolean) = {
-    val centEmb = meta.bqMean.fold(col("embedding"))(mu =>
-      zip_with(col("embedding"), typedLit(mu), (v, m) => v - m))
-    val centQ = meta.bqMean.fold(col("q_emb"))(mu =>
-      zip_with(col("q_emb"), typedLit(mu), (v, m) => v - m))
     val pairProbs = vectors(spark, p, primaryOnly = true)
       .select(col("vec_id"), col("embedding"))
       .join(broadcast(truth.join(broadcast(queries), "q_id")), "vec_id")
-      .select(vec.cosine(centQ, centEmb).cast("double").as("c"))
+      .select(vec.cosine(centered(col("q_emb"), meta.bqMean),
+        centered(col("embedding"), meta.bqMean)).cast("double").as("c"))
       .collect().map { row =>
         val c = math.max(-1.0, math.min(1.0, row.getDouble(0)))
         1.0 - math.acos(c) / math.Pi
@@ -639,41 +600,35 @@ object VectorIndex {
     * corpus re-encode of [[retrain]] (~570 s there). The centering
     * mean is KEPT — re-deriving `mu` would invalidate the stored BQ
     * words, which is retrain territory; drift of the mean itself
-    * shows up in the measured pRand and is absorbed by width. Layouts
-    * without the adaptive banding (`lsh_bits` + `bq_centered`) are
-    * returned unchanged — there is nothing to re-derive.
+    * shows up in the measured pRand and is absorbed by width.
     */
   def reband(spark: SparkSession, home: String): Meta =
     graft.sources.WriterLease.exclusive(spark, home) {
       val p = IndexAlias.resolve(spark, home)
       val meta = readMeta(spark, p)
-      (meta.lshBits, meta.bqMean) match {
-        case (Some(_), Some(mu)) =>
-          val prim = vectors(spark, p, primaryOnly = true)
-            .select(col("vec_id"), col("embedding"))
-          val live = prim.count()
-          val newBits = Ann.lshBitsFor(live, centeredPRand(prim, mu))
-          val (queries, truth, _) = calibrationTruth(spark, prim)
-          val (newBands, bound) =
-            measuredLshBands(spark, p, meta, newBits, queries, truth)
-          val newMeta = meta.copy(lshBits = Some(newBits),
-            lshBands = newBands.orElse(meta.lshBands), lshBudgetBound = bound)
-          val tLsh = System.nanoTime()
-          writeLshTable(prim, newMeta, graft.sources.LayoutRewrite.aside(
-            new org.apache.hadoop.fs.Path(p), "lsh").toString, "overwrite")
-          // the postings and the params describing their banding swap
-          // in ONE commit
-          commitWithParams(spark, home, p, paramsOf(newMeta), Seq("lsh"))
-          logStage("reband-postings", tLsh)
-          metaCache.put(IndexCache.sessionKey(spark) + "#" + p, newMeta)
-          newMeta
-        case _ => meta
-      }
+      val prim = vectors(spark, p, primaryOnly = true)
+        .select(col("vec_id"), col("embedding"))
+      val live = prim.count()
+      val newBits = Ann.lshBitsFor(live, centeredPRand(prim, meta.bqMean))
+      val (queries, truth, _) = calibrationTruth(spark, prim)
+      val (newBands, bound) =
+        measuredLshBands(spark, p, meta, newBits, queries, truth)
+      val newMeta = meta.copy(lshBits = newBits,
+        lshBands = newBands.orElse(meta.lshBands), lshBudgetBound = bound)
+      val tLsh = System.nanoTime()
+      writeLshTable(prim, newMeta, graft.sources.LayoutRewrite.aside(
+        new org.apache.hadoop.fs.Path(p), "lsh").toString, "overwrite")
+      // the postings and the params describing their banding swap in
+      // ONE commit
+      commitWithParams(spark, home, p, paramsOf(newMeta), Seq("lsh"))
+      logStage("reband-postings", tLsh)
+      metaCache.put(IndexCache.sessionKey(spark) + "#" + p, newMeta)
+      newMeta
     }
 
   /** Band-count cost cap for calibration rung 4: postings rows (and
     * append cost) scale linearly with the band count, so the cap
-    * bounds the table at 4× the 16-band legacy footprint. Past it the
+    * bounds the table at 4× the 16-band default footprint. Past it the
     * geometry itself (no contrast between neighbor and random angles
     * on the centered cloud) is the limit and `lsh_budget_bound` is
     * persisted instead of more tables.
@@ -698,8 +653,8 @@ object VectorIndex {
 
   /** Explicit caller pool wins; otherwise the calibrated persisted
     * default ([[calibrate]] rung 2); otherwise the constant
-    * [[Quantization.PqRerankPool]] (small geometries, legacy
-    * layouts).
+    * [[Quantization.PqRerankPool]] (small geometries and
+    * uncalibrated builds).
     */
   private def resolvePool(meta: Meta, pool: Int): Int =
     if (pool > 0) pool else meta.defaultPool.getOrElse(Quantization.PqRerankPool)
@@ -788,26 +743,19 @@ object VectorIndex {
     val assigned = df.select(col("*"), posexplode(
       Ann.spillClusters(col("embedding"), meta.centroids, Ann.SpillAssign))
       .as(Seq("assign_rank", "cluster_id")))
-    // residual layouts encode v − c of the row's OWN (exploded)
-    // cluster — each spill copy carries the residual of the list it
-    // lives in, so per-(query, probed-list) ADC is exact for every
-    // copy it meets; OPQ layouts additionally rotate the residual
-    // (codes live in the rotated frame end to end)
-    val resid =
-      if (meta.pqResidual)
-        zip_with(col("embedding"),
-          element_at(typedLit(meta.centroids), col("cluster_id") + 1),
-          (v, c) => v - c)
-      else col("embedding")
-    val pqInput =
-      meta.rotation.fold(resid)(r => graft.functions.matrixops.matVec(resid, r))
-    // centered layouts store sign(v − μ): a mean-dominated cloud's
-    // raw sign bits correlate corpus-wide (measured recall 0.53)
-    val bqInput = meta.bqMean.fold(col("embedding"))(mu =>
-      zip_with(col("embedding"), typedLit(mu), (v, m) => v - m))
+    // codes encode R·(v − c) of the row's OWN (exploded) cluster —
+    // each spill copy carries the residual of the list it lives in,
+    // so per-(query, probed-list) ADC is exact for every copy it
+    // meets, and the rotated frame is the codes' frame end to end
+    val resid = zip_with(col("embedding"),
+      element_at(typedLit(meta.centroids), col("cluster_id") + 1),
+      (v, c) => v - c)
+    val pqInput = graft.functions.matrixops.matVec(resid, meta.rotation)
+    // sign(v − μ): a mean-dominated cloud's raw sign bits correlate
+    // corpus-wide (measured recall 0.53)
     val enc = Quantization.quantize(
         Quantization.pqEncodeCol(assigned, meta.codebooks, pqInput), dropEmb = false)
-      .withColumn("bq_word", Quantization.bqWord(bqInput))
+      .withColumn("bq_word", Quantization.bqWord(centered(col("embedding"), meta.bqMean)))
       .select(col("vec_id"), col("embedding"), col("label"), col("pq_codes"),
         col("sq8"), col("sq8_min"), col("sq8_scale"), col("bq_word"),
         col("cluster_id"), col("assign_rank"))
@@ -838,16 +786,12 @@ object VectorIndex {
       .write.mode(mode).partitionBy("band_id").parquet(table)
 
   /** Exploded (band_id, bucket) signature keys for `embedding` /
-    * `q_emb` under a layout's banding config. Adaptive layouts
-    * (`lsh_bits`) hash MEAN-CENTERED projections over the
-    * corpus-width band keys ([[Ann.lshBitsFor]]): centering breaks
+    * `q_emb` under a layout's banding: MEAN-CENTERED projections over
+    * `lsh_bits`-wide band keys ([[Ann.lshBitsFor]]). Centering breaks
     * the corpus-wide bucket collapse of a mean-dominated cloud (every
     * vector shares the mean's sign pattern — the measured disk-
     * filling candidate explosion at the 5M-row aniso corpus), and the
     * log₂(n)-width keys keep expected bucket occupancy constant.
-    * Legacy layouts (no `lsh_bits`) hash the floor banding —
-    * [[Ann.LshBands]] × [[Ann.BitsPerBand]] — uncentered, through the
-    * same native band-bucket expression.
     */
   private def lshKeysOf(meta: Meta, embCol: Column): Column = {
     // band count from the calibrated meta (rung 4); the seeded plane
@@ -855,14 +799,11 @@ object VectorIndex {
     // hash identically to the 16-band layout's bands — so a reader on
     // a stale 16-band meta probes a correct subset of a wider table,
     // degrading recall, never correctness
-    val (bits, bands, keyed) = meta.lshBits match {
-      case Some(bits) =>
-        (bits, meta.lshBands.getOrElse(Ann.LshBands), meta.bqMean.fold(embCol)(mu =>
-          zip_with(embCol, typedLit(mu), (v, m) => v - m)))
-      case None => (Ann.BitsPerBand, Ann.LshBands, embCol)
-    }
+    val bits = meta.lshBits
+    val bands = meta.lshBands.getOrElse(Ann.LshBands)
     explode(zip_with(
-      graft.functions.matrixops.lshBandBuckets(keyed, Ann.lshPlanesFor(bits, bands), bits),
+      graft.functions.matrixops.lshBandBuckets(centered(embCol, meta.bqMean),
+        Ann.lshPlanesFor(bits, bands), bits),
       sequence(lit(0), lit(bands - 1)),
       (bucket, band) => struct(band.cast("int").as("band_id"),
         bucket.cast("int").as("bucket"))))
@@ -942,32 +883,33 @@ object VectorIndex {
         .map { case (_, rows) =>
           rows.sortBy(_.getInt(1)).map(_.getSeq[Float](2)).toSeq
         }
-      // params is optional: absent on layouts written before
-      // build-time probe calibration / residual PQ existed
-      val paramsPath = new org.apache.hadoop.fs.Path(s"$path/meta/params")
+      // one format is served: a layout whose params or tables do not
+      // describe residual OPQ codes, centered BQ and adaptive banding
+      // is refused, never read as something else
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val tables = Seq("params", "rotation", "bqmean")
+        .filterNot(t => fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta/$t")))
       val params: Map[String, Long] =
-        if (!paramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(paramsPath))
-          Map.empty
-        else spark.read.schema(paramsSchema).parquet(paramsPath.toString)
+        if (tables.contains("params")) Map.empty
+        else spark.read.schema(paramsSchema).parquet(s"$path/meta/params")
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val rotation: Option[Seq[Seq[Float]]] =
-        if (!params.get("pq_opq").contains(1L)) None
-        else Some(spark.read.schema(rotationSchema)
-          .parquet(s"$path/meta/rotation")
-          .orderBy(col("row")).collect().map(_.getSeq[Float](1)).toSeq)
-      val bqMean: Option[Seq[Float]] =
-        if (!params.get("bq_centered").contains(1L)) None
-        else Some(spark.read.schema(rotationSchema)
-          .parquet(s"$path/meta/bqmean")
-          .collect().head.getSeq[Float](1))
-      Meta(cents, cbs,
+      val flags = Seq("pq_residual", "pq_opq", "bq_centered")
+        .filterNot(f => params.get(f).contains(1L)) ++
+        Seq("lsh_bits").filterNot(params.contains)
+      if (tables.nonEmpty || flags.nonEmpty)
+        throw new IllegalStateException(s"$path is not a residual-OPQ vector index " +
+          s"layout (missing ${(tables.map("meta/" + _) ++ flags).mkString(", ")}); " +
+          "rebuild it with VectorIndex.buildFrom")
+      val rotation = spark.read.schema(rotationSchema).parquet(s"$path/meta/rotation")
+        .orderBy(col("row")).collect().map(_.getSeq[Float](1)).toSeq
+      val bqMean = spark.read.schema(rotationSchema).parquet(s"$path/meta/bqmean")
+        .collect().head.getSeq[Float](1)
+      Meta(cents, cbs, rotation, bqMean,
+        params("lsh_bits").toInt,
         params.get("default_nprobe").map(_.toInt),
-        params.get("pq_residual").contains(1L),
-        rotation,
         params.get("default_pool").map(_.toInt),
         params.get("pq_budget_bound").contains(1L),
-        bqMean,
-        params.get("lsh_bits").map(_.toInt),
         params.get("default_bq_pool").map(_.toInt),
         params.get("bq_budget_bound").contains(1L),
         params.get("lsh_bands").map(_.toInt),
@@ -988,12 +930,12 @@ object VectorIndex {
     val meta = readMeta(spark, rawPath)
     (Seq(
       "nlist" -> meta.centroids.length.toLong,
-      "pq_residual" -> (if (meta.pqResidual) 1L else 0L),
-      "pq_opq" -> (if (meta.rotation.isDefined) 1L else 0L),
+      "pq_residual" -> 1L,
+      "pq_opq" -> 1L,
       "pq_budget_bound" -> (if (meta.budgetBound) 1L else 0L),
       "bq_budget_bound" -> (if (meta.bqBudgetBound) 1L else 0L),
       "lsh_budget_bound" -> (if (meta.lshBudgetBound) 1L else 0L),
-      "bq_centered" -> (if (meta.bqMean.isDefined) 1L else 0L)) ++
+      "bq_centered" -> 1L) ++
       meta.defaultNProbe.map(np => "default_nprobe" -> np.toLong) ++
       meta.defaultPool.map(pl => "default_pool" -> pl.toLong) ++
       meta.defaultBqPool.map(bp => "default_bq_pool" -> bp.toLong) ++
@@ -1169,17 +1111,21 @@ object VectorIndex {
         .join(broadcast(probes), "cluster_id"), k)
   }
 
-  /** Flat PQ from rest: ADC over the stored M-byte codes (the scan
-    * reads vec_id + codes — 32× narrower than floats), exact rerank
-    * of the top pool from the stored floats.
+  /** Flat PQ from rest: scores the reconstructions of the stored
+    * M-byte codes, exact rerank of the top pool from the stored
+    * floats. A flat scan meets every list, so no per-query ADC table
+    * exists (each list's codes live in a different residual frame):
+    * v̂ = Rᵀ·decode(codes) + c is reconstructed ONCE inside the served
+    * view — the storage scan reads codes + cluster_id, never the
+    * floats — and ranked by exact L2 against v̂ (what ADC
+    * decomposes).
     *
-    * Residual-layout caveat: the served view below MATERIALIZES the
-    * reconstructed full-width floats in session memory and scores
-    * exact L2 per (query, vector) — the STORAGE scan stays narrow
-    * (codes + cluster_id), but the in-memory footprint and per-pair
-    * compute are float-width, not code-width. For corpora too large
-    * to pin, prefer [[searchIvfPq]] (per-list ADC keeps both narrow)
-    * or pass `cached = false` to trade recompute for memory.
+    * Caveat: the served view MATERIALIZES the reconstructed
+    * full-width floats in session memory and scores exact L2 per
+    * (query, vector) — the in-memory footprint and per-pair compute
+    * are float-width, not code-width. For corpora too large to pin,
+    * prefer [[searchIvfPq]] (per-list ADC keeps both narrow) or pass
+    * `cached = false` to trade recompute for memory.
     */
   def searchPq(spark: SparkSession, rawPath: String, queries: DataFrame,
                k: Int = Quantization.K,
@@ -1187,43 +1133,22 @@ object VectorIndex {
                cached: Boolean = true): DataFrame = {
     val path = IndexAlias.resolve(spark, rawPath)
     val meta = readMeta(spark, path)
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc_dist").asc, col("vec_id"))
-    // residual layouts: a flat scan meets every list, so a per-query
-    // ADC table cannot exist (each list's codes live in a different
-    // residual frame). Reconstruct v̂ = decode(codes) + c ONCE inside
-    // the served view — the scan still reads codes + cluster_id (the
-    // narrow representation), never the floats — and rank by exact
-    // L2 against v̂ (= what ADC decomposes); the raw-code path keeps
-    // the classic per-query table.
-    val scored =
-      if (meta.pqResidual)
-        served(spark, path, "pqrecon", cached) {
-          // OPQ codes decode in the rotated frame; Rᵀ (orthogonal
-          // inverse) carries ŷ back before the centroid re-centers it
-          val decoded = Quantization.pqReconstruct(col("pq_codes"), meta.codebooks)
-          val residHat = meta.rotation.fold(decoded)(r =>
-            graft.functions.matrixops.matVec(decoded, r.transpose))
-          vectors(spark, path, primaryOnly = true)
-            .select(col("vec_id"), col("cluster_id"), col("pq_codes"))
-            .withColumn("recon", zip_with(
-              residHat,
-              element_at(typedLit(meta.centroids), col("cluster_id") + 1),
-              (r, c) => r + c))
-            .select(col("vec_id"), col("recon"))
-        }
-          .crossJoin(broadcast(queries.select(col("q_id"), col("q_emb"))))
-          .select(col("q_id"), col("vec_id"),
-            vec.l2(col("q_emb"), col("recon")).as("adc_dist"))
-      else {
-        val q = queries.withColumn("adc",
-          Quantization.adcTable(col("q_emb"), meta.codebooks, absolute = true))
-        served(spark, path, "pq", cached) {
-          vectors(spark, path, primaryOnly = true)
-            .select(col("vec_id"), col("pq_codes"))
-        }
-          .crossJoin(broadcast(q.select(col("q_id"), col("adc"))))
-          .select(col("q_id"), col("vec_id"), Quantization.adcDist.as("adc_dist"))
-      }
+    val scored = served(spark, path, "pqrecon", cached) {
+      // codes decode in the rotated frame; Rᵀ (orthogonal inverse)
+      // carries ŷ back before the centroid re-centers it
+      val decoded = Quantization.pqReconstruct(col("pq_codes"), meta.codebooks)
+      val residHat = graft.functions.matrixops.matVec(decoded, meta.rotation.transpose)
+      vectors(spark, path, primaryOnly = true)
+        .select(col("vec_id"), col("cluster_id"), col("pq_codes"))
+        .withColumn("recon", zip_with(
+          residHat,
+          element_at(typedLit(meta.centroids), col("cluster_id") + 1),
+          (r, c) => r + c))
+        .select(col("vec_id"), col("recon"))
+    }
+      .crossJoin(broadcast(queries.select(col("q_id"), col("q_emb"))))
+      .select(col("q_id"), col("vec_id"),
+        vec.l2(col("q_emb"), col("recon")).as("adc_dist"))
     // pool selection as a bounded aggregate (membership identical to
     // the arn window: adc asc ≡ -adc desc, vec_id tiebreak; ADC
     // distances are finite so negation is exact) — nothing sorts the
@@ -1246,28 +1171,23 @@ object VectorIndex {
     * calibration: partition-pruned code scan of probed lists,
     * per-(query, probed-list) ADC, spill copies collapsed in a
     * combinable min BEFORE any ranking (copies must never occupy
-    * pool slots; min, because a residual layout's copies carry
-    * per-list codes). Returns (q_id, vec_id, adc_dist).
+    * pool slots; min, because copies carry per-list codes). Returns
+    * (q_id, vec_id, adc_dist).
     */
   private def ivfPqScored(spark: SparkSession, path: String, meta: Meta,
                           queries: DataFrame, nprobe: Int,
                           cached: Boolean): DataFrame = {
-    // residual layouts build the ADC table per (query, probed list)
-    // on q − c — the table then scores ||（q−c) − r̂||² = ||q − v̂||²
-    // against that list's residual codes (the FAISS IVF_PQ serve
-    // shape); the probe frame already carries one row per
-    // (query, cluster), so the table lands exactly where its list's
-    // candidates join
-    val qResid =
-      if (meta.pqResidual)
-        zip_with(col("q_emb"),
-          element_at(typedLit(meta.centroids), col("cluster_id") + 1),
-          (q, c) => q - c)
-      else col("q_emb")
+    // the ADC table is built per (query, probed list) on q − c — it
+    // then scores ||(q−c) − r̂||² = ||q − v̂||² against that list's
+    // residual codes (the FAISS IVF_PQ serve shape); the probe frame
+    // already carries one row per (query, cluster), so the table
+    // lands exactly where its list's candidates join
+    val qResid = zip_with(col("q_emb"),
+      element_at(typedLit(meta.centroids), col("cluster_id") + 1),
+      (q, c) => q - c)
     // OPQ: rotate the query residual into the codes' frame — R is
     // orthogonal, so rotated ADC distances ARE true residual distances
-    val qSide =
-      meta.rotation.fold(qResid)(r => graft.functions.matrixops.matVec(qResid, r))
+    val qSide = graft.functions.matrixops.matVec(qResid, meta.rotation)
     val probes = Ann.probeFrame(queries, meta.centroids, nprobe)
       .withColumn("adc",
         Quantization.adcTable(qSide, meta.codebooks, absolute = true))
@@ -1365,8 +1285,8 @@ object VectorIndex {
 
   /** BQ from rest: Hamming prefilter on the stored sign words (8
     * bytes per vector read), exact rerank from the stored floats.
-    * Centered layouts (`bq_centered`) hash sign(q − μ) on the query
-    * side with the SAME persisted μ the stored words used. The
+    * The query side hashes sign(q − μ) with the SAME persisted μ the
+    * stored words used. The
     * default pool is the build-calibrated `default_bq_pool`
     * (calibration rung 3) when the layout carries one — the constant
     * [[Quantization.BqPool]] served 0.641 recall at the aniso sf100
@@ -1380,9 +1300,8 @@ object VectorIndex {
     val meta = readMeta(spark, path)
     val servedPool =
       if (pool > 0) pool else meta.defaultBqPool.getOrElse(Quantization.BqPool)
-    val qIn = meta.bqMean.fold(col("q_emb"))(mu =>
-      zip_with(col("q_emb"), typedLit(mu), (v, m) => v - m))
-    val q = queries.select(col("q_id"), Quantization.bqWord(qIn).as("qw"))
+    val q = queries.select(col("q_id"),
+      Quantization.bqWord(centered(col("q_emb"), meta.bqMean)).as("qw"))
     // Hamming pool as a bounded aggregate (hamming asc ≡ -hamming
     // desc on exact small integers; tie by vec_id matches the former
     // hrn window) — the corpus × query Hamming frame is never sorted
@@ -1486,15 +1405,8 @@ object VectorIndex {
 
   /** Session-scoped at-rest index per corpus dir (built once at first
     * use — the ingest-time artifact all six search families then
-    * serve from; mirrors the text index's session layout).
+    * serve from).
     */
-  private val sessionPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def sessionIndexPath(spark: SparkSession, sfDir: String): String =
-    sessionPaths.computeIfAbsent(IndexCache.sessionKey(spark) + "#" + sfDir, { _ =>
-      val p = IndexCache.tempDir("graft-vecindex")
-      write(spark, sfDir, p)
-      p
-    })
+    IndexCache.sessionLayout(spark, "vecindex", sfDir)(write(spark, sfDir, _))
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, VectorSearch}
+import graft.operators.{Ann, VectorIndex, VectorSearch}
 
 class AnnSpec extends SparkSpec {
 
@@ -33,10 +33,12 @@ class AnnSpec extends SparkSpec {
 
   test("filtered ANN planner switches strategy on filter cardinality") {
     import org.apache.spark.sql.functions.col
+    def filtered(filter: org.apache.spark.sql.Column) =
+      VectorIndex.searchIvfFiltered(spark, VectorIndex.sessionIndexPath(spark, sfDir),
+        VectorSearch.querySet(spark, sfDir), filter, bruteForceLimit = 100)
     // selective filter (one label ≈ 1/10 of the corpus) → brute force,
     // and the result is EXACT over the filtered subset
-    val (p1, selective) = Ann.filteredIvfKnn(spark, sfDir,
-      col("label") === 3, bruteForceLimit = 100)
+    val (p1, selective) = filtered(col("label") === 3)
     assert(p1 == "brute_force")
     val got = selective.collect()
     assert(got.nonEmpty)
@@ -46,8 +48,7 @@ class AnnSpec extends SparkSpec {
     assert(topk(got) == exactFiltered)
 
     // broad filter (90% of the corpus) → the probe path, bounded recall
-    val (p2, broad) = Ann.filteredIvfKnn(spark, sfDir,
-      col("label") =!= 3, bruteForceLimit = 100)
+    val (p2, broad) = filtered(col("label") =!= 3)
     assert(p2 == "ivf_probe")
     val exactBroad = topk(VectorSearch.collection(spark, sfDir)
       .search(VectorSearch.querySet(spark, sfDir), Ann.K,

@@ -50,4 +50,23 @@ class LibraryHygieneSpec extends SparkSpec {
     assert(mains.nonEmpty, "the scan found no mains at all")
     assert(extra.isEmpty, s"dev mains outside the kept entry points: ${extra.mkString(", ")}")
   }
+
+  test("library packages read no environment variables") {
+    // tuning lives in arguments and Spark conf; only the root package
+    // (the mains and GraftSession) reads the process environment
+    val envRead = """\bsys\.env\b|System\.getenv""".r
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val pkgs = Seq("operators", "api", "sources", "functions", "streaming", "pipelines")
+      .map(p => new java.io.File(s"src/main/scala/graft/$p"))
+    assert(pkgs.forall(_.isDirectory), s"run from the project root: ${pkgs.mkString(", ")}")
+    val hits = pkgs.flatMap(files).filter(_.getName.endsWith(".scala")).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toList finally src.close()
+      lines.zipWithIndex.collect {
+        case (line, i) if envRead.findFirstIn(line).isDefined => s"${f.getName}:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, s"environment reads in library code: ${hits.mkString(", ")}")
+  }
 }

@@ -223,7 +223,7 @@ class MaintainSpec extends SparkSpec {
     }
     val corpusA = uniformRows(10000, 0L).toDF("vec_id", "embedding", "label")
     VectorIndex.buildRotating(spark, corpusA, home)
-    val bits0 = VectorIndex.readMeta(spark, home).lshBits.get
+    val bits0 = VectorIndex.readMeta(spark, home).lshBits
     val r0 = ScaleOps.maintain(spark, "vector", home)
     assert(r0.action == "none", s"fresh uniform layout must be within policy: $r0")
     // append a CONCENTRATED batch of 4x the mass: the mixed corpus's
@@ -265,7 +265,7 @@ class MaintainSpec extends SparkSpec {
     val m2 = VectorIndex.reband(spark, home)
     assert(IndexAlias.resolve(spark, home) == gen0,
       "reband is in-place: no generation may land")
-    assert(m2.lshBits.get >= bits0 + ScaleOps.MaintenancePolicy().lshBitsDriftSlack,
+    assert(m2.lshBits >= bits0 + ScaleOps.MaintenancePolicy().lshBitsDriftSlack,
       s"reband must re-derive the width the drift report measured: $m2 vs $bits0")
     assert(vectorFiles() == vecsBefore,
       "reband must not rewrite a single vectors/ file")

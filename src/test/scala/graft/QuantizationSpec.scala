@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Quantization, VectorSearch}
+import graft.operators.{Quantization, VectorIndex, VectorSearch}
 import org.apache.spark.sql.functions._
 
 class QuantizationSpec extends SparkSpec {
@@ -20,10 +20,11 @@ class QuantizationSpec extends SparkSpec {
   }
 
   test("q_pq_knn: PQ codes are compact, ADC+rerank recall vs exact L2 is high") {
-    val codebooks = Quantization.trainPqCodebooks(spark, sfDir)
+    val path = VectorIndex.sessionIndexPath(spark, sfDir)
+    val codebooks = VectorIndex.readMeta(spark, path).codebooks
     assert(codebooks.length == Quantization.M)
     assert(codebooks.forall(_.length == Quantization.KStar))
-    val enc = Quantization.pqEncode(Tables.embeddings(spark, sfDir), codebooks)
+    val enc = spark.read.parquet(s"$path/vectors")
     assert(enc.schema("pq_codes").dataType.catalogString == "array<tinyint>")
 
     def topk(rows: Array[org.apache.spark.sql.Row]) =

@@ -218,26 +218,23 @@ class VectorIndexSpec extends SparkSpec {
     assert(after.select("vec_id").distinct().collect().map(_.getLong(0)).toSeq == Seq(ids(1)))
   }
 
-  test("a rebuild to a flagless meta deletes the params it no longer describes") {
-    // on-disk flags must match the codes on disk: a legacy rebuild
-    // over a calibrated/residual layout that left its params behind
-    // would have every other session serve raw codes as encoded
-    import org.apache.hadoop.fs.Path
+  test("readMeta refuses a layout whose meta/params lacks pq_residual") {
+    // one at-rest format is served: a layout whose params do not flag
+    // residual codes must fail loudly, naming the path, never be
+    // served as if its codes meant something else
+    import spark.implicits._
     val corpus = Tables.embeddings(spark, sfDir)
-    val p2 = graft.operators.IndexCache.tempDir("graft-vi-legacy") + "/idx"
-    val meta = VectorIndex.buildFrom(spark, corpus, p2, calibrate = false)
-    val fs = new Path(p2).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val params = new Path(s"$p2/meta/params")
-    assert(fs.exists(params), "adaptive fixture must carry params")
-    VectorIndex.writeCorpus(spark, corpus, p2,
-      meta.copy(defaultNProbe = None, defaultPool = None, pqResidual = false,
-        rotation = None, budgetBound = false, bqMean = None, lshBits = None,
-        defaultBqPool = None, bqBudgetBound = false, lshBands = None,
-        lshBudgetBound = false))
-    assert(!fs.exists(params), "legacy rebuild must leave no params")
+    val p2 = graft.operators.IndexCache.tempDir("graft-vi-flagless") + "/idx"
+    VectorIndex.buildFrom(spark, corpus, p2, calibrate = false)
+    val params = spark.read.parquet(s"$p2/meta/params")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(params.exists(_._1 == "pq_residual"), s"fixture must flag residual codes: $params")
+    params.filterNot(_._1 == "pq_residual").toDF("param", "value")
+      .write.mode("overwrite").parquet(s"$p2/meta/params")
     VectorIndex.invalidate(spark, p2)
-    val legacy = VectorIndex.readMeta(spark, p2)
-    assert(legacy.lshBits.isEmpty && !legacy.pqResidual,
-      "stale params would flag raw codes as encoded")
+    val err = intercept[IllegalStateException](VectorIndex.readMeta(spark, p2))
+    assert(err.getMessage.contains(p2) && err.getMessage.contains("pq_residual"), err.getMessage)
+    intercept[IllegalStateException](VectorIndex.searchPq(spark, p2,
+      corpus.limit(2).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))))
   }
 }
