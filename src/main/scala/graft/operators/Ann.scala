@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
 import graft.functions.vec
 
 /** Approximate nearest neighbor — the scale path behind the
@@ -71,18 +70,6 @@ object Ann {
     */
   val SpillAssign = 2
 
-  /** Trained centroids per corpus dir. Training is deterministic, so
-    * caching is pure; semantically this is the real index lifecycle —
-    * IVF centroids are built once at ingest and reused by every query
-    * (Milvus/FAISS never retrain per search), so repeated operator
-    * calls in one session must not re-collect the sample.
-    */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Float]]]()
-
-  private[operators] def trainCentroids(spark: SparkSession, sfDir: String): Seq[Seq[Float]] =
-    centroidCache.computeIfAbsent(sfDir, _ => trainCentroidsUncached(spark, sfDir))
-
   /** Hard cap on rows collected to the driver for index training —
     * the sample is a fixed SIZE, not a fixed fraction, so training
     * cost (and driver memory) is genuinely independent of corpus
@@ -90,26 +77,23 @@ object Ann {
     */
   val TrainSampleCap = 100000
 
-  /** Deterministic driver-side Lloyd k-means over a fixed-size
-    * sample: every 3rd vector by id, capped at [[TrainSampleCap]]
-    * rows. The orderBy+limit pair compiles to TakeOrderedAndProject
-    * (a per-partition top-k merge, no global sort), so the scan stays
-    * one pass and the collect is bounded regardless of corpus size.
-    * Vectors are L2-normalized first (spherical k-means): the search
-    * metric is cosine, and on unit vectors L2 ordering ≡ cosine
-    * ordering, so clusters align with what queries retrieve.
+  /** The one training sample of a (vec_id, embedding) frame: every
+    * 3rd vector by id, capped at [[TrainSampleCap]] rows, raw
+    * (unnormalized). The orderBy+limit pair compiles to
+    * TakeOrderedAndProject (a per-partition top-k merge, no global
+    * sort), so the scan stays one pass and the collect is bounded
+    * regardless of corpus size. [[VectorIndex.buildFrom]] trains the
+    * centroids, the OPQ rotation, the residual codebooks and the BQ
+    * mean from this one array — IVFADC's single learning set.
     */
-  private def trainCentroidsUncached(spark: SparkSession, sfDir: String): Seq[Seq[Float]] =
-    trainCentroidsFrom(Tables.embeddings(spark, sfDir))
-
-  /** Train from any (vec_id, embedding) frame — the path
-    * [[VectorIndex.buildFrom]] uses for user collections; the sfDir
-    * entry point above adds the per-corpus cache. List count follows
-    * the corpus-size policy ([[nlistFor]] off one count()); small
-    * corpora keep the measured 16-list geometry bit-for-bit.
-    */
-  private[graft] def trainCentroidsFrom(corpus: DataFrame): Seq[Seq[Float]] =
-    trainCentroidsFrom(corpus, nlistFor(corpus.count()))
+  private[graft] def trainSample(corpus: DataFrame): Array[Array[Double]] =
+    corpus
+      .filter(col("vec_id") % 3 === 0)
+      .orderBy(col("vec_id"))
+      .limit(TrainSampleCap)
+      .select(col("embedding"))
+      .collect()
+      .map(r => numericArray(r.getSeq[Any](0)))
 
   /** Embedding row → double[], whatever the column's numeric element
     * type. Every Catalyst expression in the vector family accepts
@@ -126,8 +110,13 @@ object Ann {
       case other     => sys.error(s"non-numeric embedding element: $other")
     }.toArray
 
-  /** Train a `nlist`-list geometry from the corpus's deterministic
-    * bounded sample. Above [[HierarchicalNList]] lists the flat Lloyd
+  /** Train a `nlist`-list geometry from a [[trainSample]]: spherical
+    * k-means over an L2-normalized copy — the search metric is
+    * cosine, and on unit vectors L2 ordering ≡ cosine ordering, so
+    * clusters align with what queries retrieve. List count is the
+    * caller's ([[nlistFor]] of the corpus count, or an explicit one);
+    * small corpora keep the measured 16-list geometry bit-for-bit.
+    * Above [[HierarchicalNList]] lists the flat Lloyd
     * loop's sample·nlist·dim·iters cost is replaced by TWO-LEVEL
     * k-means (the recursive-k-means trick of large-nlist ANN
     * builders): ~√nlist coarse cells, then per-cell sub-k-means with
@@ -136,26 +125,21 @@ object Ann {
     * flat concatenation of sub-centroids IS the geometry; assignment
     * and probing are geometry-agnostic (they read the centroid set).
     */
-  private[graft] def trainCentroidsFrom(corpus: DataFrame, nlist: Int): Seq[Seq[Float]] = {
-    val sample = corpus
-      .filter(col("vec_id") % 3 === 0)
-      .orderBy(col("vec_id"))
-      .limit(TrainSampleCap)
-      .select(col("embedding"))
-      .collect()
-      .map { r =>
-        val v = numericArray(r.getSeq[Any](0))
-        val n = math.sqrt(v.map(x => x * x).sum)
-        if (n == 0) v else v.map(_ / n)
-      }
-    val k = math.min(nlist, sample.length)
+  private[graft] def trainCentroids(sample: Array[Array[Double]], nlist: Int): Seq[Seq[Float]] = {
+    val unit = sample.map { v =>
+      val n = math.sqrt(v.map(x => x * x).sum)
+      if (n == 0) v else v.map(_ / n)
+    }
+    val k = math.min(nlist, unit.length)
+    // IVF sums sequentially (one chunk): the geometry every stored
+    // layout was trained with
     val cents =
-      if (k <= HierarchicalNList) kmeansFlat(sample, k)
+      if (k <= HierarchicalNList) lloyd(unit, k, chunks = 1)
       else {
         val coarseK = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
-        val coarse = kmeansFlat(sample, coarseK)
+        val coarse = lloyd(unit, coarseK, chunks = 1)
         val cells = Array.fill(coarse.length)(Vector.newBuilder[Array[Double]])
-        sample.foreach(v => cells(nearest(v, coarse)) += v)
+        unit.foreach(v => cells(nearest(v, coarse)) += v)
         // sub-centroid budget per cell: proportional to cell mass
         // (mass-balanced lists — exactly the occupancy discipline the
         // aniso measurements pin), ≥1 per non-empty cell, ≤ the
@@ -166,19 +150,22 @@ object Ann {
           if (p.isEmpty) Array.empty[Array[Double]]
           else {
             val ki = math.max(1, math.min(p.length,
-              math.round(k.toDouble * p.length / sample.length).toInt))
-            kmeansFlat(p.toArray, ki)
+              math.round(k.toDouble * p.length / unit.length).toInt))
+            lloyd(p.toArray, ki, chunks = 1)
           }
         }
       }
     cents.map(_.map(_.toFloat).toSeq).toSeq
   }
 
-  /** Flat nlist above which [[trainCentroidsFrom]] switches to
+  /** Flat nlist above which [[trainCentroids]] switches to
     * two-level training (flat cost crosses ~10¹⁰ ops there).
     */
   private[graft] val HierarchicalNList = 64
 
+  /** Nearest centroid by squared L2, ties to the lowest id — the one
+    * assignment kernel of [[lloyd]] and the two-level cell split.
+    */
   private def nearest(v: Array[Double], cents: Array[Array[Double]]): Int = {
     var best = 0; var bestD = Double.MaxValue
     var c = 0
@@ -191,30 +178,56 @@ object Ann {
     best
   }
 
-  /** The deterministic driver-side Lloyd loop (seeded at evenly
-    * spaced sample points, 10 iterations) — the 16-list geometry's
-    * exact original code path, now parameterized by k.
+  /** The deterministic driver-side Lloyd loop of every trained
+    * geometry — IVF lists ([[trainCentroids]]) and each PQ subspace
+    * ([[Quantization.trainPqOpqFrom]]): seeded at evenly spaced
+    * sample points, 10 iterations. The assign step runs on a FIXED
+    * `chunks`-way split of the sample with per-chunk partial sums
+    * merged in chunk order, so a large training uses the driver's
+    * cores while staying bit-deterministic: double addition is
+    * order-sensitive, and the chunk count and merge order never vary
+    * with thread timing. Each caller's chunk count is part of its
+    * trained values, so it is fixed per caller, never derived from
+    * the host.
     */
-  private def kmeansFlat(sample: Array[Array[Double]], k: Int): Array[Array[Double]] = {
+  private[operators] def lloyd(sample: Array[Array[Double]], k: Int,
+                               chunks: Int): Array[Array[Double]] = {
     val n = sample.length
     val dim = sample.head.length
-    // seed: evenly spaced sample points
-    var centroids = Array.tabulate(k)(i => sample((i.toLong * n / k).toInt).clone())
+    var cents = Array.tabulate(k)(i => sample((i.toLong * n / k).toInt).clone())
     for (_ <- 0 until 10) {
+      val snap = cents
+      val parts = new Array[(Array[Array[Double]], Array[Long])](chunks)
+      java.util.stream.IntStream.range(0, chunks).parallel().forEach { ch =>
+        val sums = Array.fill(k)(new Array[Double](dim))
+        val counts = new Array[Long](k)
+        var r = (ch.toLong * n / chunks).toInt
+        val hi = ((ch + 1).toLong * n / chunks).toInt
+        while (r < hi) {
+          val v = sample(r)
+          val best = nearest(v, snap)
+          counts(best) += 1
+          var i = 0
+          while (i < dim) { sums(best)(i) += v(i); i += 1 }
+          r += 1
+        }
+        parts(ch) = (sums, counts)
+      }
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Long](k)
-      sample.foreach { v =>
-        val best = nearest(v, centroids)
-        counts(best) += 1
-        var i = 0
-        while (i < dim) { sums(best)(i) += v(i); i += 1 }
+      parts.foreach { case (ps, pc) =>
+        var c = 0
+        while (c < k) {
+          counts(c) += pc(c)
+          var i = 0
+          while (i < dim) { sums(c)(i) += ps(c)(i); i += 1 }
+          c += 1
+        }
       }
-      centroids = Array.tabulate(k) { c =>
-        if (counts(c) == 0) centroids(c)
-        else sums(c).map(_ / counts(c))
-      }
+      cents = Array.tabulate(k)(c =>
+        if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c)))
     }
-    centroids
+    cents
   }
 
   /** Distance of the L2-normalized input vector to each trained

@@ -411,7 +411,7 @@ object Dedup {
     (1.0 - math.acos(threshold) / math.Pi) > pRand
 
   /** Sample cap and pair budget for [[measuredPRand]] — driver-side
-    * work independent of corpus size (the `Ann.trainCentroids`
+    * work independent of corpus size (the [[Ann.trainSample]]
     * discipline).
     */
   private val PRandSampleCap = 256
@@ -431,11 +431,7 @@ object Dedup {
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(PRandSampleCap)
       .collect()
-      .map(_.getSeq[Any](1).map {
-        case f: Float => f.toDouble
-        case d: Double => d
-        case other => sys.error(s"non-numeric embedding element: $other")
-      }.toArray)
+      .map(r => Ann.numericArray(r.getSeq[Any](1)))
     if (sample.length < 2) return Array.empty
     val out = Array.newBuilder[Double]
     var i = 0
@@ -659,8 +655,8 @@ object Dedup {
     */
   private[graft] def embeddingNearDupClusterBlocked(collection: DataFrame,
                                                     threshold: Double): DataFrame = {
-    val cents = Ann.trainCentroidsFrom(
-      collection.select(col("vec_id"), col("embedding")))
+    val emb = collection.select(col("vec_id"), col("embedding"))
+    val cents = Ann.trainCentroids(Ann.trainSample(emb), Ann.nlistFor(emb.count()))
     val assigned = collection.select(col("vec_id"), col("label"), col("embedding"),
         explode(Ann.spillClusters(col("embedding"), cents, Ann.SpillAssign)).as("cl"))
       .localCheckpoint()
@@ -1186,35 +1182,20 @@ object Dedup {
     * One window over the dup-mass-sized rows table plus a
     * redirect-sized join — no CC, no shingle access. This is the
     * frame [[qDedupKeepBest]]-shaped consumers read in production.
+    *
+    * `ids` restricts the view to a (doc_id) set: the per-doc max-seq
+    * window is partitioned by doc_id, so semi-joining the stored rows
+    * to the ids FIRST yields the identical view for those docs while
+    * the window (and its shuffle) runs over an ids-bounded row set
+    * instead of the whole dup mass. The append fold reads labels this
+    * way — its touched-node set is batch-bounded, and folding a crawl
+    * must not pay a corpus-dup-mass window per batch.
     */
-  def readClusterIndex(spark: SparkSession, rawPath: String): DataFrame = {
+  def readClusterIndex(spark: SparkSession, rawPath: String,
+                       ids: Option[DataFrame] = None): DataFrame = {
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
-    val rows = liveClusterTable(spark, path, "clusters", clusterRowsSchema)
-    val wDoc = Window.partitionBy(col("doc_id"))
-      .orderBy(coalesce(col("seq"), lit(0L)).desc)
-    val latest = rows.withColumn("__rn", row_number().over(wDoc))
-      .filter(col("__rn") === 1 && col("cluster_id") >= 0)
-      .select(col("doc_id"), col("cluster_id"))
-    val merges = spark.read.schema(clusterMergesSchema).parquet(s"$path/merges")
-      .withColumnRenamed("old_id", "cluster_id")
-    latest.join(merges, Seq("cluster_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("new_id"), col("cluster_id")).as("cluster_id"))
-  }
-
-  /** [[readClusterIndex]] restricted to a given (doc_id) set: the
-    * per-doc max-seq window is partitioned by doc_id, so semi-joining
-    * the stored rows to the ids FIRST yields the identical view for
-    * those docs while the window (and its shuffle) runs over an
-    * ids-bounded row set instead of the whole dup mass. The append
-    * fold reads labels this way — its touched-node set is
-    * batch-bounded, and folding a crawl must not pay a
-    * corpus-dup-mass window per batch.
-    */
-  private def readClusterIndexFor(spark: SparkSession, path: String,
-                                  ids: DataFrame): DataFrame = {
-    val rows = liveClusterTable(spark, path, "clusters", clusterRowsSchema)
-      .join(ids.select(col("doc_id")), Seq("doc_id"))
+    val stored = liveClusterTable(spark, path, "clusters", clusterRowsSchema)
+    val rows = ids.fold(stored)(i => stored.join(i.select(col("doc_id")), Seq("doc_id")))
     val wDoc = Window.partitionBy(col("doc_id"))
       .orderBy(coalesce(col("seq"), lit(0L)).desc)
     val latest = rows.withColumn("__rn", row_number().over(wDoc))
@@ -1258,7 +1239,7 @@ object Dedup {
     * stats skip non-overlapping files), the digest aggregate is
     * semi-joined to the batch's digests before grouping, the Jaccard
     * size attach broadcasts the candidate side, and current labels
-    * are read via [[readClusterIndexFor]] over the touched ids only
+    * are read via [[readClusterIndex]] over the touched ids only
     * — no per-append window over the corpus dup mass.
     */
   def appendToClusterIndex(batch: DataFrame, rawPath: String): Unit =
@@ -1340,7 +1321,7 @@ object Dedup {
       val oCand = exactCross.select(col("o").as("doc_id"))
         .unionByName(common.select(col("o").as("doc_id")))
         .distinct().localCheckpoint()
-      val labels = readClusterIndexFor(spark, path, bounded(oCand))
+      val labels = readClusterIndex(spark, path, Some(bounded(oCand)))
         .localCheckpoint()
       // intra-batch edges (same construction as clustersOf)
       val wH = Window.partitionBy(col("h"))
@@ -1800,51 +1781,20 @@ object Dedup {
     */
   private[graft] val ccResolutions = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Installed at-rest cluster indexes by corpus dir — when a corpus
-    * has one, the registered cluster consumers serve from it instead
-    * of resolving in-session (see [[dupClusters]]).
-    */
-  private val installedClusterIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Point the registered cluster consumers of `sfDir` at a standing
-    * cluster index (built by [[writeClusterIndex]] over the same
-    * corpus and maintained by [[appendToClusterIndex]] /
-    * [[deleteFromClusterIndex]]). Consumers then read the persisted
-    * membership ([[readClusterIndex]] — redirect join, no CC) instead
-    * of re-resolving; results are row-identical as long as the index
-    * is maintained over the corpus the consumers query.
-    */
-  def installClusterIndex(sfDir: String, indexPath: String): Unit = {
-    installedClusterIndexes.put(sfDir, indexPath); ()
-  }
-
-  /** Detach `sfDir`'s consumers from the at-rest index — they fall
-    * back to the session-materialized resolution.
-    */
-  def uninstallClusterIndex(sfDir: String): Unit = {
-    installedClusterIndexes.remove(sfDir); ()
-  }
-
   /** The duplicate-cluster frame every cluster CONSUMER reads
-    * ([[qDupClusters]], [[qDedupKeepBest]], [[qDedupSoft]]). With an
-    * installed at-rest index ([[installClusterIndex]]) this is the
-    * PERSISTED membership — a redirect-join read, no CC, the
-    * production shape where the ingest pipeline maintains cluster
-    * ids incrementally next to the shingle evidence. Without one it
-    * falls back to the session-materialized resolution, computed
-    * ONCE per (session, corpus): the three consumers each need the
-    * same exact ∪ trigram-Jaccard ∪ CC resolution, and before this
-    * frame they re-ran it per query (~13 s of 96 s at sf0.1).
+    * ([[qDupClusters]], [[qDedupKeepBest]], [[qDedupSoft]]): the
+    * session-materialized resolution, computed ONCE per (session,
+    * corpus) — the three consumers each need the same exact ∪
+    * trigram-Jaccard ∪ CC resolution, and before this frame they
+    * re-ran it per query (~13 s of 96 s at sf0.1). A standing cluster
+    * index over the same corpus ([[writeClusterIndex]], read through
+    * [[readClusterIndex]] — a redirect join, no CC) holds the same
+    * membership row for row.
     */
   def dupClusters(spark: SparkSession, sfDir: String): DataFrame =
-    Option(installedClusterIndexes.get(sfDir)) match {
-      case Some(idx) => readClusterIndex(spark, idx)
-      case None =>
-        IndexCache.materialized(spark, s"dup-clusters#$sfDir") {
-          ccResolutions.incrementAndGet()
-          resolveDupClusters(spark, sfDir)
-        }
+    IndexCache.materialized(spark, s"dup-clusters#$sfDir") {
+      ccResolutions.incrementAndGet()
+      resolveDupClusters(spark, sfDir)
     }
 
   /** Head-share crossover for [[jaccardPairsAuto]]: when the df head
@@ -1998,9 +1948,11 @@ object Dedup {
     * pruned to ONE representative: the member FARTHEST from its
     * cluster centroid (the paper's choice — of a near-dup group, keep
     * the example adding the most spread), ties to min id. Pure
-    * composition of standing machinery: the IVF trainer's spherical
-    * k-means (fixed-size driver sample — training cost independent of
-    * corpus size), the exact blocked scorer, and the CC resolver.
+    * composition of standing machinery: the session vector index's
+    * IVF centroids ([[VectorIndex.sessionIndexPath]] — spherical
+    * k-means over a fixed-size driver sample, training cost
+    * independent of corpus size), the exact blocked scorer, and the
+    * CC resolver.
     *
     * Scale shape: blocking by learned cluster caps pair mass at
     * Σ_c n_c² (n_c ≈ n/k, and k grows with the corpus in a real
@@ -2013,7 +1965,7 @@ object Dedup {
     * members with their kept representative.
     */
   def qSemDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = Ann.trainCentroids(spark, sfDir)
+    val cents = VectorIndex.readMeta(spark, VectorIndex.sessionIndexPath(spark, sfDir)).centroids
     val assigned = augmentedEmbeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
       .withColumn("label", Ann.assignCluster(col("embedding"), cents).cast("long"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
 import graft.functions.vec
 
 /** Scalar quantization (SQ8) — the compressed-index family of the
@@ -79,30 +78,8 @@ object Quantization {
     */
   val PqPoolCap = 4096
 
-  private val opqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Seq[Float]], Seq[Seq[Seq[Float]]])]()
-
-  /** Cached (rotation, codebooks) per corpus dir — the OPQ+residual
-    * training the session index builds from ([[trainPqOpqFrom]]).
-    */
-  def trainPqOpq(spark: SparkSession, sfDir: String): (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) =
-    opqCache.computeIfAbsent(sfDir, _ =>
-      trainPqOpqFrom(Tables.embeddings(spark, sfDir), Ann.trainCentroids(spark, sfDir)))
-
-  /** The raw capped training sample (every 3rd vector by id up to
-    * [[Ann.TrainSampleCap]] — orderBy+limit compiles to a
-    * per-partition top-k, so both scan and driver memory are bounded
-    * at any corpus scale).
-    */
-  private def collectSample(corpus: DataFrame): Array[Array[Double]] =
-    corpus
-      .filter(col("vec_id") % 3 === 0).orderBy(col("vec_id"))
-      .limit(Ann.TrainSampleCap)
-      .select(col("embedding")).collect()
-      .map(r => Ann.numericArray(r.getSeq[Any](0)))
-
-  /** The capped residual training sample (the FAISS IVF_PQ training
-    * shape): every 3rd vector by id up to [[Ann.TrainSampleCap]], each
+  /** The residual training sample (the FAISS IVF_PQ training
+    * shape): each vector of the raw [[Ann.trainSample]]
     * assigned to its nearest centroid (same ranking
     * [[graft.functions.NearestClusters]] serves) and replaced by
     * v − c. Raw-vector codebooks spend the code budget encoding where
@@ -113,9 +90,8 @@ object Quantization {
     * re-center every list at the origin, so the codebooks resolve the
     * within-list scale where neighbors actually differ.
     */
-  private def residualSample(corpus: DataFrame,
+  private def residualSample(raw: Array[Array[Double]],
       cents: Seq[Seq[Float]]): Array[Array[Double]] = {
-    val raw = collectSample(corpus)
     val cc = cents.map(_.toArray.map(_.toDouble)).toArray
     val ccNormSq = cc.map(c => c.map(x => x * x).sum)
     raw.map { v =>
@@ -140,66 +116,16 @@ object Quantization {
     }
   }
 
-  /** Per-subspace deterministic Lloyd k-means over a driver-side
-    * sample — the shared trainer of the residual and OPQ-rotated
-    * codebook paths. The assign step runs on a FIXED
-    * 32-way chunking of the sample with per-chunk partial sums merged
-    * in chunk order, so the 256-centroid training (sample · k* · dim
-    * · iters ≈ 2×10¹⁰ flops at the cap) uses the driver's cores while
-    * staying bit-deterministic (double addition is order-sensitive;
-    * the chunk count and merge order never vary with thread timing).
+  /** Per-subspace codebooks through the shared Lloyd loop
+    * ([[Ann.lloyd]]) on a FIXED 32-way chunking of the sample, so the
+    * 256-centroid training (sample · k* · dim · iters ≈ 2×10¹⁰ flops
+    * at the cap) uses the driver's cores; the chunk count is part of
+    * the trained values and never varies.
     */
   private def kMeansPerSubspace(sample: Array[Array[Double]]): Seq[Seq[Seq[Float]]] =
     (0 until M).map { j =>
-      val sub = sample.map(v => v.slice(j * SubDim, (j + 1) * SubDim))
-      val n = sub.length
-      val chunks = 32
-      var cents = Array.tabulate(KStar)(i => sub((i.toLong * n / KStar).toInt).clone())
-      for (_ <- 0 until 10) {
-        val cSnap = cents
-        val partials = java.util.stream.IntStream.range(0, chunks).parallel()
-          .mapToObj[(Array[Array[Double]], Array[Long])] { ch =>
-            val sums = Array.fill(KStar)(new Array[Double](SubDim))
-            val counts = new Array[Long](KStar)
-            val lo = (ch.toLong * n / chunks).toInt
-            val hi = ((ch + 1).toLong * n / chunks).toInt
-            var r = lo
-            while (r < hi) {
-              val v = sub(r)
-              var best = 0; var bestD = Double.MaxValue
-              var c = 0
-              while (c < KStar) {
-                var d = 0.0
-                var i = 0
-                while (i < SubDim) { val t = v(i) - cSnap(c)(i); d += t * t; i += 1 }
-                if (d < bestD) { bestD = d; best = c }
-                c += 1
-              }
-              counts(best) += 1
-              var i = 0
-              while (i < SubDim) { sums(best)(i) += v(i); i += 1 }
-              r += 1
-            }
-            (sums, counts)
-          }
-          .toArray(new java.util.function.IntFunction[Array[(Array[Array[Double]], Array[Long])]] {
-            override def apply(sz: Int) = new Array[(Array[Array[Double]], Array[Long])](sz)
-          })
-        val sums = Array.fill(KStar)(new Array[Double](SubDim))
-        val counts = new Array[Long](KStar)
-        partials.foreach { case (ps, pc) =>
-          var c = 0
-          while (c < KStar) {
-            counts(c) += pc(c)
-            var i = 0
-            while (i < SubDim) { sums(c)(i) += ps(c)(i); i += 1 }
-            c += 1
-          }
-        }
-        cents = Array.tabulate(KStar)(c =>
-          if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c)))
-      }
-      cents.map(_.map(_.toFloat).toSeq).toSeq
+      Ann.lloyd(sample.map(_.slice(j * SubDim, (j + 1) * SubDim)), KStar, chunks = 32)
+        .map(_.map(_.toFloat).toSeq).toSeq
     }
 
   /** OPQ: train an orthogonal pre-rotation AND residual codebooks
@@ -221,17 +147,18 @@ object Quantization {
     * the true residual distances, and serving only needs R applied
     * query-side ([[graft.functions.MatVec]], one fused 64×64 loop).
     *
-    * Returns (rotation rows, codebooks trained on rotated residuals).
+    * Trains from the raw [[Ann.trainSample]] and the IVF centroids;
+    * returns (rotation rows, codebooks trained on rotated residuals).
     */
-  private[operators] def trainPqOpqFrom(corpus: DataFrame,
+  private[operators] def trainPqOpqFrom(raw: Array[Array[Double]],
       cents: Seq[Seq[Float]]): (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) = {
-    val sample = residualSample(corpus, cents)
+    val sample = residualSample(raw, cents)
     val rot = opqRotation(sample)
     val rotated = sample.map(applyRotation(rot, _))
     (rot.map(_.map(_.toFloat).toSeq).toSeq, kMeansPerSubspace(rotated))
   }
 
-  /** Per-dimension mean of the bounded training sample — the BQ
+  /** Per-dimension mean of the raw [[Ann.trainSample]] — the BQ
     * centering vector. Sign bits of a MEAN-DOMINATED cloud correlate
     * corpus-wide (every vector shares the mean's sign pattern, so
     * Hamming distances between stored words carry no neighbor
@@ -240,8 +167,7 @@ object Quantization {
     * per dimension, restoring the prefilter's selectivity. The same μ
     * must center the query side ([[VectorIndex.searchBq]]).
     */
-  private[operators] def trainBqMean(corpus: DataFrame): Seq[Float] = {
-    val sample = collectSample(corpus)
+  private[operators] def trainBqMean(sample: Array[Array[Double]]): Seq[Float] =
     if (sample.isEmpty) Seq.empty
     else {
       val dim = sample.map(_.length).max
@@ -251,7 +177,6 @@ object Quantization {
       }
       mean.map(m => (m / sample.length).toFloat).toSeq
     }
-  }
 
   private def applyRotation(rot: Array[Array[Double]], v: Array[Double]): Array[Double] = {
     val out = new Array[Double](rot.length)

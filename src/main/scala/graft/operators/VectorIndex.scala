@@ -84,19 +84,6 @@ object VectorIndex {
   private val rotationSchema = StructType.fromDDL(
     "row INT, vals ARRAY<FLOAT>")
 
-  /** Build the index for a corpus dir: train geometry (fixed-size
-    * sample), encode every representation in one corpus pass, write
-    * the partitioned layout.
-    */
-  def write(spark: SparkSession, sfDir: String, path: String): Meta = {
-    val cents = Ann.trainCentroids(spark, sfDir)
-    val (rot, cbs) = Quantization.trainPqOpq(spark, sfDir)
-    val emb = Tables.embeddings(spark, sfDir)
-    val mu = Quantization.trainBqMean(emb)
-    writeCorpus(spark, emb, path,
-      Meta(cents, cbs, rot, mu, Ann.lshBitsFor(emb.count(), centeredPRand(emb, mu))))
-  }
-
   /** Measured per-plane random-pair collision probability of the
     * MEAN-CENTERED corpus — [[Ann.lshBitsFor]]'s `pRand` input
     * (bounded 256-row sample, the [[graft.operators.Dedup]]
@@ -152,23 +139,26 @@ object VectorIndex {
   }
 
   /** Build the index from ANY normalized (vec_id BIGINT, embedding
-    * ARRAY<FLOAT>, label INT) collection frame — the user-collection
-    * entry point behind `VectorCollection.writeIndex`: trains the
-    * geometry from the frame (fixed-size sample) and writes the full
-    * layout.
+    * ARRAY<FLOAT>, label INT) collection frame — the one way an index
+    * is trained: the session index of a corpus dir
+    * ([[sessionIndexPath]]), `VectorCollection.writeIndex`,
+    * [[buildRotating]] and [[retrain]] all build here. One corpus
+    * count sizes the geometry ([[Ann.nlistFor]], unless `nlist` is
+    * given) and the banding; one capped sample ([[Ann.trainSample]])
+    * trains the centroids, the OPQ rotation, the residual codebooks
+    * and the BQ mean. Then the full layout is written.
     */
   def buildFrom(spark: SparkSession, corpus: DataFrame, path: String,
-                nlist: Int = -1, calibrate: Boolean = true): Meta = {
+                nlist: Int = -1): Meta = {
     val t0 = System.nanoTime()
-    val cents =
-      if (nlist > 0) Ann.trainCentroidsFrom(corpus, nlist)
-      else Ann.trainCentroidsFrom(corpus)
-    val (rot, cbs) = Quantization.trainPqOpqFrom(corpus, cents)
-    val mu = Quantization.trainBqMean(corpus)
+    val n = corpus.count()
+    val sample = Ann.trainSample(corpus)
+    val cents = Ann.trainCentroids(sample, if (nlist > 0) nlist else Ann.nlistFor(n))
+    val (rot, cbs) = Quantization.trainPqOpqFrom(sample, cents)
+    val mu = Quantization.trainBqMean(sample)
     logStage("train", t0)
     writeCorpus(spark, corpus, path,
-      Meta(cents, cbs, rot, mu, Ann.lshBitsFor(corpus.count(), centeredPRand(corpus, mu))),
-      doCalibrate = calibrate)
+      Meta(cents, cbs, rot, mu, Ann.lshBitsFor(n, centeredPRand(corpus, mu))))
   }
 
   /** Build-stage wall clock at INFO on the library logger — the
@@ -184,8 +174,7 @@ object VectorIndex {
     * offline-rebuild path (periodic retrain, compaction, re-shard)
     * and the harness behind the spec's append ≡ rebuild proof.
     */
-  def writeCorpus(spark: SparkSession, corpus: DataFrame, path: String, meta: Meta,
-                  doCalibrate: Boolean = true): Meta = {
+  def writeCorpus(spark: SparkSession, corpus: DataFrame, path: String, meta: Meta): Meta = {
     import spark.implicits._
     val p = IndexAlias.resolve(spark, path)
     meta.centroids.zipWithIndex.map { case (c, i) => (i, c) }
@@ -218,11 +207,9 @@ object VectorIndex {
     // adaptive geometries calibrate their default probe, rerank-pool
     // (PQ and BQ) and LSH band-count budgets against the corpus just
     // written; small corpora keep the measured 16-list geometry (and
-    // its measured NProbe) bit-for-bit. `doCalibrate = false` is the
-    // large-build opt-out: the closed-form floor (and the constant
-    // pool / 16-band) serve instead.
+    // its measured NProbe) bit-for-bit
     val servedMeta =
-      if (doCalibrate && meta.centroids.length > Ann.NList)
+      if (meta.centroids.length > Ann.NList)
         calibrate(spark, p, meta)
       else meta
     if (servedMeta.lshBands.getOrElse(Ann.LshBands) !=
@@ -919,8 +906,9 @@ object VectorIndex {
 
   /** Operator-visible serving parameters of a standing layout — what
     * `q_index_stats` reports beside the debt/fragmentation numbers:
-    * the calibrated budgets actually serving defaults, the encoding
-    * flags, the geometry size, and — decisively — `pq_budget_bound`
+    * the calibrated budgets actually serving defaults, the geometry
+    * size, the LSH band width (`lsh_bits`, what [[bandingDrift]] and
+    * [[reband]] compare against), and — decisively — `pq_budget_bound`
     * (a recall miss on such a layout is a CODE-BUDGET limit; paging
     * an operator to retrain it would burn a corpus re-encode for
     * nothing, see [[graft.api.ScaleOps.maintain]]).
@@ -930,12 +918,10 @@ object VectorIndex {
     val meta = readMeta(spark, rawPath)
     (Seq(
       "nlist" -> meta.centroids.length.toLong,
-      "pq_residual" -> 1L,
-      "pq_opq" -> 1L,
+      "lsh_bits" -> meta.lshBits.toLong,
       "pq_budget_bound" -> (if (meta.budgetBound) 1L else 0L),
       "bq_budget_bound" -> (if (meta.bqBudgetBound) 1L else 0L),
-      "lsh_budget_bound" -> (if (meta.lshBudgetBound) 1L else 0L),
-      "bq_centered" -> 1L) ++
+      "lsh_budget_bound" -> (if (meta.lshBudgetBound) 1L else 0L)) ++
       meta.defaultNProbe.map(np => "default_nprobe" -> np.toLong) ++
       meta.defaultPool.map(pl => "default_pool" -> pl.toLong) ++
       meta.defaultBqPool.map(bp => "default_bq_pool" -> bp.toLong) ++
@@ -964,13 +950,11 @@ object VectorIndex {
     * `monotonically_increasing_id` (partition index in the high bits:
     * the same total order the previous implementation produced by
     * concatenating the batch through one task, now computed with no
-    * single-task stage); callers with a stronger intra-batch order —
-    * streaming CDC offsets — pass it as `ordCol` instead. Per-key
-    * collapse and the delta write both stay parallel; AQE coalesces
-    * the post-shuffle output so small batches still land compactly.
+    * single-task stage). Per-key collapse and the delta write both
+    * stay parallel; AQE coalesces the post-shuffle output so small
+    * batches still land compactly.
     */
-  def setPayload(spark: SparkSession, path: String, updates: DataFrame,
-                 ordCol: Option[String] = None): Unit = {
+  def setPayload(spark: SparkSession, path: String, updates: DataFrame): Unit = {
     val live = IndexAlias.resolve(spark, path)
     // seq assignment is check-then-act: same-JVM writers serialize,
     // and a SECOND PROCESS is fenced by the writer lease — without
@@ -980,8 +964,7 @@ object VectorIndex {
       val nextSeq = payloadDeltas(spark, live).fold(0L) { p =>
         p.agg(coalesce(max(col("seq")), lit(0L))).collect()(0).getLong(0) + 1L
       }
-      ordCol.fold(updates.withColumn("__ord", monotonically_increasing_id()))(
-          c => updates.withColumn("__ord", col(c).cast("long")))
+      updates.withColumn("__ord", monotonically_increasing_id())
         .select(col("vec_id").cast("long").as("vec_id"),
           col("label").cast("int").as("label"), col("__ord"))
         .groupBy(col("vec_id")).agg(max_by(col("label"), col("__ord")).as("label"))
@@ -1404,9 +1387,10 @@ object VectorIndex {
   }
 
   /** Session-scoped at-rest index per corpus dir (built once at first
-    * use — the ingest-time artifact all six search families then
-    * serve from).
+    * use through [[buildFrom]] — the ingest-time artifact all six
+    * search families then serve from).
     */
   def sessionIndexPath(spark: SparkSession, sfDir: String): String =
-    IndexCache.sessionLayout(spark, "vecindex", sfDir)(write(spark, sfDir, _))
+    IndexCache.sessionLayout(spark, "vecindex", sfDir)(
+      buildFrom(spark, Tables.embeddings(spark, sfDir), _))
 }

@@ -57,8 +57,8 @@ class AdaptiveIvfSpec extends SparkSpec {
   }
 
   test("two-level training is deterministic and mass-balanced") {
-    val a = Ann.trainCentroidsFrom(cloud, 128)
-    val b = Ann.trainCentroidsFrom(cloud, 128)
+    val a = Ann.trainCentroids(Ann.trainSample(cloud), 128)
+    val b = Ann.trainCentroids(Ann.trainSample(cloud), 128)
     assert(a == b, "hierarchical training must be bit-deterministic")
     // proportional rounding lands within a coarse-cell of the target
     assert(math.abs(a.size - 128) <= 12, s"centroid count ${a.size} far from 128")

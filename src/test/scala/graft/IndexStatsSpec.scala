@@ -277,7 +277,15 @@ class IndexStatsSpec extends SparkSpec {
     val paramRows = rows.filter(_.getAs[String]("table").startsWith("param:"))
       .map(r => r.getAs[String]("table") -> r.getAs[String]("value")).toMap
     assert(paramRows.contains("param:pq_budget_bound"), s"params: ${paramRows.keys}")
-    assert(paramRows.contains("param:bq_centered"))
+    // the band width a drift report compares against is visible; the
+    // format flags every served layout carries (always 1) are not rows
+    val lshBits = VectorIndex.readMeta(spark,
+      VectorIndex.sessionIndexPath(spark, sfDir)).lshBits
+    assert(paramRows.get("param:lsh_bits").contains(lshBits.toString),
+      s"lsh_bits row ${paramRows.get("param:lsh_bits")} vs meta $lshBits")
+    Seq("param:pq_residual", "param:pq_opq", "param:bq_centered").foreach { f =>
+      assert(!paramRows.contains(f), s"constant flag row $f still reported")
+    }
     assert(paramRows.get("param:route").exists(Set("exact", "lsh", "cluster")),
       s"route row: ${paramRows.get("param:route")}")
   }

@@ -154,7 +154,7 @@ class LayoutRewriteFaultSpec extends SparkSpec {
   test("vector index: in-place compact and reband read as before or after at every fault") {
     import spark.implicits._
     val tpl = faultyDir("graft-fault-vec") + "/idx"
-    VectorIndex.buildFrom(spark, vectors(400, 1), tpl, calibrate = false)
+    VectorIndex.buildFrom(spark, vectors(400, 1), tpl)
     VectorIndex.append(spark, vectors(40, 2, 1000L), tpl)
     VectorIndex.delete(spark, tpl, Seq(1L, 2L, 3L, 1001L))
     VectorIndex.setPayload(spark, tpl, Seq((5L, 9), (6L, 9)).toDF("vec_id", "label"))
@@ -180,7 +180,7 @@ class LayoutRewriteFaultSpec extends SparkSpec {
     // update, so the swap replaces tables AND drops the debt tables
     // the snapshot lacks
     val tpl = faultyDir("graft-fault-restore") + "/idx"
-    VectorIndex.buildFrom(spark, vectors(300, 3), tpl, calibrate = false)
+    VectorIndex.buildFrom(spark, vectors(300, 3), tpl)
     val snap = IndexSnapshot.create(spark, tpl)
     VectorIndex.append(spark, vectors(30, 4, 1000L), tpl)
     VectorIndex.delete(spark, tpl, Seq(1L, 2L, 1001L))

@@ -19,7 +19,7 @@ class LibraryHygieneSpec extends SparkSpec {
     val home = graft.operators.IndexCache.tempDir("graft-hygiene") + "/idx"
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      VectorIndex.buildFrom(spark, Tables.embeddings(spark, sfDir), home, calibrate = false)
+      VectorIndex.buildFrom(spark, Tables.embeddings(spark, sfDir), home)
       Dedup.embeddingNearDupAuto(cone, 0.35, lshCrossover = 0.0).count()
     }
     val printed = out.toString("UTF-8")

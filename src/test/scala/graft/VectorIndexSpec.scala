@@ -30,8 +30,8 @@ class VectorIndexSpec extends SparkSpec {
   test("a fresh session serves all six families from the layout alone — no retrain, no re-encode") {
     val expected = families(spark, path, queries).map { case (n, df) => n -> canon(df) }
     // newSession shares the context but has its own UUID: its meta
-    // comes off disk (readMeta), and the training/codebook caches are
-    // never consulted — this is the restart story
+    // comes off disk (readMeta) and nothing is retrained — this is
+    // the restart story
     val s2 = spark.newSession()
     val got = families(s2, path, VectorSearch.querySet(s2, sfDir))
       .map { case (n, df) => n -> canon(df) }
@@ -39,6 +39,27 @@ class VectorIndexSpec extends SparkSpec {
       assert(e == g, s"family $n differs across sessions")
       assert(e.nonEmpty, s"family $n returned nothing")
     }
+  }
+
+  test("the trained geometry follows the corpus, not its directory") {
+    // a session index trains on what its corpus dir holds when that
+    // session builds it: a second session over a rewritten dir must
+    // not serve geometry trained on the dir's earlier corpus
+    val dir = graft.operators.IndexCache.tempDir("graft-vi-corpus")
+    val corpusA = Tables.embeddings(spark, sfDir)
+    val corpusB = corpusA.withColumn("embedding", reverse(col("embedding")))
+    corpusA.write.parquet(s"$dir/embeddings.parquet")
+    val metaA = VectorIndex.readMeta(spark, VectorIndex.sessionIndexPath(spark, dir))
+    corpusB.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val s2 = spark.newSession()
+    val metaB = VectorIndex.readMeta(s2, VectorIndex.sessionIndexPath(s2, dir))
+    val ref = VectorIndex.buildFrom(spark, corpusB,
+      graft.operators.IndexCache.tempDir("graft-vi-corpus-ref") + "/idx")
+    assert(metaB.centroids == ref.centroids, "centroids not trained on the rewritten corpus")
+    assert(metaB.codebooks == ref.codebooks, "codebooks not trained on the rewritten corpus")
+    assert(metaB.rotation == ref.rotation, "rotation not trained on the rewritten corpus")
+    assert(metaB.centroids != metaA.centroids && metaB.codebooks != metaA.codebooks &&
+      metaB.rotation != metaA.rotation, "the two corpora must train different geometry")
   }
 
   test("appending a batch is equivalent to rebuilding over the union — for every family") {
@@ -182,12 +203,14 @@ class VectorIndexSpec extends SparkSpec {
     VectorIndex.writeCorpus(spark, corpus, pP, meta)
     val ids = corpus.select("vec_id").orderBy("vec_id").limit(2).collect().map(_.getLong(0))
 
-    // batch 1 spread over several partitions with three conflicting
-    // updates to ids(0): the caller-supplied ordinal decides the
-    // winner regardless of how the batch is partitioned
-    val b1 = Seq((ids(0), 7101, 1L), (ids(0), 7102, 3L), (ids(0), 7103, 2L),
-      (ids(1), 7201, 1L)).toDF("vec_id", "label", "ord").repartition(3)
-    VectorIndex.setPayload(spark, pP, b1, ordCol = Some("ord"))
+    // batch 1 spread over three partitions with three conflicting
+    // updates to ids(0): parallelize slices the rows in order
+    // ([0,1), [1,2), [2,4)), so the last occurrence in partition-major
+    // order — the winner — is the last row, in the third partition
+    val b1 = spark.sparkContext.parallelize(Seq((ids(0), 7101), (ids(0), 7103),
+      (ids(1), 7201), (ids(0), 7102)), 3).toDF("vec_id", "label")
+    assert(b1.rdd.getNumPartitions == 3)
+    VectorIndex.setPayload(spark, pP, b1)
     val d1 = spark.read.parquet(s"$pP/payload")
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("label"), r.getAs[Long]("seq")))
     assert(d1.length == 2, s"expected one row per key per batch, got ${d1.toSeq}")
@@ -225,7 +248,7 @@ class VectorIndexSpec extends SparkSpec {
     import spark.implicits._
     val corpus = Tables.embeddings(spark, sfDir)
     val p2 = graft.operators.IndexCache.tempDir("graft-vi-flagless") + "/idx"
-    VectorIndex.buildFrom(spark, corpus, p2, calibrate = false)
+    VectorIndex.buildFrom(spark, corpus, p2)
     val params = spark.read.parquet(s"$p2/meta/params")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
     assert(params.exists(_._1 == "pq_residual"), s"fixture must flag residual codes: $params")
