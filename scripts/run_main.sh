@@ -1,11 +1,13 @@
 #!/bin/bash
 # Launch a graft main against the compiled classes without sbt (so a
 # long sbt test run doesn't serialize with corpus generation / bench
-# runs). Mirrors build.sbt's fork JVM options.
+# runs). Launches the classes of the checkout this script sits in.
+# Mirrors build.sbt's fork JVM options.
 # Usage: run_main.sh <mainClass> [args...]   (env knobs pass through)
 set -euo pipefail
 MAIN="$1"; shift
-CP="/root/repo/target/scala-2.13/classes:$(ls -d /opt/spark/jars)/*"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$(ls -d /opt/spark/jars)/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do

@@ -1,6 +1,22 @@
 package graft
 import scala.util.control.NonFatal
 object Bench {
+  /** `s` as a JSON string literal: quote and backslash escaped, every
+    * control character below U+0020 written as `\uXXXX` — so an
+    * exception message carrying a NUL, form feed or terminal escape
+    * still yields a parseable line.
+    */
+  private[graft] def jstr(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b.append('"').toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.envCpus
@@ -88,8 +104,6 @@ object Bench {
           None
       }
     }
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\n\\r\\t]", " ") + "\""
     if (passes.isEmpty) {
       println(s"""{"metric":"total","value":-1,"unit":"sec","queries":{},""" +
         s""""sf":"$sfDir","cpus":$cpus,"fatal":${jstr(passFailure.getOrElse("no pass completed"))}}""")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -108,44 +108,28 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
   }
 
-  /** Distinct word trigrams per doc (docs with ≥3 tokens). */
-  private[graft] def trigrams(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), array_distinct(expr(
-        "transform(sequence(0, size(toks)-3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"))
-        .as("gs"))
-
-  /** Trigram-Jaccard near-dup pairs over any trigram table — the
-    * shared core of qDedupNgram and qDupClusters. Shingles travel as
-    * xxhash64 longs, not ~30-byte strings (a 64-bit collision needs
+  /** Trigram-Jaccard near-dup pairs over [[hashedShingles]] sets —
+    * the shared core of qDedupNgram and qDupClusters. Shingles travel
+    * as xxhash64 longs, not ~30-byte strings (a 64-bit collision needs
     * two distinct corpus trigrams to collide — ~1e-8 at 1M distinct
-    * shingles); the postings groupBy replaces a double-shuffle
-    * self-join, df=1 shingles are dropped before any pair is emitted,
-    * and the pair explosion combines map-side into the (doc_a, doc_b)
-    * partial aggregate. The pair aggregate is Σdf²-sized BEFORE any
+    * shingles), and a set's size is its hash-distinct count; the
+    * postings groupBy replaces a double-shuffle self-join, df=1
+    * shingles are dropped before any pair is emitted, and the pair
+    * explosion combines map-side into the (doc_a, doc_b) partial
+    * aggregate. The pair aggregate is Σdf²-sized BEFORE any
     * threshold, so set sizes are attached by plain key joins on
     * narrow (id, count) rows — never by broadcasting the pair set
     * (one boilerplate shingle would blow the broadcast limit; AQE
     * still picks a broadcast when the set is genuinely small).
-    * `materializePairs` checkpoints the pair aggregate for consumers
-    * that re-plan it repeatedly (the iterative cluster resolver).
+    * `sh` must be materialized (localCheckpoint): it feeds three
+    * branches (postings + both size attaches) and Catalyst shares no
+    * common sub-plans. `materializePairs` checkpoints the pair
+    * aggregate for consumers that re-plan it repeatedly (the
+    * iterative cluster resolver).
     */
-  private[graft] def jaccardPairs(tri: DataFrame, materializePairs: Boolean = false): DataFrame = {
-    // array_distinct AFTER hashing: gs is string-distinct, but a
-    // 64-bit collision between two shingles of the same doc would put
-    // one doc_id twice in a posting list, violating postingPairs'
-    // distinct-ids precondition — enforce it by construction.
-    // The hashed frame is materialized once: it feeds three branches
-    // (postings + both size attaches), Catalyst shares no common
-    // sub-plans, and without this the shingle expression pipeline
-    // executes once per branch. (n_g stays the raw string-distinct
-    // count for oracle parity.)
-    val hashed = tri.select(col("doc_id"), size(col("gs")).cast("long").as("n_g"),
-        array_distinct(expr("transform(gs, g -> xxhash64(g))")).as("gh_arr"))
-      .localCheckpoint()
-    val ng = hashed.select(col("doc_id"), explode(col("gh_arr")).as("gh"))
-    val sz = hashed.select(col("doc_id"), col("n_g"))
+  private[graft] def jaccardPairs(sh: DataFrame, materializePairs: Boolean = false): DataFrame = {
+    val ng = sh.select(col("doc_id"), explode(col("gh")).as("gh"))
+    val sz = sh.select(col("doc_id"), size(col("gh")).cast("long").as("n_g"))
     val rawPairs = postingPairs(
         ng.groupBy(col("gh"))
           .agg(collect_list(col("doc_id")).as("ds"))
@@ -157,8 +141,15 @@ object Dedup {
       .join(sz.select(col("doc_id").as("doc_a"), col("n_g").as("n_a")), "doc_a")
       .join(sz.select(col("doc_id").as("doc_b"), col("n_g").as("n_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"), col("common"),
-        round(col("common") / (col("n_a") + col("n_b") - col("common")), 6).as("jaccard"))
+        jaccardOf(col("common"), col("n_a"), col("n_b")).as("jaccard"))
   }
+
+  /** Jaccard of two sets from their shared count and sizes, rounded
+    * to 6 places — the one formula every trigram-Jaccard relation
+    * (and its DuckDB oracle) uses.
+    */
+  private def jaccardOf(common: Column, na: Column, nb: Column): Column =
+    round(common / (na + nb - common), 6)
 
   /** Trigram-Jaccard pairs at a KNOWN threshold `t`, with exact
     * PPJoin-style prefix filtering (Xiao et al., WWW'08 — public
@@ -172,7 +163,7 @@ object Dedup {
     * fill the prefix for free). Candidates are verified exactly via
     * the id-only-broadcast attach of the full hashed-shingle arrays
     * (the [[minhashPairs]] pattern). Output ≡
-    * `jaccardPairs(tri).filter(jaccard ≥ t)`.
+    * `jaccardPairs(sh).filter(jaccard ≥ t)`; `sh` must be materialized.
     *
     * When to use which: this variant wins on real corpora, where
     * shingle df follows a Zipf curve — the prefix is genuinely rare
@@ -186,12 +177,9 @@ object Dedup {
     * deployment would pick per-corpus based on the df sketch the
     * ingest profile already computes (q_sketch_stats).
     */
-  private[graft] def jaccardPairsThresholded(tri: DataFrame, t: Double): DataFrame = {
-    val triH = tri.select(col("doc_id"),
-      array_distinct(expr("transform(gs, g -> xxhash64(g))")).as("gh_arr"))
-      .localCheckpoint()
-    val ng = triH.select(col("doc_id"), size(col("gh_arr")).as("n"),
-      explode(col("gh_arr")).as("gh"))
+  private[graft] def jaccardPairsThresholded(sh: DataFrame, t: Double): DataFrame = {
+    val ng = sh.select(col("doc_id"), size(col("gh")).as("n"),
+      explode(col("gh")).as("gh"))
     val dfT = ng.groupBy(col("gh")).agg(count(lit(1)).as("df"))
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("gh"))
     val kept = ng.join(dfT, "gh")
@@ -204,14 +192,13 @@ object Dedup {
       .dropDuplicates("doc_a", "doc_b")
       .localCheckpoint()
     val side = pairSide(cand)
-    val withA = triH.select(col("doc_id").as("doc_a"), col("gh_arr").as("gh_a"))
-      .join(side(cand), "doc_a")
-    val withB = triH.select(col("doc_id").as("doc_b"), col("gh_arr").as("gh_b"))
-      .join(side(cand), "doc_b")
+    val withA = sh.select(col("doc_id").as("doc_a"), col("gh").as("gh_a"))
+      .join(side, "doc_a")
+    val withB = sh.select(col("doc_id").as("doc_b"), col("gh").as("gh_b"))
+      .join(side, "doc_b")
     withA.join(withB, Seq("doc_a", "doc_b"))
       .withColumn("common", size(array_intersect(col("gh_a"), col("gh_b"))).cast("long"))
-      .withColumn("jaccard", round(col("common") /
-        (size(col("gh_a")) + size(col("gh_b")) - col("common")), 6))
+      .withColumn("jaccard", jaccardOf(col("common"), size(col("gh_a")), size(col("gh_b"))))
       .filter(col("jaccard") >= t)
       .select(col("doc_a"), col("doc_b"), col("common"), col("jaccard"))
   }
@@ -220,9 +207,9 @@ object Dedup {
     * Jaccard, via [[jaccardPairs]].
     */
   def qDedupNgram(spark: SparkSession, sfDir: String): DataFrame =
-    jaccardPairs(trigrams(Fanout.rebalance(
+    jaccardPairs(hashedShingles(Fanout.rebalance(
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")),
-      col("doc_id"))))
+      col("doc_id"))).localCheckpoint())
       .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b"))
       .limit(50)
 
@@ -841,19 +828,18 @@ object Dedup {
   def qDedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
     minhashPairs(augmentedDocs(spark, sfDir))
 
-  /** Per-doc hashed shingle sets: shingles are hashed to 64-bit longs
-    * once, and the hashed sets feed BOTH the signatures and the final
-    * Jaccard verification — the raw shingle strings never leave the
+  /** Per-doc hashed word-trigram sets (docs with ≥3 tokens) — the
+    * one trigram evidence function: the MinHash signatures, every
+    * trigram-Jaccard relation and the cluster index's postings all
+    * read these arrays, and the raw shingle strings never leave the
     * first projection (longs, ~4x smaller than the strings they
-    * replace).
+    * replace). Hash FIRST, distinct the hashes: no string-level
+    * hash-set pass per doc, and the array is distinct by construction
+    * (a 64-bit collision merges two shingles — the same ~1e-8 event
+    * every shared-shingle count already assumes away), so a set's
+    * size is its hash-distinct count.
     */
   private[graft] def hashedShingles(docs: DataFrame): DataFrame =
-    // hash FIRST, distinct the hashes: distinct(hash(grams)) equals
-    // hash(distinct(grams)) element-for-element (same values, same
-    // first-occurrence order — a collision merges the same pair either
-    // way), so the string-level array_distinct the trigram helper pays
-    // is redundant work on this path (one hash-set pass over ~30-char
-    // strings per doc, measured inside the minhash checkpoint job)
     docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), array_distinct(expr(
@@ -886,13 +872,15 @@ object Dedup {
     */
   val VerifyBroadcastLimit = 4000000L
 
-  /** Broadcast an id-only candidate-pair frame if it is small enough
-    * to collect safely, identity otherwise (see
-    * [[VerifyBroadcastLimit]]). The frame must be materialized
-    * (localCheckpoint) — it is counted AND joined twice.
+  /** Broadcast-hint a batch- or candidate-sized id frame if it is
+    * small enough to collect safely, the frame itself otherwise (see
+    * [[VerifyBroadcastLimit]]) — so it rides map-side into the
+    * corpus-sized scans it is joined against when small and falls
+    * back to a shuffle when not. The frame must be materialized
+    * (localCheckpoint): it is counted AND joined.
     */
-  private def pairSide(cand: DataFrame): DataFrame => DataFrame =
-    if (cand.count() <= VerifyBroadcastLimit) broadcast(_) else identity
+  private def pairSide(cand: DataFrame): DataFrame =
+    if (cand.count() <= VerifyBroadcastLimit) broadcast(cand) else cand
 
   /** Exact-Jaccard verification of an id-only candidate pair set:
     * broadcast ONLY the pair ids into each shingle attach scan (the
@@ -913,13 +901,12 @@ object Dedup {
     val cand = candidates.localCheckpoint()
     val side = pairSide(cand)
     val withA = shA.select(col("doc_id").as("doc_a"), col("gh").as("gh_a"))
-      .join(side(cand), "doc_a")
+      .join(side, "doc_a")
     val withB = shB.select(col("doc_id").as("doc_b"), col("gh").as("gh_b"))
-      .join(side(cand), "doc_b")
+      .join(side, "doc_b")
     withA.join(withB, Seq("doc_a", "doc_b"))
       .withColumn("common", size(array_intersect(col("gh_a"), col("gh_b"))).cast("long"))
-      .withColumn("jaccard", round(col("common") /
-        (size(col("gh_a")) + size(col("gh_b")) - col("common")), 6))
+      .withColumn("jaccard", jaccardOf(col("common"), size(col("gh_a")), size(col("gh_b"))))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
@@ -1047,8 +1034,8 @@ object Dedup {
   //             postings, append; gb = pmod(gh, ClusterPostingsBuckets)
   //             so the batch-vs-standing shingle join partition-prunes
   //             the standing side to the batch's buckets
-  //   meta/     (doc_id, h, n_g)  — normalized-text md5 + string-
-  //                                 distinct trigram count, append
+  //   meta/     (doc_id, h, n_g)  — normalized-text md5 + hashed-
+  //                                 trigram set size, append
   //   clusters/ (doc_id, cluster_id, seq) — multi-doc members, append;
   //             a doc's CURRENT row is its max-seq row (deletes
   //             supersede rows by appending at a higher seq;
@@ -1086,21 +1073,51 @@ object Dedup {
   private val clusterMergesSchema =
     org.apache.spark.sql.types.StructType.fromDDL("old_id BIGINT, new_id BIGINT")
 
-  /** (doc_id, h, n_g) + exploded (gh, doc_id) evidence of a batch.
-    * Every doc gets a meta row (short docs carry n_g = 0 — they can
-    * still be exact duplicates); only ≥3-token docs post shingles.
+  /** (doc_id, h) normalized-text digests + materialized
+    * [[hashedShingles]] sets of a batch — the evidence every cluster
+    * edge is derived from. Every doc gets a digest (short docs can
+    * still be exact duplicates); only ≥3-token docs carry shingles.
     */
-  private def clusterEvidence(docs: DataFrame): (DataFrame, DataFrame) = {
-    val tri = trigrams(docs)
-      .select(col("doc_id"), size(col("gs")).cast("long").as("n_g"),
-        array_distinct(expr("transform(gs, g -> xxhash64(g))")).as("gh_arr"))
-      .localCheckpoint()
-    val meta = docs.select(col("doc_id"), md5(lower(trim(col("text")))).as("h"))
-      .join(tri.select(col("doc_id"), col("n_g")), Seq("doc_id"), "left")
+  private def clusterEvidence(docs: DataFrame): (DataFrame, DataFrame) =
+    (docs.select(col("doc_id"), md5(lower(trim(col("text")))).as("h")),
+      hashedShingles(docs).localCheckpoint())
+
+  /** The (doc_id, h, n_g) meta layout rows of evidence: n_g is the
+    * shingle-set size, 0 for a doc without shingles.
+    */
+  private def clusterMeta(digests: DataFrame, sh: DataFrame): DataFrame =
+    digests.join(sh.select(col("doc_id"), size(col("gh")).cast("long").as("n_g")),
+        Seq("doc_id"), "left")
       .select(col("doc_id"), col("h"), coalesce(col("n_g"), lit(0L)).as("n_g"))
-    val postings = tri.select(explode(col("gh_arr")).as("gh"), col("doc_id"))
+
+  /** The (gh, doc_id, gb) postings layout rows of shingle sets. */
+  private def clusterPostings(sh: DataFrame): DataFrame =
+    sh.select(explode(col("gh")).as("gh"), col("doc_id"))
       .withColumn("gb", pmod(col("gh"), lit(ClusterPostingsBuckets.toLong)).cast("int"))
-    (meta, postings)
+
+  /** Trigram-Jaccard threshold of a duplicate edge. */
+  private val ClusterJaccard = 0.5
+
+  /** The duplicate-edge relation over cluster evidence ((doc_id, h)
+    * digest or meta rows + materialized shingle sets): exact-digest
+    * member → keeper (min id) edges ∪ trigram-Jaccard ≥
+    * [[ClusterJaccard]] pairs, as (a, b). [[clustersOf]] applies it
+    * to a corpus, an append to its idempotence-filtered batch and a
+    * delete to the touched live members — one rule for all three,
+    * which the index's exactness contract needs. The pair
+    * strategy is measured per corpus ([[jaccardPairsAuto]]): the
+    * driver corpus's near-uniform trigram df keeps the plain Σdf²
+    * aggregate; a natural Zipf-df corpus routes through the PPJoin
+    * prefix filter, whose candidate mass stays near the true near-dup
+    * mass while plain Σdf² goes quadratic with the boilerplate head.
+    */
+  private def duplicateEdges(meta: DataFrame, sh: DataFrame): DataFrame = {
+    val exact = meta
+      .withColumn("keeper", min(col("doc_id")).over(Window.partitionBy(col("h"))))
+      .filter(col("doc_id") =!= col("keeper"))
+      .select(col("keeper").as("a"), col("doc_id").as("b"))
+    exact.unionByName(jaccardPairsAuto(sh, ClusterJaccard)
+      .select(col("doc_a").as("a"), col("doc_b").as("b")))
   }
 
   /** Initialize the cluster index from the current corpus: one full
@@ -1122,9 +1139,9 @@ object Dedup {
     graft.sources.WriterLease.exclusive(docs.sparkSession, rawPath) {
       val spark = docs.sparkSession
       val path = graft.sources.IndexAlias.resolve(spark, rawPath)
-      val (meta, postings) = clusterEvidence(docs)
-      postings.write.mode("overwrite").partitionBy("gb").parquet(s"$path/postings")
-      meta.write.mode("overwrite").parquet(s"$path/meta")
+      val (digests, sh) = clusterEvidence(docs)
+      clusterPostings(sh).write.mode("overwrite").partitionBy("gb").parquet(s"$path/postings")
+      clusterMeta(digests, sh).write.mode("overwrite").parquet(s"$path/meta")
       clusters.withColumn("seq", lit(0L))
         .write.mode("overwrite").parquet(s"$path/clusters")
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1221,10 +1238,13 @@ object Dedup {
     *    Σ over batch shingles of stored df — the head-share
     *    discipline of [[jaccardPairsAuto]] applies to this join as
     *    the corpus grows, same future seam), verified by exact
-    *    Jaccard ≥ 0.5 on stored sizes; plus batch-vs-corpus md5
-    *    matches (one representative per digest suffices — the stored
-    *    group is already connected);
-    *  - intra-batch edges via the same machinery as [[clustersOf]];
+    *    Jaccard ≥ [[ClusterJaccard]] on stored sizes; plus
+    *    batch-vs-corpus md5 matches (one representative per digest
+    *    suffices — the stored group is already connected);
+    *  - intra-batch edges = [[duplicateEdges]] over the batch's
+    *    idempotence-FILTERED evidence — the rule [[clustersOf]]
+    *    applies to a corpus; a replayed doc contributes no edge, so a
+    *    redelivered batch touches no label;
     *  - connected components over the TOUCHED subgraph only: batch
     *    ids, plus affected old docs collapsed to their current
     *    cluster labels (so a component's new id = min over all true
@@ -1252,11 +1272,12 @@ object Dedup {
       val rawMeta = spark.read.schema(clusterMetaSchema).parquet(s"$path/meta")
       val oldMeta = indexTombstones(spark, path)
         .fold(rawMeta)(t => rawMeta.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      val (bMetaRaw, bPostRaw) = clusterEvidence(batch)
       // idempotence under replay: a crash-retried or at-least-once
-      // redelivered batch skips docs already indexed — duplicated
-      // evidence rows would inflate shared-shingle counts and could
-      // push false pairs over the Jaccard threshold. The anti-join is
+      // redelivered batch skips docs already indexed — BEFORE any
+      // evidence is derived, so a replayed doc contributes neither
+      // evidence rows (duplicates would inflate shared-shingle counts
+      // and could push false pairs over the Jaccard threshold) nor
+      // edges (it would relabel its stored cluster). The anti-join is
       // against the RAW meta: a tombstoned id stays retracted until
       // compaction; re-ingesting a retracted id is out of contract —
       // ingest assigns fresh ids. The standing side is pre-filtered
@@ -1264,30 +1285,21 @@ object Dedup {
       // bands, so each standing meta file's parquet min/max footer
       // stats skip it unless it overlaps the batch — the probe reads
       // ~the files a replay would actually hit, not the whole corpus.
-      val bBounds = bMetaRaw.agg(min(col("doc_id")), max(col("doc_id"))).head()
+      val bBounds = batch.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val standingProbe =
         if (bBounds.isNullAt(0)) rawMeta.select(col("doc_id"))
         else rawMeta.select(col("doc_id"))
           .filter(col("doc_id").between(bBounds.getLong(0), bBounds.getLong(1)))
-      val bMeta = bMetaRaw
-        .join(standingProbe, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      val bPost = bPostRaw.join(bMeta.select(col("doc_id")), Seq("doc_id"))
-        .localCheckpoint()
+      val (bDigests, bSh) =
+        clusterEvidence(batch.join(standingProbe, Seq("doc_id"), "left_anti"))
+      val bMeta = clusterMeta(bDigests, bSh).localCheckpoint()
+      val bPost = clusterPostings(bSh)
       // partition-prune the standing postings to the batch's shingle
       // buckets: ≤ ClusterPostingsBuckets values, so the collect is
       // constant-bounded regardless of batch size
       val batchBuckets = bPost.select(col("gb")).distinct()
         .collect().map(_.getInt(0)).toSeq
       val oldPost = standingPostings(spark, path, batchBuckets)
-
-      // batch-bounded broadcast guard (the pairSide rationale): the
-      // batch's digest/candidate frames ride map-side into the
-      // standing-meta scans when small, fall back to shuffle when not.
-      // Callers pass localCheckpointed frames — the count is a cached
-      // read, never a recompute.
-      def bounded(f: DataFrame): DataFrame =
-        if (f.count() <= VerifyBroadcastLimit) broadcast(f) else f
 
       // exact cross edges: batch digest meets any stored doc with the
       // same digest (min representative — the stored group, if multi,
@@ -1297,7 +1309,7 @@ object Dedup {
       // groupBy the unpruned form paid per append.
       val bDig = bMeta.select(col("h")).distinct().localCheckpoint()
       val exactCross = bMeta.select(col("doc_id").as("b"), col("h"))
-        .join(oldMeta.join(bounded(bDig), Seq("h"))
+        .join(oldMeta.join(pairSide(bDig), Seq("h"))
           .groupBy(col("h")).agg(min(col("doc_id")).as("o")), "h")
         .select(col("b"), col("o"))
       // Jaccard cross edges: common = shared-shingle count, sizes from
@@ -1307,11 +1319,11 @@ object Dedup {
         .join(oldPost.select(col("gh"), col("doc_id").as("o")), "gh")
         .groupBy(col("b"), col("o")).agg(count(lit(1)).as("common"))
         .localCheckpoint()
-      val jacCross = bounded(common
+      val jacCross = pairSide(common
           .join(bMeta.select(col("doc_id").as("b"), col("n_g").as("n_b")), "b")
           .localCheckpoint())
         .join(oldMeta.select(col("doc_id").as("o"), col("n_g").as("n_o")), "o")
-        .filter(round(col("common") / (col("n_b") + col("n_o") - col("common")), 6) >= 0.5)
+        .filter(jaccardOf(col("common"), col("n_b"), col("n_o")) >= ClusterJaccard)
         .select(col("b"), col("o"))
 
       // current labels are read for the TOUCHED old docs only — the
@@ -1321,17 +1333,8 @@ object Dedup {
       val oCand = exactCross.select(col("o").as("doc_id"))
         .unionByName(common.select(col("o").as("doc_id")))
         .distinct().localCheckpoint()
-      val labels = readClusterIndex(spark, path, Some(bounded(oCand)))
+      val labels = readClusterIndex(spark, path, Some(pairSide(oCand)))
         .localCheckpoint()
-      // intra-batch edges (same construction as clustersOf)
-      val wH = Window.partitionBy(col("h"))
-      val exactIntra = bMeta
-        .withColumn("keeper", min(col("doc_id")).over(wH))
-        .filter(col("doc_id") =!= col("keeper"))
-        .select(col("keeper").as("a"), col("doc_id").as("b"))
-      val jacIntra = jaccardPairsAuto(trigrams(batch), 0.5)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"))
-
       // collapse old endpoints to their CURRENT labels, then resolve
       // the touched subgraph
       val oldLab = labels.withColumnRenamed("doc_id", "o")
@@ -1339,8 +1342,7 @@ object Dedup {
       val crossEdges = exactCross.unionByName(jacCross).distinct()
         .join(oldLab, Seq("o"), "left")
         .select(col("b").as("a"), coalesce(col("root"), col("o")).as("b"))
-      val comp = connectedComponents(
-        exactIntra.unionByName(jacIntra).unionByName(crossEdges))
+      val comp = connectedComponents(duplicateEdges(bMeta, bSh).unionByName(crossEdges))
         .localCheckpoint()
 
       // new membership rows: batch docs, plus previously-UNstored old
@@ -1393,8 +1395,8 @@ object Dedup {
     * Cost shape: tombstones land at |batch|; the re-resolution runs
     * over the TOUCHED clusters only — their members' stored postings
     * and meta rows (semi-joined by member id out of the standing
-    * tables) feed the same exact shared-shingle ∪ digest edge
-    * derivation [[clustersOf]] uses, then CC over that subgraph.
+    * tables) feed [[duplicateEdges]] — the edge rule [[clustersOf]]
+    * resolves a corpus with — then CC over that subgraph.
     * Nothing corpus-wide is recomputed; untouched clusters are never
     * read. Superseding rows append at the next seq; merge redirects
     * referencing any touched label are purged (every doc that could
@@ -1432,28 +1434,13 @@ object Dedup {
         // stored evidence of the live members only (tombstones are
         // already applied table-side; the semi-join bounds the rest)
         val metaL = liveClusterTable(spark, path, "meta", clusterMetaSchema)
-          .join(liveIds, Seq("doc_id")).localCheckpoint()
-        val postL = liveClusterTable(spark, path, "postings", clusterPostingsSchema)
           .join(liveIds, Seq("doc_id"))
-        // same edge derivation as clustersOf, restricted to the
-        // touched live members: exact digest groups ∪ shared-shingle
-        // Jaccard ≥ 0.5 (skew-robust pair emission via postingPairs)
-        val wH = Window.partitionBy(col("h"))
-        val exactE = metaL
-          .withColumn("keeper", min(col("doc_id")).over(wH))
-          .filter(col("doc_id") =!= col("keeper"))
-          .select(col("keeper").as("a"), col("doc_id").as("b"))
-        val commonP = postingPairs(
-            postL.groupBy(col("gh")).agg(collect_list(col("doc_id")).as("ds"))
-              .filter(size(col("ds")) > 1))
-          .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("common"))
-        val jacE = commonP
-          .join(metaL.select(col("doc_id").as("doc_a"), col("n_g").as("n_a")), "doc_a")
-          .join(metaL.select(col("doc_id").as("doc_b"), col("n_g").as("n_b")), "doc_b")
-          .filter(round(col("common") / (col("n_a") + col("n_b") - col("common")), 6) >= 0.5)
-          .select(col("doc_a").as("a"), col("doc_b").as("b"))
-        val comp = connectedComponents(exactE.unionByName(jacE).distinct())
+        val shL = liveClusterTable(spark, path, "postings", clusterPostingsSchema)
+          .join(liveIds, Seq("doc_id"))
+          .groupBy(col("doc_id")).agg(collect_list(col("gh")).as("gh"))
           .localCheckpoint()
+        // the clustersOf edge rule, restricted to the touched live members
+        val comp = connectedComponents(duplicateEdges(metaL, shL)).localCheckpoint()
         // fresh rows for EVERY live member: its new component min, or
         // the dissolved marker if no edge survives
         val seq = nextClusterSeq(spark, path)
@@ -1580,16 +1567,6 @@ object Dedup {
     graft.sources.IndexStats.build(spark, "dedup", rawPath, DedupLayoutTables, debt)
   }
 
-  /** Near-dup pairs of `batch` against the standing index PLUS within
-    * the batch itself — exactly the pairs a full [[minhashPairs]] run
-    * over (indexed ∪ batch) would emit that touch a batch doc, at
-    * batch-scan cost: the batch's bands broadcast into one pass over
-    * the at-rest postings (doc_a = indexed side, doc_b = batch side),
-    * batch-internal candidates come from the batch's own band
-    * buckets, and verification fetches indexed shingle sets by
-    * id-only broadcast. The standing corpus is never re-shingled,
-    * re-signed, or shuffled.
-    */
   /** At-rest layouts are read with EXPLICIT schemas: no inference
     * cost at scale, and an EMPTY standing index (a fresh deployment's
     * first crawl) reads as an empty frame instead of failing schema
@@ -1600,6 +1577,16 @@ object Dedup {
   private val shinglesSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "doc_id BIGINT, gh ARRAY<BIGINT>")
 
+  /** Near-dup pairs of `batch` against the standing index PLUS within
+    * the batch itself — exactly the pairs a full [[minhashPairs]] run
+    * over (indexed ∪ batch) would emit that touch a batch doc, at
+    * batch-scan cost: the batch's bands broadcast into one pass over
+    * the at-rest postings (doc_a = indexed side, doc_b = batch side),
+    * batch-internal candidates come from the batch's own band
+    * buckets, and verification fetches indexed shingle sets by
+    * id-only broadcast. The standing corpus is never re-shingled,
+    * re-signed, or shuffled.
+    */
   def dedupAgainstIndex(spark: SparkSession, batch: DataFrame, rawPath: String,
                         threshold: Double = 0.3): DataFrame = {
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
@@ -1831,9 +1818,9 @@ object Dedup {
     * separates sit two orders of magnitude apart.
     * None when no shingle is shared by two docs.
     */
-  private[graft] def measuredHeadShare(tri: DataFrame): Option[Double] = {
-    val dfT = tri
-      .select(explode(expr("transform(gs, g -> xxhash64(g))")).as("gh"))
+  private[graft] def measuredHeadShare(sh: DataFrame): Option[Double] = {
+    val dfT = sh
+      .select(explode(col("gh")).as("gh"))
       .groupBy(col("gh")).agg(count(lit(1)).as("df"))
       .filter(col("df") > 1)
       .localCheckpoint() // feeds the total AND the conditional head sum
@@ -1860,12 +1847,12 @@ object Dedup {
     * cheap next to either variant's own df-shaped shuffle, and free
     * of driver-growth terms.
     */
-  private[graft] def jaccardPairsAuto(tri: DataFrame, t: Double): DataFrame =
-    measuredHeadShare(tri) match {
+  private[graft] def jaccardPairsAuto(sh: DataFrame, t: Double): DataFrame =
+    measuredHeadShare(sh) match {
       case Some(share) if share >= PairHeadShareCrossover =>
-        jaccardPairsThresholded(tri, t)
+        jaccardPairsThresholded(sh, t)
       case _ => // below crossover, or no shingle shared by 2 docs
-        jaccardPairs(tri, materializePairs = true).filter(col("jaccard") >= t)
+        jaccardPairs(sh, materializePairs = true).filter(col("jaccard") >= t)
     }
 
   /** Duplicate-cluster resolution (SQL-oracled via a recursive CTE):
@@ -1884,22 +1871,8 @@ object Dedup {
     * at-rest [[writeClusterIndex]].
     */
   private[graft] def clustersOf(docs: DataFrame): DataFrame = {
-    val hashed = docs.select(col("doc_id"), md5(lower(trim(col("text")))).as("h"))
-    val wH = Window.partitionBy(col("h"))
-    val exactEdges = hashed
-      .withColumn("keeper", min(col("doc_id")).over(wH))
-      .filter(col("doc_id") =!= col("keeper"))
-      .select(col("keeper").as("a"), col("doc_id").as("b"))
-    // the pair strategy is measured per corpus ([[jaccardPairsAuto]]):
-    // the driver corpus's near-uniform trigram df keeps the plain
-    // Σdf² aggregate (prefix verification would cost more than the
-    // straight count — and the oracle hash is bit-identical either
-    // way); a natural Zipf-df corpus routes through the PPJoin prefix
-    // filter, whose candidate mass stays near the true near-dup mass
-    // while plain Σdf² goes quadratic with the boilerplate head.
-    val nearEdges = jaccardPairsAuto(trigrams(docs), 0.5)
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    connectedComponents(exactEdges.unionByName(nearEdges))
+    val (digests, sh) = clusterEvidence(docs)
+    connectedComponents(duplicateEdges(digests, sh))
       .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
   }
 

@@ -725,8 +725,7 @@ object VectorIndex {
     * non-probed family prunes to `assign_rank=0` at the listing and
     * never pays for the spill copies.
     */
-  private def encodeAndWrite(df: DataFrame, meta: Meta, path: String, mode: String,
-                             writeLsh: Boolean = true): Unit = {
+  private def encodeAndWrite(df: DataFrame, meta: Meta, path: String, mode: String): Unit = {
     val assigned = df.select(col("*"), posexplode(
       Ann.spillClusters(col("embedding"), meta.centroids, Ann.SpillAssign))
       .as(Seq("assign_rank", "cluster_id")))
@@ -756,7 +755,7 @@ object VectorIndex {
     // so the exchange has no skewed reducer.
     enc.repartition(col("cluster_id"), col("assign_rank"))
       .write.mode(mode).partitionBy("cluster_id", "assign_rank").parquet(s"$path/vectors")
-    if (writeLsh) writeLshTable(df, meta, s"$path/lsh", mode)
+    writeLshTable(df, meta, s"$path/lsh", mode)
   }
 
   /** The signature-postings table, written under the meta's banding
@@ -1146,10 +1145,6 @@ object VectorIndex {
     rerankFromRest(spark, path, queries, cand, vec.l2(_, _), metricAsc = true, k, cached)
   }
 
-  /** IVF_PQ from rest — partition pruning × code-width pruning
-    * compose: the scan reads codes only, and only for probed
-    * partitions.
-    */
   /** The IVF_PQ candidate scoring shared by serving and pool
     * calibration: partition-pruned code scan of probed lists,
     * per-(query, probed-list) ADC, spill copies collapsed in a
@@ -1183,6 +1178,10 @@ object VectorIndex {
       .groupBy(col("q_id"), col("vec_id")).agg(min(col("adc_dist")).as("adc_dist"))
   }
 
+  /** IVF_PQ from rest — partition pruning × code-width pruning
+    * compose: the scan reads codes only, and only for probed
+    * partitions.
+    */
   def searchIvfPq(spark: SparkSession, rawPath: String, queries: DataFrame,
                   nprobe: Int = -1, k: Int = Quantization.K,
                   pool: Int = -1,

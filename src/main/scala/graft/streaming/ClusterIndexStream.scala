@@ -8,10 +8,9 @@ import graft.operators.Dedup
   * the cluster twin of [[NearDupStream]]'s MinHash admission gate:
   * every arriving micro-batch of documents is folded into the
   * standing cluster index
-  * ([[graft.operators.Dedup.appendToClusterIndex]]), so the
-  * registered cluster consumers ([[graft.operators.Dedup.dupClusters]]
-  * when the index is installed) always see the current membership
-  * without any corpus re-resolution.
+  * ([[graft.operators.Dedup.appendToClusterIndex]]), so readers of
+  * the index ([[graft.operators.Dedup.readClusterIndex]]) always see
+  * the current membership without any corpus re-resolution.
   *
   * State lives in the PARTITIONED PARQUET INDEX, not the streaming
   * state store: the index's exactness contract (read-after-append ≡
@@ -23,9 +22,9 @@ import graft.operators.Dedup
   *
   * Replay-safe: `foreachBatch` is at-least-once, and the append is
   * idempotent by construction — already-indexed doc ids are
-  * anti-joined out of the batch before any evidence or membership
-  * row is written, so a redelivered micro-batch is a no-op rather
-  * than an evidence duplication.
+  * anti-joined out of the batch before any evidence, edge or
+  * membership row is derived, so a redelivered micro-batch is a
+  * no-op rather than an evidence duplication or a relabel.
   */
 object ClusterIndexStream {
 

@@ -250,6 +250,24 @@ class DedupSpec extends SparkSpec {
       "replay duplicated meta rows")
     assert(spark.read.parquet(s"$home/postings").count() == post1,
       "replay duplicated postings — shared-shingle counts would inflate")
+
+    // a batch that joins an OLDER cluster with a lower id: replaying it
+    // must leave every doc on the old cluster's id — the replayed docs
+    // carry no evidence, so they contribute no intra-batch edge
+    val home2 = graft.operators.IndexCache.tempDir("graft-cluster-replay-join") + "/cidx"
+    val base2 = Seq((1L, "a b c d e f g h i j k l")).toDF("doc_id", "text")
+    val batch2 = Seq((2L, "a b c d e f g h i j k"), (3L, "a b c d e f g h i j"))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "cluster_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val union = rows(Dedup.clustersOf(base2.unionByName(batch2)))
+    assert(union == Set((1L, 1L), (2L, 1L), (3L, 1L)))
+    Dedup.writeClusterIndex(base2, home2)
+    Dedup.appendToClusterIndex(batch2, home2)
+    assert(rows(Dedup.readClusterIndex(spark, home2)) == union)
+    Dedup.appendToClusterIndex(batch2, home2)
+    assert(rows(Dedup.readClusterIndex(spark, home2)) == union,
+      "a replayed batch relabelled docs already stored")
   }
 
   test("at-rest cluster index equals the session-materialized resolution") {
@@ -805,7 +823,7 @@ class DedupSpec extends SparkSpec {
     // admits ties, so this sits a few× above the former top-k's
     // 0.5–0.7%, still an order of magnitude under the crossover)
     val shareDriver =
-      Dedup.measuredHeadShare(Dedup.trigrams(Dedup.augmentedDocs(spark, sfDir))).get
+      Dedup.measuredHeadShare(Dedup.hashedShingles(Dedup.augmentedDocs(spark, sfDir))).get
     assert(shareDriver < Dedup.PairHeadShareCrossover,
       s"driver corpus head share $shareDriver must keep the plain aggregate")
     // boilerplate-dominated corpus: a shared template sentence with
@@ -814,25 +832,25 @@ class DedupSpec extends SparkSpec {
       val tail = (0 until 30).map(j => s"w${i}x$j").mkString(" ")
       (i.toLong, s"terms of service apply to all content on this site $tail")
     }.toDF("doc_id", "text")
-    val shareZipf = Dedup.measuredHeadShare(Dedup.trigrams(zipf)).get
+    val shareZipf = Dedup.measuredHeadShare(Dedup.hashedShingles(zipf)).get
     assert(shareZipf >= Dedup.PairHeadShareCrossover,
       s"boilerplate corpus head share $shareZipf must route to the prefix filter")
     // no shared shingle at all: the probe declines and auto falls
     // back to the (trivial) plain path
     val uniq = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
       .toDF("doc_id", "text")
-    assert(Dedup.measuredHeadShare(Dedup.trigrams(uniq)).isEmpty)
-    assert(Dedup.jaccardPairsAuto(Dedup.trigrams(uniq), 0.5).isEmpty)
+    assert(Dedup.measuredHeadShare(Dedup.hashedShingles(uniq)).isEmpty)
+    assert(Dedup.jaccardPairsAuto(Dedup.hashedShingles(uniq).localCheckpoint(), 0.5).isEmpty)
   }
 
   test("prefix-filtered thresholded Jaccard pairs equal the full aggregate") {
-    val tri = Dedup.trigrams(Dedup.augmentedDocs(spark, sfDir)).localCheckpoint()
+    val sh = Dedup.hashedShingles(Dedup.augmentedDocs(spark, sfDir)).localCheckpoint()
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
         r.getAs[Long]("common"), r.getAs[Double]("jaccard")))
       .sortBy(t => (t._1, t._2)).toSeq
-    val full = canon(Dedup.jaccardPairs(tri).filter(col("jaccard") >= 0.5))
-    val pref = canon(Dedup.jaccardPairsThresholded(tri, 0.5))
+    val full = canon(Dedup.jaccardPairs(sh).filter(col("jaccard") >= 0.5))
+    val pref = canon(Dedup.jaccardPairsThresholded(sh, 0.5))
     assert(full.nonEmpty)
     assert(pref == full,
       s"prefix filter diverged: ${(pref.toSet -- full.toSet).take(3)} extra, " +

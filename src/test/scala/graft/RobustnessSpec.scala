@@ -141,4 +141,11 @@ class RobustnessSpec extends SparkSpec {
     assert(sliceWidth(parts = 64, floor = 4, storedBytes = 40L << 20) == 10)
     assert(sliceWidth(parts = 64, floor = 4, storedBytes = 1L << 40) == 64)
   }
+
+  test("bench failure lines stay parseable JSON whatever the exception message holds") {
+    val msg = "boom\u0000 \f\u001b[31mred\u001b[0m \"q\" \\ \n\r\t\u0001 é"
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(s"""{"fatal":${Bench.jstr(msg)}}""")
+    assert(node.get("fatal").asText() == msg)
+  }
 }
