@@ -224,8 +224,7 @@ object SlopeBench {
       operators.VectorIndex.buildFrom(spark, Tables.embeddings(spark, dir),
         s"target/slope/bench-vidx"); () },
     "text_index_build" -> { dir: String =>
-      api.TextIndex.write(Tables.documents(spark, dir),
-        s"target/slope/bench-tidx", "doc_id", "text"); () },
+      api.TextIndex.write(Tables.documents(spark, dir), s"target/slope/bench-tidx"); () },
     "minhash_index_build" -> { dir: String =>
       operators.Dedup.writeMinhashIndex(Tables.documents(spark, dir),
         s"target/slope/bench-midx"); () },

@@ -1,8 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
+import graft.sources.Tombstones
 
 /** Full-text relevance over any document DataFrame (id column + text
   * column) — the Elasticsearch side of the reference's unified
@@ -329,8 +331,11 @@ final case class TextIndex(docs: DataFrame, idCol: String = "doc_id",
           .as("dbsf"))
   }
 
-  /** Persist this index's inverted form — see [[TextIndex.write]]. */
-  def writeIndex(path: String): Unit = TextIndex.write(docs, path, idCol, textCol)
+  /** Persist this index's inverted form, under the layout's fixed
+    * column names — see [[TextIndex.write]].
+    */
+  def writeIndex(path: String): Unit =
+    TextIndex.write(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")), path)
 }
 
 /** The at-rest inverted index — the third standing index next to the
@@ -342,7 +347,9 @@ final case class TextIndex(docs: DataFrame, idCol: String = "doc_id",
   * ≤ |terms| of [[TextIndex.TokenBuckets]] partitions — the
   * partition-pruning trick the IVF layout uses for centroids, applied
   * to the vocabulary. df and corpus stats are tiny side tables that
-  * broadcast into the scoring join.
+  * broadcast into the scoring join. The layout's columns are fixed,
+  * `doc_id` (BIGINT) and `text`: the frames every verb here takes
+  * carry those names.
   */
 object TextIndex {
 
@@ -364,9 +371,7 @@ object TextIndex {
     * Same design as the MinHash dedup index: index maintenance never
     * reads or rewrites standing data.
     */
-  def write(docs: DataFrame, path: String,
-            idCol: String = "doc_id", textCol: String = "text"): Unit =
-    writeBatch(docs, path, idCol, textCol, "overwrite")
+  def write(docs: DataFrame, path: String): Unit = writeBatch(docs, path, "overwrite")
 
   /** Fold a new document batch into the standing index: batch-sized
     * appends into the postings partition layout plus delta rows in
@@ -374,10 +379,9 @@ object TextIndex {
     * over (standing ∪ batch) — df and avgdl fold from the deltas.
     * Callers own id disjointness (an upsert would compact first).
     */
-  def append(docs: DataFrame, path: String,
-             idCol: String = "doc_id", textCol: String = "text"): Unit =
+  def append(docs: DataFrame, path: String): Unit =
     graft.sources.WriterLease.exclusive(docs.sparkSession, path) {
-      writeBatch(docs, path, idCol, textCol, "append")
+      writeBatch(docs, path, "append")
     }
 
   /** Zero-downtime rebuild of a ROTATING text index (see
@@ -387,18 +391,16 @@ object TextIndex {
     * accumulated tombstone/delta debt to zero without a service gap.
     * Returns the new generation's path.
     */
-  def rotate(docs: DataFrame, home: String,
-             idCol: String = "doc_id", textCol: String = "text"): String = {
+  def rotate(docs: DataFrame, home: String): String = {
     val spark = docs.sparkSession
     graft.sources.WriterLease.exclusive(spark, home) {
-      graft.sources.LayoutRewrite.nextGeneration(spark, home)(write(docs, _, idCol, textCol))
+      graft.sources.LayoutRewrite.nextGeneration(spark, home)(write(docs, _))
     }
   }
 
-  private def writeBatch(docs: DataFrame, rawPath: String,
-                         idCol: String, textCol: String, mode: String): Unit = {
+  private def writeBatch(docs: DataFrame, rawPath: String, mode: String): Unit = {
     val path = graft.sources.IndexAlias.resolve(docs.sparkSession, rawPath)
-    val post = tokenized(docs, idCol, textCol)
+    val post = tokenized(docs)
       .withColumn("tok_bucket", pmod(xxhash64(col("token")), lit(TokenBuckets.toLong)))
       .localCheckpoint() // feeds both the postings and the vocab write
     post.write.mode(mode).partitionBy("tok_bucket").parquet(s"$path/postings")
@@ -411,7 +413,7 @@ object TextIndex {
     // frame could then yield stats inconsistent with the postings.
     // Even a doc whose text is empty has one posting row (split("")
     // is [""]), so n_docs matches a direct count of `docs`.
-    post.groupBy(col(idCol)).agg(first(col("dl")).as("dl"))
+    post.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .write.mode(mode).parquet(s"$path/stats")
   }
@@ -419,20 +421,29 @@ object TextIndex {
   /** Layout tables of the at-rest text index, as [[stats]] reports
     * them (see [[graft.sources.IndexStats]]).
     */
-  private val LayoutTables = Seq("postings", "vocab", "stats", "tombstones")
+  private val LayoutTables = Seq("postings", "vocab", "stats", Tombstones.Table)
+
+  /** Explicit schemas: no inference at scale, and an EMPTY standing
+    * index (fresh deployment) reads as an empty frame.
+    */
+  private val PostingsSchema =
+    StructType.fromDDL("doc_id BIGINT, token STRING, tf BIGINT, dl BIGINT, tok_bucket BIGINT")
+  private val VocabSchema = StructType.fromDDL("token STRING, df BIGINT")
+  private val StatsSchema = StructType.fromDDL("n_docs BIGINT, sum_dl BIGINT")
 
   /** Per-(doc, token) tf + doc length — the shared indexing scan. */
-  private def tokenized(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = split(col(textCol), " ")
+  private def tokenized(docs: DataFrame): DataFrame = {
+    val toks = split(col("text"), " ")
     docs
-      .select(col(idCol), size(toks).cast("long").as("dl"), explode(toks).as("token"))
-      .groupBy(col(idCol), col("token"))
+      .select(col("doc_id"), size(toks).cast("long").as("dl"), explode(toks).as("token"))
+      .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
   }
 
   /** Remove a document batch from the standing index (ES delete /
     * delete_by_query with its Lucene delete-docs + segment-merge
-    * lifecycle): the deleted ids land in `path/tombstones` and the
+    * lifecycle): the deleted ids land in the layout's
+    * [[graft.sources.Tombstones]] table and the
     * batch's df / corpus-stats contributions append as NEGATIVE delta
     * rows to the same mergeable side tables [[append]] uses — the
     * standing postings are never read or rewritten, and searches
@@ -451,8 +462,7 @@ object TextIndex {
     * only the tombstone set, whose size is bounded by the compaction
     * cadence, so the delete still costs |batch|.
     */
-  def delete(docs: DataFrame, rawPath: String,
-             idCol: String = "doc_id", textCol: String = "text"): Unit = {
+  def delete(docs: DataFrame, rawPath: String): Unit = {
     val path = graft.sources.IndexAlias.resolve(docs.sparkSession, rawPath)
     // the replay-safety anti-join is check-then-act: same-JVM
     // deleters serialize, and a second process is fenced by the
@@ -460,29 +470,17 @@ object TextIndex {
     // pass the tombstone check and double-subtract the deltas
     // (see WriterLease / the README contract table)
     graft.sources.WriterLease.exclusive(docs.sparkSession, rawPath) {
-      val fresh = tombstones(docs.sparkSession, path, idCol)
-        .fold(docs)(t => docs.join(broadcast(t), Seq(idCol), "left_anti"))
-      val post = tokenized(fresh, idCol, textCol).localCheckpoint()
+      val fresh = Tombstones.liveOnly(docs.sparkSession, path, "doc_id")(docs)
+      val post = tokenized(fresh).localCheckpoint()
       if (!post.isEmpty) {
         post.groupBy(col("token")).agg((-count(lit(1))).as("df"))
           .write.mode("append").parquet(s"$path/vocab")
-        post.groupBy(col(idCol)).agg(first(col("dl")).as("dl"))
+        post.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
           .agg((-count(lit(1))).as("n_docs"), (-sum(col("dl"))).as("sum_dl"))
           .write.mode("append").parquet(s"$path/stats")
-        post.select(col(idCol)).distinct()
-          .write.mode("append").parquet(s"$path/tombstones")
+        Tombstones.append(path, post.select(col("doc_id")).distinct())
       }
     }
-  }
-
-  private def tombstones(spark: org.apache.spark.sql.SparkSession, path: String,
-                         idCol: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(s"$idCol BIGINT"))
-      .parquet(p.toString))
-    else None
   }
 
   /** Apply pending tombstones physically (the segment-merge step):
@@ -494,23 +492,20 @@ object TextIndex {
     * concrete path an in-place rewrite that, once the next writer
     * recovers a crash, reads exactly as before or exactly as after.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, rawPath: String,
-              idCol: String = "doc_id"): Unit =
+  def compact(spark: SparkSession, rawPath: String): Unit =
    graft.sources.WriterLease.exclusive(spark, rawPath) {
     import org.apache.hadoop.fs.Path
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tomb = tombstones(spark, path, idCol)
-    def table(sub: String, ddl: String)(write: (DataFrame, String) => Unit) =
-      graft.sources.LayoutRewrite.Table(sub, out => write(spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .parquet(s"$path/$sub"), out))
+    val alive = Tombstones.liveOnly(spark, path, "doc_id")
+    def table(sub: String, schema: StructType)(write: (DataFrame, String) => Unit) =
+      graft.sources.LayoutRewrite.Table(sub, out =>
+        write(spark.read.schema(schema).parquet(s"$path/$sub"), out))
     graft.sources.LayoutRewrite.rewrite(spark, rawPath, Seq(
-      table("postings", s"$idCol BIGINT, token STRING, tf BIGINT, dl BIGINT, tok_bucket BIGINT") {
-        (p, out) => tomb.fold(p)(t => p.join(broadcast(t), Seq(idCol), "left_anti"))
-          .write.partitionBy("tok_bucket").parquet(out)
+      table("postings", PostingsSchema) { (p, out) =>
+        alive(p).write.partitionBy("tok_bucket").parquet(out)
       },
-      table("vocab", "token STRING, df BIGINT") { (v, out) =>
+      table("vocab", VocabSchema) { (v, out) =>
         // Heaps' law: no coalesce(1) funnel for the vocabulary. Range-
         // clustered by token, file count tracks bytes and the pushed-
         // down `token IN (...)` lookup skips files on footer min/max
@@ -520,10 +515,10 @@ object TextIndex {
           .repartitionByRange(nFiles, col("token")).sortWithinPartitions(col("token"))
           .write.parquet(out)
       },
-      table("stats", "n_docs BIGINT, sum_dl BIGINT") { (st, out) =>
+      table("stats", StatsSchema) { (st, out) =>
         st.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
           .coalesce(1).write.parquet(out)
-      }), debt = Seq("tombstones"))
+      }), debt = Seq(Tombstones.Table))
     ()
   }
 
@@ -534,19 +529,16 @@ object TextIndex {
     * `debt_rows` on the `stats` table; tombstone debt is the pending
     * retraction count.
     */
-  def stats(spark: org.apache.spark.sql.SparkSession, rawPath: String,
-            idCol: String = "doc_id"): DataFrame = {
+  def stats(spark: SparkSession, rawPath: String): DataFrame = {
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
     val statsRows = {
       val p = new org.apache.hadoop.fs.Path(s"$path/stats")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) 0L
-      else spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL("n_docs BIGINT, sum_dl BIGINT"))
-        .parquet(p.toString).count()
+      else spark.read.schema(StatsSchema).parquet(p.toString).count()
     }
     val debt = Map(
-      "tombstones" -> tombstones(spark, path, idCol).fold(0L)(_.count()),
+      Tombstones.Table -> Tombstones.pending(spark, path, "doc_id"),
       "stats" -> math.max(0L, statsRows - 1L))
     graft.sources.IndexStats.build(spark, "text", rawPath, LayoutTables, debt)
   }
@@ -558,35 +550,23 @@ object TextIndex {
     * themselves (both reach the parquet reader), df/stats broadcast.
     * Per-query cost scales with posting-list length, not corpus size.
     */
-  def bm25AtRest(spark: org.apache.spark.sql.SparkSession, rawPath: String,
-                 terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-                 idCol: String = "doc_id"): DataFrame = {
+  def bm25AtRest(spark: SparkSession, rawPath: String,
+                 terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
     // planning-time bucket ids for the terms (must be Spark's own
     // xxhash64 so driver and layout agree) — |terms| rows, local
     val buckets = spark.range(1).select(
       terms.map(t => pmod(xxhash64(lit(t)), lit(TokenBuckets.toLong))): _*)
       .collect()(0).toSeq.map(_.asInstanceOf[Long]).distinct
-    // explicit schemas: no inference at scale, and an EMPTY standing
-    // index (fresh deployment) reads as an empty frame (long ids —
-    // the collection contract throughout)
-    val post0 = spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        s"$idCol BIGINT, token STRING, tf BIGINT, dl BIGINT, tok_bucket BIGINT"))
+    // tombstoned docs drop from the pruned postings
+    val post = Tombstones.liveOnly(spark, path, "doc_id")(spark.read.schema(PostingsSchema)
       .parquet(s"$path/postings")
-      .filter(col("tok_bucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    // tombstoned docs drop from the pruned postings via a broadcast
-    // anti-join (the tombstone set is bounded by compaction cadence)
-    val post = tombstones(spark, path, idCol)
-      .fold(post0)(t => post0.join(broadcast(t), Seq(idCol), "left_anti"))
+      .filter(col("tok_bucket").isin(buckets: _*) && col("token").isin(terms: _*)))
     // fold the per-batch deltas (broadcast-sized side tables)
-    val df = spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL("token STRING, df BIGINT"))
+    val df = spark.read.schema(VocabSchema)
       .parquet(s"$path/vocab").filter(col("token").isin(terms: _*))
       .groupBy(col("token")).agg(sum(col("df")).as("df"))
-    val stats = spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL("n_docs BIGINT, sum_dl BIGINT"))
-      .parquet(s"$path/stats")
+    val stats = spark.read.schema(StatsSchema).parquet(s"$path/stats")
       .agg(sum(col("n_docs")).as("n_docs"),
         (sum(col("sum_dl")).cast("double") / sum(col("n_docs"))).as("avgdl"))
     val k1l = lit(k1); val bl = lit(b)
@@ -594,7 +574,7 @@ object TextIndex {
     val w = col("tf") * (k1l + 1) / (col("tf") + k1l * (lit(1) - bl + bl * col("dl") / col("avgdl")))
     post.join(broadcast(df), "token")
       .crossJoin(broadcast(stats))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(round(sum(idf * w), 6).as("bm25"))
   }
 }

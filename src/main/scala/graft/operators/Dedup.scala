@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.{hashes, vec}
+import graft.sources.Tombstones
 
 /** Deduplication family — the LLM-training-pipeline extension
   * (SURVEY.md §2 rows 19–23). The reference's backends dedup at
@@ -965,7 +966,7 @@ object Dedup {
   /** Layout tables of the at-rest dedup index, as [[indexStats]]
     * reports them (see [[graft.sources.IndexStats]]).
     */
-  private val DedupLayoutTables = Seq("postings", "shingles", "tombstones")
+  private val DedupLayoutTables = Seq("postings", "shingles", Tombstones.Table)
 
   /** Zero-downtime rebuild of a ROTATING dedup index (see
     * [[graft.sources.IndexAlias]]): re-shingle `docs` into the next
@@ -996,9 +997,9 @@ object Dedup {
   /** Retract documents from the at-rest dedup index — the takedown /
     * retention-compliance path of a training corpus (a removed doc
     * must stop vetoing future crawls that resemble it, and its
-    * shingle sets must stop being served). Ids land in
-    * `path/tombstones` at |batch| cost; probes anti-join them out of
-    * the standing postings and shingles, and
+    * shingle sets must stop being served). Ids land in the layout's
+    * [[graft.sources.Tombstones]] table at |batch| cost; probes drop
+    * them from the standing postings and shingles, and
     * [[compactMinhashIndex]] applies them physically.
     */
   def deleteFromMinhashIndex(spark: SparkSession, ids: Seq[Long], path: String): Unit = {
@@ -1016,8 +1017,7 @@ object Dedup {
   def deleteFromMinhashIndex(ids: DataFrame, rawPath: String): Unit =
     graft.sources.WriterLease.exclusive(ids.sparkSession, rawPath) {
       val path = graft.sources.IndexAlias.resolve(ids.sparkSession, rawPath)
-      ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-        .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
+      Tombstones.append(path, ids.select(col("doc_id").cast("long").as("doc_id")).distinct())
     }
 
   // ---- at-rest incremental cluster index ------------------------
@@ -1055,7 +1055,7 @@ object Dedup {
   // J = 0.5 recalls only ~0.64 of true pairs, which would silently
   // fracture clusters.
 
-  private val ClusterLayoutTables = Seq("postings", "meta", "clusters", "merges", "tombstones")
+  private val ClusterLayoutTables = Seq("postings", "meta", "clusters", "merges", Tombstones.Table)
 
   /** Bucket count of the postings layout's `gb` partition column. A
     * power of two sized so a directory listing stays trivial while a
@@ -1187,11 +1187,8 @@ object Dedup {
     * tombstone lands.
     */
   private def liveClusterTable(spark: SparkSession, path: String, sub: String,
-                               schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val base = spark.read.schema(schema).parquet(s"$path/$sub")
-    indexTombstones(spark, path)
-      .fold(base)(t => base.join(broadcast(t), Seq("doc_id"), "left_anti"))
-  }
+                               schema: org.apache.spark.sql.types.StructType): DataFrame =
+    Tombstones.liveOnly(spark, path, "doc_id")(spark.read.schema(schema).parquet(s"$path/$sub"))
 
   /** Current (doc_id, cluster_id) view: each doc's max-seq stored row
     * (deletes supersede by seq), flat merge redirects applied,
@@ -1270,8 +1267,7 @@ object Dedup {
       // anti-join (below) and, tombstone-filtered, the edge
       // derivation; both consumers prune to the columns they touch
       val rawMeta = spark.read.schema(clusterMetaSchema).parquet(s"$path/meta")
-      val oldMeta = indexTombstones(spark, path)
-        .fold(rawMeta)(t => rawMeta.join(broadcast(t), Seq("doc_id"), "left_anti"))
+      val oldMeta = Tombstones.liveOnly(spark, path, "doc_id")(rawMeta)
       // idempotence under replay: a crash-retried or at-least-once
       // redelivered batch skips docs already indexed — BEFORE any
       // evidence is derived, so a replayed doc contributes neither
@@ -1424,7 +1420,7 @@ object Dedup {
       // membership view BEFORE the new tombstones land — it tells us
       // which clusters the deleted docs sat in
       val labelsPre = readClusterIndex(spark, path).localCheckpoint()
-      del.coalesce(1).write.mode("append").parquet(s"$path/tombstones")
+      Tombstones.append(path, del)
       val touched = labelsPre.join(del, Seq("doc_id"))
         .select(col("cluster_id")).distinct().localCheckpoint()
       if (!touched.isEmpty) {
@@ -1494,7 +1490,7 @@ object Dedup {
         .write.parquet(_)),
       Table("merges", spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         clusterMergesSchema).write.parquet(_))),
-      debt = Seq("tombstones"))
+      debt = Seq(Tombstones.Table))
     ()
   }
 
@@ -1518,20 +1514,9 @@ object Dedup {
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
     val rows = spark.read.schema(clusterRowsSchema).parquet(s"$path/clusters")
     val debt = Map(
-      "tombstones" -> indexTombstones(spark, path).fold(0L)(_.count()),
+      Tombstones.Table -> Tombstones.pending(spark, path, "doc_id"),
       "clusters" -> (rows.count() - readClusterIndex(spark, path).count()))
     graft.sources.IndexStats.build(spark, "cluster", rawPath, ClusterLayoutTables, debt)
-  }
-
-  private val indexTombstonesSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
-
-  private def indexTombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.schema(indexTombstonesSchema).parquet(p.toString))
-    else None
   }
 
   /** Apply pending tombstones physically: postings and shingle sets
@@ -1543,16 +1528,15 @@ object Dedup {
   def compactMinhashIndex(spark: SparkSession, rawPath: String): Unit =
    graft.sources.WriterLease.exclusive(spark, rawPath) {
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
-    val tomb = indexTombstones(spark, path)
+    val alive = Tombstones.liveOnly(spark, path, "doc_id")
     def table(sub: String, schema: org.apache.spark.sql.types.StructType,
               partCols: Seq[String]) = graft.sources.LayoutRewrite.Table(sub, { dst =>
-      val base = spark.read.schema(schema).parquet(s"$path/$sub")
-      val out = tomb.fold(base)(t => base.join(broadcast(t), Seq("doc_id"), "left_anti"))
+      val out = alive(spark.read.schema(schema).parquet(s"$path/$sub"))
       (if (partCols.isEmpty) out.write else out.write.partitionBy(partCols: _*)).parquet(dst)
     })
     graft.sources.LayoutRewrite.rewrite(spark, rawPath,
       Seq(table("postings", postingsSchema, Seq("band_id")), table("shingles", shinglesSchema, Nil)),
-      debt = Seq("tombstones"))
+      debt = Seq(Tombstones.Table))
     ()
   }
 
@@ -1562,8 +1546,7 @@ object Dedup {
     */
   def indexStats(spark: SparkSession, rawPath: String): DataFrame = {
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
-    val debt = Map(
-      "tombstones" -> indexTombstones(spark, path).fold(0L)(_.count()))
+    val debt = Map(Tombstones.Table -> Tombstones.pending(spark, path, "doc_id"))
     graft.sources.IndexStats.build(spark, "dedup", rawPath, DedupLayoutTables, debt)
   }
 
@@ -1592,12 +1575,10 @@ object Dedup {
     val path = graft.sources.IndexAlias.resolve(spark, rawPath)
     val triB = hashedShingles(batch).localCheckpoint()
     val bandsB = bandPostings(triB)
-    // retracted docs must not veto the batch: anti-join the (bounded,
-    // broadcast) tombstone set out of the standing side
-    def minusTombstones(df: DataFrame): DataFrame =
-      indexTombstones(spark, path)
-        .fold(df)(t => df.join(broadcast(t), Seq("doc_id"), "left_anti"))
-    val postings = minusTombstones(
+    // retracted docs must not veto the batch: the tombstone set drops
+    // out of the standing side
+    val live = Tombstones.liveOnly(spark, path, "doc_id")
+    val postings = live(
       spark.read.schema(postingsSchema).parquet(s"$path/postings"))
     // no doc_id =!= doc_b self-pair filter: a batch doc legitimately
     // never shares an id with a standing row, so an id collision means
@@ -1615,7 +1596,7 @@ object Dedup {
           .agg(collect_list(col("doc_id")).as("ds"))
           .filter(size(col("ds")) > 1))
       .dropDuplicates("doc_a", "doc_b")
-    val shOld = minusTombstones(
+    val shOld = live(
       spark.read.schema(shinglesSchema).parquet(s"$path/shingles"))
     verifyJaccard(cross, shOld, triB, threshold)
       .unionByName(verifyJaccard(internal, triB, triB, threshold))
@@ -1640,7 +1621,11 @@ object Dedup {
     // union's two branches and every iteration below would otherwise
     // re-execute it from scratch
     val beforeE = sc0.getPersistentRDDs.keySet
-    val e = edges.select(col("a"), col("b")).localCheckpoint()
+    // lazy: the one job that materializes the checkpoint also counts
+    // it (an eager checkpoint's own count is discarded, and a Dataset
+    // count after it plans an aggregate exchange — two more AQE jobs)
+    val e = edges.select(col("a"), col("b")).localCheckpoint(eager = false)
+    val nEdges = e.queryExecution.toRdd.count()
     // the edge job also materialized the upstream pipeline's OWN
     // transient checkpoints (pair pools, hashed-shingle frames) —
     // they are dead now (e is lineage-free) but would otherwise hold
@@ -1664,7 +1649,6 @@ object Dedup {
     // measured as the dominant job count of every CC consumer at
     // bench scale — and remains the path for pathological duplicate
     // densities where the pair list itself is corpus-sized.
-    val nEdges = e.count()
     if (nEdges <= driverLimit) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x0: Long): Long = {

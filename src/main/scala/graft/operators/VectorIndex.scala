@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.functions.vec
-import graft.sources.IndexAlias
+import graft.sources.{IndexAlias, Tombstones}
 
 /** Unified AT-REST vector index — the persisted artifact the
   * reference's backends actually maintain (Milvus IVF_PQ/IVF_SQ8
@@ -830,7 +830,7 @@ object VectorIndex {
   /** Layout tables of the at-rest vector index, as [[stats]] reports
     * them (see [[graft.sources.IndexStats]]).
     */
-  private val LayoutTables = Seq("vectors", "lsh", "meta", "tombstones", "payload")
+  private val LayoutTables = Seq("vectors", "lsh", "meta", Tombstones.Table, "payload")
 
   /** Bump the path's epoch and drop its serving views. */
   private def evict(path: String): Unit = {
@@ -928,7 +928,6 @@ object VectorIndex {
       .toDF("param", "value")
   }
 
-  private val tombstonesSchema = StructType.fromDDL("vec_id BIGINT")
   private val payloadSchema = StructType.fromDDL("vec_id BIGINT, label INT, seq BIGINT")
 
   /** Payload update (Qdrant `set_payload` / Milvus partial update):
@@ -991,29 +990,18 @@ object VectorIndex {
     }
 
   /** Point delete (Qdrant `delete` / Milvus `delete` by id): ids land
-    * in `path/tombstones` as an appended parquet file — the standing
-    * corpus is NOT rewritten (the delete costs |batch|, like append).
-    * Every search family filters tombstoned ids at read via a
-    * broadcast anti-join (the tombstone set is bounded by the
-    * compaction cadence — Milvus's delta-log / Qdrant's deleted-flags
-    * model); [[compact]] applies tombstones physically and clears
-    * them.
+    * in the layout's [[Tombstones]] table — the standing corpus is NOT
+    * rewritten (the delete costs |batch|, like append). Every search
+    * family drops tombstoned ids at read ([[vectors]]); [[compact]]
+    * applies tombstones physically and clears them.
     */
   def delete(spark: SparkSession, path: String, ids: Seq[Long]): Unit =
     graft.sources.WriterLease.exclusive(spark, path) {
       import spark.implicits._
       val live = IndexAlias.resolve(spark, path)
-      ids.toDF("vec_id").coalesce(1)
-        .write.mode("append").parquet(s"$live/tombstones")
+      Tombstones.append(live, ids.toDF("vec_id"))
       evict(live)
     }
-
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.schema(tombstonesSchema).parquet(p.toString))
-    else None
-  }
 
   /** `primaryOnly = true` prunes to the `assign_rank=0` partitions —
     * the 1×-storage view every non-IVF family scans; IVF probes read
@@ -1024,9 +1012,7 @@ object VectorIndex {
   private def vectors(spark: SparkSession, path: String,
                       primaryOnly: Boolean = false): DataFrame = {
     val v0 = spark.read.schema(vectorsSchema).parquet(s"$path/vectors")
-    val v1 = tombstones(spark, path)
-      .fold(v0)(t => v0.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    val v = withPayload(spark, path, v1)
+    val v = withPayload(spark, path, Tombstones.liveOnly(spark, path, "vec_id")(v0))
     if (primaryOnly) v.filter(col("assign_rank") === 0) else v
   }
 
@@ -1348,15 +1334,14 @@ object VectorIndex {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def countFiles(p: String): Long =
       Seq("vectors", "lsh").map(t => graft.sources.LayoutRewrite.parquetFiles(fs, new Path(p, t))).sum
-    val tomb = tombstones(spark, path)
+    val alive = Tombstones.liveOnly(spark, path, "vec_id")
     def table(sub: String, schema: StructType, partCols: Seq[String],
               mergePayload: Boolean) = graft.sources.LayoutRewrite.Table(sub, out => {
       val live = s"$path/$sub"
       val bytes = fs.getContentSummary(new Path(live)).getLength
       val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val base = spark.read.schema(schema).parquet(live)
-      val alive = tomb.fold(base)(t => base.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      (if (mergePayload) withPayload(spark, path, alive) else alive)
+      val base = alive(spark.read.schema(schema).parquet(live))
+      (if (mergePayload) withPayload(spark, path, base) else base)
         .repartition(nFiles, partCols.map(col): _*)
         .write.partitionBy(partCols: _*).parquet(out)
     })
@@ -1364,7 +1349,7 @@ object VectorIndex {
     val now = graft.sources.LayoutRewrite.rewrite(spark, rawPath,
       Seq(table("vectors", vectorsSchema, Seq("cluster_id", "assign_rank"), mergePayload = true),
         table("lsh", lshSchema, Seq("band_id"), mergePayload = false)),
-      debt = Seq("tombstones", "payload"), copy = Seq("meta"))
+      debt = Seq(Tombstones.Table, "payload"), copy = Seq("meta"))
     Seq(path, now).distinct.foreach(evict)
     (before, countFiles(now))
    }
@@ -1380,7 +1365,7 @@ object VectorIndex {
   def stats(spark: SparkSession, rawPath: String): DataFrame = {
     val live = IndexAlias.resolve(spark, rawPath)
     val debt = Map(
-      "tombstones" -> tombstones(spark, live).fold(0L)(_.count()),
+      Tombstones.Table -> Tombstones.pending(spark, live, "vec_id"),
       "payload" -> payloadDeltas(spark, live).fold(0L)(_.count()))
     graft.sources.IndexStats.build(spark, "vector", rawPath, LayoutTables, debt)
   }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.StructType
   * a swap.
   *
   * One row per (index, table), long format, identical schema across
-  * the three index kinds so catalog roll-ups are a plain union:
+  * the four index kinds so catalog roll-ups are a plain union:
   * (kind, home, live_path, n_generations, table, files, bytes,
   * debt_rows, last_compaction_ms). `debt_rows` is null for data
   * tables, the pending row count for tombstone/delta tables;
@@ -122,7 +122,8 @@ object IndexStats {
 
   /** Roll up the stats of many standing indexes into one frame — the
     * `_cat/indices` across-the-deployment view. `specs` pairs each
-    * index kind (`"vector" | "text" | "dedup"`) with its home path.
+    * index kind (`"vector" | "text" | "dedup" | "cluster"`) with its
+    * home path.
     */
   def rollup(spark: SparkSession, specs: Seq[(String, String)]): DataFrame = {
     require(specs.nonEmpty, "rollup of zero indexes")

@@ -29,13 +29,14 @@ import graft.operators.Dedup
   * deletes of the same docs.
   *
   * Replay-safe: `foreachBatch` redelivers micro-batches at-least-once
-  * on restart, and every sink tolerates that — dedup and cluster
-  * tombstones are idempotent by construction (anti-join by id; a
-  * replayed cluster delete touches no cluster), and
-  * `TextIndex.delete` drops already-tombstoned ids before emitting
-  * its negative df/stats deltas, so a redelivered takedown batch is a
-  * no-op rather than a double-subtraction. No sink collects the
-  * batch to the driver.
+  * on restart, and every sink tolerates that. All three write the
+  * one tombstone log ([[graft.sources.Tombstones]]), which readers
+  * anti-join by id, so a duplicate row changes nothing; a replayed
+  * cluster delete finds its docs already retracted and touches no
+  * cluster; and `TextIndex.delete` drops already-tombstoned ids
+  * before emitting its negative df/stats deltas, so a redelivered
+  * takedown batch is a no-op rather than a double-subtraction. No
+  * sink collects the batch to the driver.
   */
 object RetractionStream {
 

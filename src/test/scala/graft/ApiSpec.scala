@@ -136,6 +136,26 @@ class ApiSpec extends SparkSpec {
     assert(live.nonEmpty)
   }
 
+  test("an index over renamed columns persists doc_id/text: at-rest scores equal bm25 across compact") {
+    val docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id").as("item_id"), col("text").as("body"))
+    val path = java.nio.file.Files.createTempDirectory("graft-ti-renamed").toString
+    val index = TextIndex(docs, idCol = "item_id", textCol = "body")
+    index.writeIndex(path)
+    val terms = Seq("spark", "join", "vector")
+    val live = index.bm25(terms).collect()
+      .map(r => r.getAs[Long]("item_id") -> r.getAs[Double]("bm25")).toMap
+    def atRest() = TextIndex.bm25AtRest(spark, path, terms).collect()
+      .map(r => Option(r.getAs[java.lang.Long]("doc_id")).map(_.longValue) -> r.getAs[Double]("bm25"))
+      .toMap
+    assert(live.nonEmpty)
+    assert(atRest() == live.map { case (id, s) => Some(id) -> s },
+      "at-rest scores over a renamed-column index must be keyed by the docs' ids")
+    TextIndex.compact(spark, path)
+    assert(atRest() == live.map { case (id, s) => Some(id) -> s },
+      "compaction of a renamed-column index changed its ids or scores")
+  }
+
   test("text-index append folds a new batch — scores equal a full-corpus rebuild") {
     val docs = Tables.documents(spark, sfDir)
     val path = java.nio.file.Files.createTempDirectory("graft-ti-append").toString

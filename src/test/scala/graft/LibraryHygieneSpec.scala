@@ -51,6 +51,26 @@ class LibraryHygieneSpec extends SparkSpec {
     assert(extra.isEmpty, s"dev mains outside the kept entry points: ${extra.mkString(", ")}")
   }
 
+  test("only graft.sources names or reads the tombstones table") {
+    // the four standing indexes share one delete log (sources.Tombstones);
+    // an index kind that spells the table's path or reads it itself has
+    // forked the format again
+    val owned = """"[^"]*\btombstones\b[^"]*"|def\s+(?:index)?[tT]ombstones\b""".r
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val pkgs = Seq("operators", "api", "streaming", "pipelines")
+      .map(p => new java.io.File(s"src/main/scala/graft/$p"))
+    assert(pkgs.forall(_.isDirectory), s"run from the project root: ${pkgs.mkString(", ")}")
+    val hits = pkgs.flatMap(files).filter(_.getName.endsWith(".scala")).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toList finally src.close()
+      lines.zipWithIndex.collect {
+        case (line, i) if owned.findFirstIn(line).isDefined => s"${f.getName}:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, s"tombstone table handled outside graft.sources: ${hits.mkString(", ")}")
+  }
+
   test("library packages read no environment variables") {
     // tuning lives in arguments and Spark conf; only the root package
     // (the mains and GraftSession) reads the process environment
